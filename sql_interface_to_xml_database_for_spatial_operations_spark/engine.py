@@ -8,6 +8,11 @@ lifecycle is ``spark.sql`` + Catalyst; this class supplies the same
 SQL with spatial functions, get rowsets or GeoJSON FeatureCollections,
 with per-query timing like the reference's demo UI stats
 (demo/routes.ts:144-171).
+
+A document registration is a snapshot: the first query that reads the
+view parses the document once, and later queries scan the cached
+relation. Re-register the name to reload a changed file, and drop the
+view (``spark.catalog.dropTempView``) to free it.
 """
 
 from __future__ import annotations
@@ -92,6 +97,17 @@ class QueryStats:
 
 @dataclass
 class SpatialSQLEngine:
+    """Spatial SQL over registered tables and documents.
+
+    ``register_parquet_dir`` registers plain views over parquet, which is
+    already columnar and prunable. The document registrations
+    (``register_xml``, ``register_geojson``, ``register_shapefile``,
+    ``register_gpx``) are lazily cached snapshots: re-register a name to
+    reload its file, and ``spark.catalog.dropTempView(name)`` to free
+    it. The cache is MEMORY_AND_DISK, so a large NDJSON registration
+    spills to local disk; very large corpora belong in parquet via
+    ``register_parquet_dir``."""
+
     spark: SparkSession
     stats: list[QueryStats] = field(default_factory=list)
 
@@ -172,17 +188,31 @@ class SpatialSQLEngine:
         for name, df in load_tables(self.spark, sf_dir).items():
             df.createOrReplaceTempView(name)
 
+    def _register_document(self, name: str, df: DataFrame) -> None:
+        """Register ``df`` as temp view ``name`` and ``CACHE LAZY`` it.
+
+        No job runs here: the first query that reads the view parses the
+        document once into an in-memory columnar relation, and later
+        queries scan that instead of re-running the parse."""
+        # Re-reading an unchanged path yields a plan that matches the
+        # cached one, and Spark then keeps serving the old snapshot (a
+        # replaced view is only uncached when its plan differs). Drop any
+        # cache of this same plan first, so registering always reloads.
+        df.unpersist()
+        df.createOrReplaceTempView(name)
+        self.spark.sql(f"CACHE LAZY TABLE `{name.replace('`', '``')}`")
+
     def register_geojson(self, name: str, path: str, lines: bool = False) -> None:
-        read_geojson(self.spark, path, lines=lines).createOrReplaceTempView(name)
+        self._register_document(name, read_geojson(self.spark, path, lines=lines))
 
     def register_xml(self, name: str, path: str, row_tag: str | None = None) -> None:
-        read_xml(self.spark, path, row_tag=row_tag).createOrReplaceTempView(name)
+        self._register_document(name, read_xml(self.spark, path, row_tag=row_tag))
 
     def register_shapefile(self, name: str, path: str) -> None:
-        read_shapefile(self.spark, path).createOrReplaceTempView(name)
+        self._register_document(name, read_shapefile(self.spark, path))
 
     def register_gpx(self, name: str, path: str) -> None:
-        read_gpx(self.spark, path).createOrReplaceTempView(name)
+        self._register_document(name, read_gpx(self.spark, path))
 
     def tables(self) -> list[str]:
         """S8: catalog listing (reference: db:list / listCollections)."""

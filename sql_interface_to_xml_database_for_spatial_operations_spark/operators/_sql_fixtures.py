@@ -10,6 +10,8 @@ at the same time instead of by-hand in each module.
 
 from __future__ import annotations
 
+import itertools
+
 
 def int_str(expr: str) -> str:
     """SQL rendering an integer-valued DOUBLE expression as its exact
@@ -47,10 +49,11 @@ HOLE_RING = sql_concat(
 
 
 _FAMILY_FIXTURE_VIEW = "_graft_family_fixture"
-_VIEW_SEQ = 0  # per-call unique suffix (ADVICE r17: a shared view name
-# made concurrent query CONSTRUCTION in one session a latent race once
-# in-query threading existed; spark.sql still inlines the view at
-# analysis time, so this only removes the construction-time hazard)
+# per-call unique suffix: a shared view name made concurrent query
+# CONSTRUCTION in one session a race. next() on an itertools.count is a
+# single C call, so two threads never draw the same suffix (a
+# ``global += 1`` read-modify-write could).
+_VIEW_SEQ = itertools.count(1)
 
 
 def sql_union_rows(fixture, branches: list[str]):
@@ -62,9 +65,7 @@ def sql_union_rows(fixture, branches: list[str]):
     one cached block instead of N parquet scans."""
     from ..caching import tracked_persist
 
-    global _VIEW_SEQ
-    _VIEW_SEQ += 1
-    view = f"{_FAMILY_FIXTURE_VIEW}_{_VIEW_SEQ}"
+    view = f"{_FAMILY_FIXTURE_VIEW}_{next(_VIEW_SEQ)}"
     spark = fixture.sparkSession
     fixture = tracked_persist(fixture)
     fixture.createOrReplaceTempView(view)
@@ -72,6 +73,9 @@ def sql_union_rows(fixture, branches: list[str]):
         f"SELECT {body} FROM {view}" for body in branches
     )
     out = spark.sql(sql)  # analyzes eagerly — the view is inlined here
+    # Dropping right away assumes classic (eager) analysis: ``out`` already
+    # holds the view's resolved plan. A lazily analyzed client (Spark
+    # Connect) would resolve the name later and find it gone.
     spark.catalog.dropTempView(view)
     return out
 

@@ -316,6 +316,9 @@ def q168_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Every cid 0..k-1 is present in the map, so element_at never
     # returns NULL and the rows are identical. Interleaved A/B at
     # sf0.1: 2.57 -> 2.16 s.
+    # The literal's type follows the values (INT when every centroid
+    # fits in 32 bits, else BIGINT), so the cast pins c0 to BIGINT
+    # whatever the data.
     cent_first = {c: cent[c][0] for c in range(K168)}
     c0_map = F.create_map(
         *[F.lit(x) for cv in cent_first.items() for x in cv]
@@ -326,7 +329,7 @@ def q168_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_members"),
             F.sum("d2").alias("sum_d2"),
         )
-        .withColumn("c0", F.element_at(c0_map, F.col("cid")))
+        .withColumn("c0", F.element_at(c0_map, F.col("cid")).cast("long"))
         .withColumn("stable", F.lit(stable))
         .select("cid", "n_members", "sum_d2", "c0", "stable")
     )

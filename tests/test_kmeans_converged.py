@@ -8,10 +8,13 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from sql_interface_to_xml_database_for_spatial_operations_spark.operators.cluster_ops import (
     kmeans_rounds,
 )
+
+from conftest import SF_DIR
 
 
 def _pts(spark, rows):
@@ -58,3 +61,13 @@ class TestKmeansRounds:
         pd.testing.assert_frame_equal(
             s.astype("int64"), o.astype("int64"), check_dtype=False
         )
+
+    def test_q168_c0_is_long_sf0001(self, spark):
+        """c0 comes from a literal map whose value type would follow the
+        centroid magnitudes; the output schema must not depend on them."""
+        from sql_interface_to_xml_database_for_spatial_operations_spark.operators.registry import (
+            QUERIES,
+        )
+
+        df = QUERIES["q168_kmeans_converged"].fn(spark, SF_DIR)
+        assert df.schema["c0"].dataType == LongType()

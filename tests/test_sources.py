@@ -524,3 +524,106 @@ def test_events_load_pins_utc_session_zone(spark):
         )
     finally:
         spark.conf.set("spark.sql.session.timeZone", original)
+
+
+# -- document registrations: lazily cached, catalog-owned lifecycle --------
+
+
+def _plan_leaves(df) -> list[str]:
+    """Node names of the leaves of ``df``'s executed physical plan, with
+    AQE wrappers, query stages and reused exchanges unwrapped. An
+    in-memory scan is a leaf: the cached subtree it reads is not one of
+    its children, so a document scan inside the cache never shows up."""
+    out: list[str] = []
+
+    def walk(node) -> None:
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if cls == "ReusedExchangeExec":
+            return walk(node.child())
+        children = node.children()
+        if children.length() == 0:
+            out.append(node.nodeName())
+        for i in range(children.length()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def _cached_entries(spark, view: str) -> int:
+    """Storage entries holding ``view``'s cached relation."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(1 for i in infos if i.name() == f"In-memory table {view}")
+
+
+def _feature_collection(names: list[str]) -> str:
+    return json.dumps(
+        {
+            "type": "FeatureCollection",
+            "features": [
+                {
+                    "type": "Feature",
+                    "properties": {"nama": n, "v": i},
+                    "geometry": {"type": "Point", "coordinates": [106.0 + i, -6.0]},
+                }
+                for i, n in enumerate(names)
+            ],
+        }
+    )
+
+
+@pytest.mark.parametrize("fmt", ["gml", "geojson"])
+def test_document_registration_cache_lifecycle(spark, tmp_path, fmt):
+    """A registered document is parsed once: later queries scan the
+    in-memory relation, re-registering after a rewrite reloads it into
+    one storage entry, and dropping the view frees that entry."""
+    eng = create_engine(spark)
+    view = f"doc_cache_{fmt}"
+    path = tmp_path / f"doc.{fmt}"
+
+    def write(names: list[str]) -> None:
+        if fmt == "gml":
+            doc = GML_DOC.replace("PKM Satu", names[0]).replace("PKM Dua", names[1])
+        else:
+            doc = _feature_collection(names)
+        path.write_text(doc)
+
+    def register() -> None:
+        if fmt == "gml":
+            eng.register_xml(view, str(path))
+        else:
+            eng.register_geojson(view, str(path))
+
+    write(["PKM Satu", "PKM Dua"])
+    register()
+    query = f"SELECT nama, st_x(geometry) AS lon FROM {view}"
+    assert sorted(r.nama for r in eng.sql_rows(query)) == ["PKM Dua", "PKM Satu"]
+    df = spark.sql(f"{query} WHERE nama = 'PKM Dua'")
+    assert [r.nama for r in df.collect()] == ["PKM Dua"]
+    assert _plan_leaves(df) == [f"Scan In-memory table {view}"]
+    assert _cached_entries(spark, view) == 1
+
+    # a snapshot: the rewrite shows only after re-registering the name
+    write(["PKM Tiga Baru", "PKM Empat"])
+    assert sorted(r.nama for r in eng.sql_rows(query)) == ["PKM Dua", "PKM Satu"]
+    register()
+    assert sorted(r.nama for r in eng.sql_rows(query)) == ["PKM Empat", "PKM Tiga Baru"]
+    assert _cached_entries(spark, view) == 1
+
+    spark.catalog.dropTempView(view)
+    assert _cached_entries(spark, view) == 0
+
+
+def test_register_xml_corrupt_document_raises(spark, tmp_path):
+    """Caching keeps registration lazy for queries, but schema inference
+    still parses the document: a corrupt one fails at register_xml."""
+    eng = create_engine(spark)
+    bad = tmp_path / "bad.xml"
+    bad.write_text("<gml:FeatureCollection><broken")
+    with pytest.raises(Exception, match="ParseError"):
+        eng.register_xml("doc_cache_corrupt", str(bad))
+    assert "doc_cache_corrupt" not in eng.tables()
