@@ -93,6 +93,9 @@ def bpe_train(
     B.register_bpe_functions(df.sparkSession)
     for _ in range(n_merges):
         spec = _serialize_merges(merges)
+        # the UDF maps a spec it cannot parse to NULL, which would end
+        # training early with a silently short merge list
+        B.parse_merges(spec)
         top = (
             df.select(
                 F.explode(

@@ -8,7 +8,22 @@ the 100 TB design choices live:
 - Arrow for every pandas-UDF / toPandas boundary (the spatial + pipeline
   UDFs are vectorized, never row-at-a-time);
 - shuffle partitions sized for the local test harness; on a real cluster
-  AQE coalesces from a deliberately high initial number instead.
+  AQE coalesces from a deliberately high initial number instead;
+- Python workers fork from the package's own daemon (``_daemon.py``),
+  which keeps a reused worker from re-reading ``pyspark.zip``'s
+  directory before every task. The workers find the package through
+  ``spark.executorEnv.PYTHONPATH``, so UDFs work from any working
+  directory. A caller-supplied session keeps the stock
+  ``pyspark.daemon``: correct, only slower per task. On a cluster the
+  package must be importable when an executor starts the daemon
+  (installed, or on the executors' ``PYTHONPATH``): ``--py-files``
+  reach a worker only with its first task.
+
+Reading ``pythonInitTime`` (an ``ArrowEvalPythonExec`` SQL metric): for
+a reused worker it is NOT start-up. The daemon calls the worker's
+``main()`` as soon as the previous task ends, and ``main()`` stamps its
+boot time before it blocks waiting for the next task, so the metric is
+the worker's idle time between tasks plus the per-task set-up.
 """
 
 from __future__ import annotations
@@ -60,6 +75,12 @@ def get_spark(app_name: str = "spatial-sql-engine", cpus: str | None = None) -> 
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Broadcast joins for dimension tables (explicit hints added too).
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # --- Python workers: see the module docstring ---------------------
+        .config("spark.python.daemon.module", f"{__package__}._daemon")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
         # Quieter local runs; harmless on a cluster.
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

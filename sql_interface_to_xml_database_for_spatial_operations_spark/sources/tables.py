@@ -10,6 +10,7 @@ parquet row-group layout replaces client-side pagination.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,6 +28,49 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Memo of inferred Parquet schemas, kept on the session object the way
+# functions/_register_once.py keeps its registration memo.
+_SCHEMAS_ATTR = "_graft_parquet_schemas"
+# Confs that change the schema Spark infers from the same Parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without re-inferring the schema.
+
+    Inference reads the file footer in a Spark job (about 0.13 s a load,
+    against 0.03 s with the schema given). The first load of a regular
+    file memoizes its schema on the session, keyed by the file's
+    identity, size and mtime and by the inference confs, so a rewritten
+    file or a changed conf infers afresh. Every call still builds a new
+    relation: self-joins keep distinct attribute ids. Directories and
+    anything else that is not a regular file are inferred every time."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.realpath(path),
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    schemas = spark.__dict__.setdefault(_SCHEMAS_ATTR, {})
+    schema = schemas.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schemas[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -62,7 +106,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType
@@ -97,14 +141,20 @@ def fan_out(df: DataFrame) -> DataFrame:
     under-estimates the scan partitions of one huge SPLITTABLE file, in
     which case the repartition is redundant but harmless (one narrow
     exchange); every current call site feeds small single-file
-    fixtures, and at 100 TB real tables carry >= cores files."""
+    fixtures, and at 100 TB real tables carry >= cores files.
+
+    An input with no files at all (a range, local rows, a cached
+    relation) falls back to ``df.rdd.getNumPartitions()``, so an input
+    that is already spread out is not shuffled again."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:
-        n_files = len(df.inputFiles())
+        n_parts = len(df.inputFiles())
     except Exception:  # exotic sources without file metadata
-        n_files = 0
-    if n_files >= target:
+        n_parts = 0
+    if n_parts == 0:
+        n_parts = df.rdd.getNumPartitions()
+    if n_parts >= target:
         return df
     return df.repartition(target)
 

@@ -147,6 +147,18 @@ class TestDistributedTraining:
         with pytest.raises(ValueError):
             bpe_train(df, "txt", _MAX_TRAIN_MERGES + 1)
 
+    def test_malformed_spec_fails_loudly(self, spark, monkeypatch):
+        """A spec the UDF cannot parse comes back as NULL pairs, which
+        would end training with a silently short merge list."""
+        from sql_interface_to_xml_database_for_spatial_operations_spark.operators import (
+            tokenize_ops,
+        )
+
+        monkeypatch.setattr(tokenize_ops, "_serialize_merges", lambda merges: "a")
+        df = spark.createDataFrame([("aa aa aa",)], ["txt"])
+        with pytest.raises(ValueError, match="malformed merge entry"):
+            tokenize_ops.bpe_train(df, "txt", 2)
+
     def test_trained_merges_round_trip_through_encoder(self, spark):
         from sql_interface_to_xml_database_for_spatial_operations_spark.operators.tokenize_ops import (
             _serialize_merges,

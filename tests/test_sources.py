@@ -627,3 +627,80 @@ def test_register_xml_corrupt_document_raises(spark, tmp_path):
     with pytest.raises(Exception, match="ParseError"):
         eng.register_xml("doc_cache_corrupt", str(bad))
     assert "doc_cache_corrupt" not in eng.tables()
+
+
+# -- table loads: memoized Parquet schema, fan_out probe ---------------------
+
+
+def _jobs_in_group(spark, fn):
+    """(result of ``fn()``, Spark jobs it launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-sources-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_region(sf_dir, extra: bool = False) -> None:
+    import pandas as pd
+
+    pdf = pd.DataFrame({"r_regionkey": [0, 1], "r_name": ["AFRICA", "ASIA"]})
+    if extra:
+        pdf["r_comment"] = ["x", "y"]
+    pdf.to_parquet(sf_dir / "region.parquet", index=False)
+
+
+def test_load_table_memoizes_schema_until_file_changes(spark, tmp_path):
+    from sql_interface_to_xml_database_for_spatial_operations_spark.sources.tables import (
+        load_table,
+    )
+
+    _write_region(tmp_path)
+    first, _ = _jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    again, jobs = _jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+    _write_region(tmp_path, extra=True)
+    rewritten = load_table(spark, str(tmp_path), "region")
+    assert "r_comment" in rewritten.columns
+    assert sorted(r.r_comment for r in rewritten.collect()) == ["x", "y"]
+
+
+def test_load_table_schema_memo_keys_on_inference_confs(spark, tmp_path):
+    from sql_interface_to_xml_database_for_spatial_operations_spark.sources.tables import (
+        load_table,
+    )
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    original = spark.conf.get(conf)
+    flipped = "false" if original == "true" else "true"
+    _write_region(tmp_path)
+    load = lambda: load_table(spark, str(tmp_path), "region")  # noqa: E731
+    load()
+    try:
+        assert _jobs_in_group(spark, load)[1] == 0
+        spark.conf.set(conf, flipped)
+        assert _jobs_in_group(spark, load)[1] == 1
+    finally:
+        spark.conf.set(conf, original)
+    assert _jobs_in_group(spark, load)[1] == 0
+
+
+def test_fan_out_probes_partitions_when_input_has_no_files(spark):
+    from sql_interface_to_xml_database_for_spatial_operations_spark.sources.tables import (
+        fan_out,
+    )
+
+    target = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 64, 1, target)
+    assert fan_out(wide) is wide
+    narrow = fan_out(spark.range(0, 64, 1, 1))
+    assert "Exchange" in narrow._jdf.queryExecution().executedPlan().toString()
+    assert narrow.count() == 64
