@@ -36,8 +36,9 @@ every encode). Plain alphanumeric tables like the fixture's
 
 Scale shape: per-row Arrow-batched pandas UDFs (map-only, no shuffle);
 the merges table parses once per batch via a tiny cache. Training
-lives in ``operators/tokenize_ops.py`` (one bounded shuffle per merge
-round, flat lineage).
+lives in ``operators/tokenize_ops.py`` (one word-count job, then the
+merge rounds on the driver over the distinct-word table, re-encoding
+each word with ``encode_word``).
 """
 
 from __future__ import annotations
@@ -45,14 +46,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 from ._register_once import once_per_session
 
@@ -205,46 +199,9 @@ def bpe_token_count(text: pd.Series, merges: pd.Series) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
-@pandas_udf(
-    ArrayType(
-        StructType(
-            [
-                StructField("left", StringType()),
-                StructField("right", StringType()),
-            ]
-        )
-    )
-)
-def bpe_adjacent_pairs(text: pd.Series, merges: pd.Series) -> pd.Series:
-    """Adjacent token pairs of ``text`` encoded against ``merges`` —
-    the per-round statistic BPE *training* counts (r18: a registered
-    UDF taking the merges table as a literal column argument, so
-    ``bpe_train`` stops re-creating — and re-pickling — a closure UDF
-    every round; registration itself is once_per_session). Token
-    STRINGS, not ids: the trainer merges pair text."""
-    out = []
-    for t, m in zip(text, merges):
-        if t is None or m is None:
-            out.append(None)
-            continue
-        try:
-            ranks, _ids = _cached_merges(str(m))
-            row = []
-            for word in str(t).split():
-                toks = encode_word(word.encode("utf-8"), ranks)
-                row.extend(
-                    {"left": a, "right": b} for a, b in zip(toks, toks[1:])
-                )
-            out.append(row)
-        except Exception:
-            out.append(None)  # malformed merges table: loud NULL
-    return pd.Series(out, dtype=object)
-
-
 ALL_BPE_FUNCTIONS = {
     "bpe_token_ids": bpe_token_ids,
     "bpe_token_count": bpe_token_count,
-    "bpe_adjacent_pairs": bpe_adjacent_pairs,
 }
 
 

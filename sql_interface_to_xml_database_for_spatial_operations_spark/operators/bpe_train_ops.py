@@ -1,6 +1,6 @@
 """Driver row for DISTRIBUTED BPE training end to end (r15 — VERDICT
 r14 item 6: ``bpe_train`` was unit-tested only; this row runs the
-groupBy-argmax loop against a closed-form oracle at the driver gate).
+word-count trainer against a closed-form oracle at the driver gate).
 
 Corpus: one word per nation, ``'ab' * m`` with m = 3 + k%5 — so the
 pair counts every training round are exact closed forms over the 25
@@ -18,12 +18,10 @@ nation keys (Σm = 125):
 Re-encoding with the learned table gives m ∈ {3,4} → 1 token and
 m ∈ {5,6,7} → 2 tokens: ``CASE WHEN k%5 <= 1 THEN 1 ELSE 2 END``.
 
-The trainer's per-round ``.limit(1).collect()`` argmax is the bounded
-scan + partial-agg + 1-row collect shape (registry ledger r14) — at
-100 TB each round is one hash shuffle over (pair, count).
-
-New module so tokenize_ops.py's fingerprint (q172) stays untouched —
-``bpe_train`` is imported, not edited.
+The trainer collects the corpus's distinct-word table in one scan (a
+partition-local word count, then one hash shuffle over (word, count))
+and runs every merge round on the driver over that table, so the job
+count does not grow with the number of merges.
 """
 
 from __future__ import annotations

@@ -6,16 +6,18 @@ Encoding is `functions/bpe.py` (byte-level GPT-2 BPE against a
 merges-table argument, fuzz-pinned against a reference implementation
 of the published algorithm). This module adds:
 
-- ``bpe_train(df, col, n_merges)``: distributed BPE TRAINING — per
-  round, re-tokenize every row against the merges learned so far (one
-  Arrow-batched map), explode adjacent token pairs, count (ONE hash
-  shuffle), and take the global argmax with a deterministic tie-break
-  (count desc, then pair lexicographic asc). Lineage stays FLAT: each
-  round re-derives from the source column with the merges applied
-  inside the map (never chained over the previous round's DataFrame),
-  so the local-mode chained-shuffle cliff (SCALE.md r11) cannot bite
-  and at cluster scale each round is scan + partial-agg + 1-row
-  collect. Rounds are bounded by the _MAX_TRAIN_MERGES budget.
+- ``bpe_train(df, col, n_merges)``: distributed BPE TRAINING in the
+  word-frequency form of Sennrich et al. (2016). Pair counts depend
+  only on how often each whitespace word occurs, so ONE scan counts
+  the corpus's words (a partition-local ``Counter`` per Arrow batch,
+  then one ``groupBy`` shuffle over (word, count)) and collects the
+  distinct-word table; every merge round then runs on the driver over
+  that table — re-encode each word against the merges learned so far,
+  weight its adjacent pairs by the word's count, take the argmax with
+  a deterministic tie-break (count desc, then pair asc). The driver
+  holds the distinct-word table, never the corpus: the bound every
+  mainstream BPE trainer works under. Rounds are bounded by the
+  _MAX_TRAIN_MERGES budget.
 
 - ``q172_bpe_tokenize``: the driver row. The fixture text is
   string-built from integer nation keys (``'ab'*m  'a'*r || 'b'``) and
@@ -37,19 +39,23 @@ e+COMBINING-ACUTE pairs through text_nfc and ``strip_acc`` folds
 composed é through text_strip_accents, each checked against DuckDB's
 independent nfc_normalize / strip_accents implementations.
 
-Scale shape: encoding is map-only; training is n_merges bounded
-shuffles over (pair, count) — the published map-reduce BPE shape.
+Scale shape: encoding is map-only; training is one scan plus one
+shuffle over (word, count), whatever n_merges is.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from typing import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import query
 from ..functions import bpe as B
 
-_MAX_TRAIN_MERGES = 64  # one shuffle per round — loud budget
+_MAX_TRAIN_MERGES = 64  # driver rounds over the word table — loud budget
 
 
 def _ensure_udfs(spark: SparkSession) -> None:
@@ -68,51 +74,62 @@ def _serialize_merges(merges: list[tuple[str, str]]) -> str:
     )
 
 
+def _count_words(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    # the encoder's own pretokenizer (str.split: every Unicode
+    # whitespace, which Java's \s is not); NULL texts have no words
+    for pdf in batches:
+        c = Counter(w for t in pdf.iloc[:, 0].dropna() for w in str(t).split())
+        yield pd.DataFrame(
+            {
+                "w": pd.Series(list(c), dtype=object),
+                "n": pd.Series(list(c.values()), dtype="int64"),
+            }
+        )
+
+
 def bpe_train(
     df: DataFrame, col: str, n_merges: int, min_freq: int = 2
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from ``df[col]``. Deterministic:
     ties on pair frequency break lexicographically. Stops early when
-    the best remaining pair's frequency drops under ``min_freq``."""
+    the best remaining pair's frequency drops under ``min_freq``.
+
+    NULL and whitespace-only texts contribute no words (the encoder
+    maps NULL to NULL and ``''`` to zero tokens), so an all-NULL
+    corpus learns ``[]``. One scan and one shuffle collect the
+    distinct-word table, whatever ``n_merges`` is; the driver must
+    hold that table (not the corpus)."""
     if not 0 <= n_merges <= _MAX_TRAIN_MERGES:
         raise ValueError(
             f"n_merges {n_merges} outside [0, {_MAX_TRAIN_MERGES}]"
         )
     merges: list[tuple[str, str]] = []
-    # r18 (the q168 literal-model lesson, guide §4): the per-round pair
-    # statistic is the REGISTERED ``bpe_adjacent_pairs`` UDF with the
-    # learned merges riding as a LITERAL spec argument — the old shape
-    # re-created (and re-pickled) a fresh closure pandas UDF every
-    # round, paying UDF-command serialization + a brand-new expression
-    # per round. The registered function parses the spec through the
-    # same per-batch _cached_merges the encode path uses, and
-    # registration is once_per_session (free on repeat calls). Same
-    # tokens round for round: parse_merges(_serialize_merges(m)) is the
-    # rank map the closure captured (escape round-trip, code-review
-    # r14).
-    B.register_bpe_functions(df.sparkSession)
+    if n_merges == 0:
+        return merges
+    words = [
+        (r["w"].encode("utf-8"), r["n"])
+        for r in df.select(col)
+        .mapInPandas(_count_words, "w string, n long")
+        .groupBy("w")
+        .agg(F.sum("n").alias("n"))
+        .collect()
+    ]
     for _ in range(n_merges):
-        spec = _serialize_merges(merges)
-        # the UDF maps a spec it cannot parse to NULL, which would end
-        # training early with a silently short merge list
-        B.parse_merges(spec)
-        top = (
-            df.select(
-                F.explode(
-                    F.call_function(
-                        "bpe_adjacent_pairs", F.col(col), F.lit(spec)
-                    )
-                ).alias("p")
-            )
-            .groupBy("p.left", "p.right")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.col("n").desc(), F.col("left").asc(), F.col("right").asc())
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["n"] < min_freq:
+        ranks = {p: i for i, p in enumerate(merges)}
+        counts: Counter[tuple[str, str]] = Counter()
+        for wb, n in words:
+            toks = B.encode_word(wb, ranks)
+            for pair in zip(toks, toks[1:]):
+                counts[pair] += n
+        if not counts:
             break
-        merges.append((top[0]["left"], top[0]["right"]))
+        # count desc, then pair asc in code-point order of the sides
+        pair, n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        if n < min_freq:
+            break
+        merges.append(pair)
+    # every trained table must survive the wire format the encoder reads
+    B.parse_merges(_serialize_merges(merges))
     return merges
 
 

@@ -285,3 +285,17 @@ def assert_parity(spark_df, oracle_con, sql: str, name: str = "query") -> None:
             f"{name}: value mismatch; first diffs:\n"
             f"spark:\n{ns[diff_mask].head(5)}\noracle:\n{no[diff_mask].head(5)}"
         )
+
+
+def jobs_in_group(spark, fn):
+    """(result of ``fn()``, Spark jobs it launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -16,6 +16,8 @@ from sql_interface_to_xml_database_for_spatial_operations_spark.functions.bpe im
     parse_merges,
 )
 
+from conftest import jobs_in_group
+
 
 def _ref_bpe(word: str, ranks: dict) -> list[str]:
     """The published GPT-2 encoder.py bpe() loop, minimally."""
@@ -176,6 +178,85 @@ class TestDistributedTraining:
         assert "".join(encode_word(b"the", ranks)) == "the"
         assert len(encode_word(b"the", ranks)) == 1
         assert ids[0] >= 256
+
+
+# word pieces: ASCII, 2-byte (both 0xC3-led, so their byte pairs tie on
+# the lead byte) and 3-byte UTF-8, joined by whitespace Python's split
+# honours but Java's \s does not (NBSP, ideographic space)
+_PIECES = ["a", "b", "ab", "ba", "c", "é", "ü", "中", "aé", "éa"]
+_SEPS = [" ", "  ", "\t", "\n", "\xa0", "\u3000"]
+_MIRROR = str.maketrans("éü", "üé")
+
+
+def _random_corpus(rng: random.Random) -> list:
+    rows: list = [None, "", " \xa0\u3000 "]
+    for _ in range(rng.randint(3, 25)):
+        words = [
+            "".join(rng.choice(_PIECES) for _ in range(rng.randint(1, 4)))
+            for _ in range(rng.randint(1, 6))
+        ]
+        text = "".join(w + rng.choice(_SEPS) for w in words)
+        # deliberate count ties between pairs whose sides lie above
+        # 0x7f: every text comes with its 'é' <-> 'ü' mirror, so each
+        # pair with 0xA9 has a twin with 0xBC at the same count
+        rows += [text, text.translate(_MIRROR)]
+    # ... and a block of both letters keeps that tie near the top
+    rows += ["é\xa0ü"] * rng.randint(20, 40)
+    rng.shuffle(rows)
+    return rows
+
+
+class TestWordCountTraining:
+    """The trainer's result is a function of the corpus's word multiset:
+    equal to the reference trainer on random corpora, whatever the
+    partitioning and row order, and its job count does not grow with
+    the number of merges."""
+
+    def test_random_corpora_match_reference_at_any_partitioning(self, spark):
+        from sql_interface_to_xml_database_for_spatial_operations_spark.operators.tokenize_ops import (
+            bpe_train,
+        )
+
+        rng = random.Random(176)
+        for i in range(20):
+            corpus = _random_corpus(rng)
+            n_merges = rng.randint(1, 12)
+            min_freq = (1, 2, 3, 5)[i % 4]
+            want = _ref_train(
+                [t for t in corpus if t is not None], n_merges, min_freq
+            )
+            for k in (1, 3, 7):
+                rows = corpus[:]
+                rng.shuffle(rows)
+                df = spark.createDataFrame(
+                    [(t,) for t in rows], "txt string"
+                ).repartition(k)
+                got = bpe_train(df, "txt", n_merges, min_freq)
+                assert got == want, (i, k, min_freq)
+
+    def test_job_count_does_not_grow_with_merges(self, spark):
+        from sql_interface_to_xml_database_for_spatial_operations_spark.operators.tokenize_ops import (
+            bpe_train,
+        )
+
+        corpus = ["low lower lowest", "new newer newest newest", "low low low"]
+        df = spark.createDataFrame([(t,) for t in corpus], "txt string")
+        one, jobs_one = jobs_in_group(spark, lambda: bpe_train(df, "txt", 1))
+        eight, jobs_eight = jobs_in_group(spark, lambda: bpe_train(df, "txt", 8))
+        assert len(one) == 1 and len(eight) == 8
+        assert jobs_eight == jobs_one <= 2
+
+    def test_null_and_blank_texts_contribute_no_words(self, spark):
+        from sql_interface_to_xml_database_for_spatial_operations_spark.operators.tokenize_ops import (
+            bpe_train,
+        )
+
+        nulls = spark.createDataFrame([(None,)] * 5, "txt string")
+        assert bpe_train(nulls, "txt", 4) == []
+        blanks = spark.createDataFrame(
+            [(None,), ("",), (" \xa0\u3000\t",), ("aa aa",)], "txt string"
+        )
+        assert bpe_train(blanks, "txt", 4) == [("a", "a")]
 
 
 class TestWireFormatEscaping:

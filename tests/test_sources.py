@@ -17,7 +17,7 @@ from sql_interface_to_xml_database_for_spatial_operations_spark.sources.sinks im
 )
 from sql_interface_to_xml_database_for_spatial_operations_spark.sources.xml import read_xml
 
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_in_group
 
 GML_DOC = """<?xml version="1.0" encoding="UTF-8"?>
 <gml:FeatureCollection xmlns:gml="http://www.opengis.net/gml">
@@ -632,20 +632,6 @@ def test_register_xml_corrupt_document_raises(spark, tmp_path):
 # -- table loads: memoized Parquet schema, fan_out probe ---------------------
 
 
-def _jobs_in_group(spark, fn):
-    """(result of ``fn()``, Spark jobs it launched)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"test-sources-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _write_region(sf_dir, extra: bool = False) -> None:
     import pandas as pd
 
@@ -661,8 +647,8 @@ def test_load_table_memoizes_schema_until_file_changes(spark, tmp_path):
     )
 
     _write_region(tmp_path)
-    first, _ = _jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "region"))
-    again, jobs = _jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    first, _ = jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    again, jobs = jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "region"))
     assert jobs == 0
     assert again.schema == first.schema
     assert sorted(again.collect()) == sorted(first.collect())
@@ -685,12 +671,12 @@ def test_load_table_schema_memo_keys_on_inference_confs(spark, tmp_path):
     load = lambda: load_table(spark, str(tmp_path), "region")  # noqa: E731
     load()
     try:
-        assert _jobs_in_group(spark, load)[1] == 0
+        assert jobs_in_group(spark, load)[1] == 0
         spark.conf.set(conf, flipped)
-        assert _jobs_in_group(spark, load)[1] == 1
+        assert jobs_in_group(spark, load)[1] == 1
     finally:
         spark.conf.set(conf, original)
-    assert _jobs_in_group(spark, load)[1] == 0
+    assert jobs_in_group(spark, load)[1] == 0
 
 
 def test_fan_out_probes_partitions_when_input_has_no_files(spark):

@@ -237,7 +237,6 @@ _NULL_ARGS = {
     "st_bufferstyle": f"{S}, {D}, {S}",
     "bpe_token_ids": f"{S}, {S}",
     "bpe_token_count": f"{S}, {S}",
-    "bpe_adjacent_pairs": f"{S}, {S}",
     "st_distance": f"{S}, {S}",
     "st_distance_sphere": f"{S}, {S}",
     "st_within": f"{S}, {S}",
