@@ -22,60 +22,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .functions.accessors import register_accessor_functions
-from .functions.affine import register_affine_functions
-from .functions.constructors import register_constructor_functions
-from .functions.editors import register_editor_functions
-from .functions.linearref import register_linearref_functions
-from .functions.linework import register_linework_functions
-from .functions.bounding import register_bounding_functions
-from .functions.bpe import register_bpe_functions
-from .functions.collection_fns import register_collection_functions
-from .functions.measures import register_measure_functions
-from .functions.overlay import register_overlay_functions
-from .functions.projection import register_projection_functions
-from .functions.relate import register_relate_functions
-from .functions.relations import register_relation_functions
-from .functions.simplify import register_simplify_functions
-from .functions.validity import register_validity_functions
-from .functions.spatial import register_spatial_functions
-from .functions.subdivide import register_subdivide_functions
-from .functions.noding import register_noding_functions
-from .functions.tessellate import register_tessellate_functions
-from .functions.split import register_split_functions
-from .functions.cluster_geo import register_cluster_geo_functions
-from .functions.grids import register_grid_functions
-from .functions.union_ops import register_union_functions
-from .functions.cells import register_cell_functions
-from .functions.curves import register_curve_functions
-from .functions.geo_export import register_export_functions
-from .functions.geohash import register_geohash_functions
-from .functions.inscribed import register_inscribed_functions
-from .functions.spheroid import register_spheroid_functions
-from .functions.textnorm import register_textnorm_functions
-from .functions.measure_m import register_measure_m_functions
-from .functions.mvt import register_mvt_functions
-from .functions.mvt_tile import register_mvt_tile_functions
-from .functions.offsetcurve import register_offset_functions
-from .functions.wkb import register_wkb_functions
-from .functions.zcoord import register_zcoord_functions
-from .functions.surface3d import register_surface3d_functions
-from .functions.editors_x import register_editors_x_functions
-from .functions.agg_forms import register_agg_form_functions
-from .functions.cluster_window import register_cluster_window_functions
-from .functions.misc_fns import register_misc_functions
-from .functions.crossing import register_crossing_functions
-from .functions.polygon_hull import register_polygon_hull_functions
-from .functions.voronoi_lines import register_voronoi_line_functions
-from .functions.effective_area import register_effective_area_functions
-from .functions.ewkt import register_ewkt_functions
-from .functions.misc_fns2 import register_misc2_functions
-from .functions.polyline import register_polyline_functions
-from .functions.twkb import register_twkb_functions
-from .functions.extrude import register_extrude_functions
-from .functions.strsim import register_strsim_functions
-from .functions.svg_export import register_svg_functions
-from .functions.minkowski import register_minkowski_functions
+from .functions.families import register_all
 from .sources import sinks
 from .sources.geojson import read_geojson
 from .sources.gpx import read_gpx
@@ -121,67 +68,7 @@ class SpatialSQLEngine:
         # registry callables that never construct an engine.
         self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         self.spark.conf.set("spark.sql.session.timeZone", "UTC")
-        register_spatial_functions(self.spark)
-        register_relation_functions(self.spark)
-        register_relate_functions(self.spark)
-        register_measure_functions(self.spark)
-        register_bounding_functions(self.spark)
-        register_collection_functions(self.spark)
-        register_validity_functions(self.spark)
-        register_subdivide_functions(self.spark)
-        register_noding_functions(self.spark)
-        register_tessellate_functions(self.spark)
-        register_split_functions(self.spark)
-        register_grid_functions(self.spark)
-        register_cluster_geo_functions(self.spark)
-        register_union_functions(self.spark)
-        register_simplify_functions(self.spark)
-        register_projection_functions(self.spark)
-        register_overlay_functions(self.spark)
-        register_affine_functions(self.spark)
-        register_linework_functions(self.spark)
-        register_accessor_functions(self.spark)
-        register_linearref_functions(self.spark)
-        register_editor_functions(self.spark)
-        register_constructor_functions(self.spark)
-        register_geohash_functions(self.spark)
-        register_offset_functions(self.spark)
-        register_cell_functions(self.spark)
-        register_measure_m_functions(self.spark)
-        register_inscribed_functions(self.spark)
-        register_export_functions(self.spark)
-        register_spheroid_functions(self.spark)
-        register_textnorm_functions(self.spark)
-        register_curve_functions(self.spark)
-        register_mvt_functions(self.spark)
-        register_mvt_tile_functions(self.spark)
-        # Registration deliberately REPLACES Spark 4.1's flag-gated
-        # geospatial builtins of the same names (st_asbinary,
-        # st_geomfromwkb, st_srid): builtin resolution otherwise wins
-        # and throws UNSUPPORTED_FEATURE.GEOSPATIAL_DISABLED on a
-        # vanilla session (the replacement warning in the logs is this).
-        register_wkb_functions(self.spark)
-        register_zcoord_functions(self.spark)
-        # AFTER accessors: surface3d's st_isclosed is the surface-aware
-        # overload (lineal input delegates to the accessor kernel)
-        register_surface3d_functions(self.spark)
-        register_editors_x_functions(self.spark)
-        register_agg_form_functions(self.spark)
-        register_cluster_window_functions(self.spark)
-        register_misc_functions(self.spark)
-        register_crossing_functions(self.spark)
-        register_polygon_hull_functions(self.spark)
-        register_voronoi_line_functions(self.spark)
-        register_effective_area_functions(self.spark)
-        register_ewkt_functions(self.spark)
-        register_misc2_functions(self.spark)
-        register_polyline_functions(self.spark)
-        register_twkb_functions(self.spark)
-        register_extrude_functions(self.spark)
-        register_strsim_functions(self.spark)
-        register_svg_functions(self.spark)
-        register_minkowski_functions(self.spark)
-        register_bpe_functions(self.spark)
+        register_all(self.spark)
 
     # -- table registration (S1-S4 replacement) ---------------------------
     def register_parquet_dir(self, sf_dir: str) -> None:

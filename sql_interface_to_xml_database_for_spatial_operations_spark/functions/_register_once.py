@@ -1,15 +1,14 @@
-"""Per-session memo for UDF-group registration (guide §4.5 applied to
-the registration path itself).
+"""Per-session memo for UDF registration (guide §4.5 applied to the
+registration path itself).
 
-Every ``register_*_functions(spark)`` loops ``spark.udf.register`` over
-its function dict; each registration is a driver py4j round trip, so a
-group of a few dozen pandas UDFs costs ~0.1-0.4 s. The operator modules
-call their ``_ensure_udfs`` on EVERY query invocation (that is correct:
-a vanilla caller-supplied session needs them), which re-paid that cost
-per query per run even though registration is session-level state that
-never changes after the first call.
+Every ``spark.udf.register`` is a driver py4j round trip, so registering
+the whole function library costs a noticeable fraction of a second.
+``functions.families.register_all`` runs on EVERY query invocation (the
+registry's entry hook calls it, which is correct: a vanilla
+caller-supplied session needs the functions), yet registration is
+session-level state that never changes after the first call.
 
-``once_per_session`` memoizes "this group is registered" ON THE SESSION
+``once_per_session`` memoizes "this registration ran" ON THE SESSION
 OBJECT (``spark.__dict__``), so:
 
 - the first call on any session registers normally;
@@ -31,7 +30,7 @@ _ATTR = "_graft_registered_udf_groups"
 
 
 def once_per_session(fn):
-    """Decorator for ``register_X_functions(spark)``: run the body once
+    """Decorator for a ``register_*(spark)`` function: run the body once
     per SparkSession object, then no-op for that session."""
     key = f"{fn.__module__}.{fn.__qualname__}"
 

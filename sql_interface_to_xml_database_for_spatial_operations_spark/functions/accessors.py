@@ -46,11 +46,9 @@ import re
 from collections import Counter
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, IntegerType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry
 
@@ -350,9 +348,3 @@ ALL_ACCESSOR_FUNCTIONS = {
     "st_isring": st_isring,
     "st_boundary": st_boundary,
 }
-
-
-@once_per_session
-def register_accessor_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_ACCESSOR_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -41,11 +41,9 @@ import math
 import re
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 # projection.py owns the per-vertex traversal (raises on unknown kinds)
 # — reusing it instead of a near-verbatim copy (code-review r8: an
@@ -157,9 +155,3 @@ ALL_AFFINE_FUNCTIONS = {
     "st_rotate": st_rotate,
     "st_affine": st_affine,
 }
-
-
-@once_per_session
-def register_affine_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_AFFINE_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -38,11 +38,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .collection_fns import _operand
@@ -160,9 +158,3 @@ ALL_AGG_FORM_FUNCTIONS = {
     "st_makeline_all": st_makeline_all,
     "st_polygonize_all": st_polygonize_all,
 }
-
-
-@once_per_session
-def register_agg_form_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_AGG_FORM_FUNCTIONS.items():
-        spark.udf.register(name, fn)

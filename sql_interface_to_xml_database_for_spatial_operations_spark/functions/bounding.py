@@ -35,11 +35,9 @@ import math
 import random as _random
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry, Point
@@ -227,9 +225,3 @@ ALL_BOUNDING_FUNCTIONS = {
     "st_minimumboundingradius": st_minimumboundingradius,
     "st_orientedenvelope": st_orientedenvelope,
 }
-
-
-@once_per_session
-def register_bounding_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_BOUNDING_FUNCTIONS.items():
-        spark.udf.register(name, fn)

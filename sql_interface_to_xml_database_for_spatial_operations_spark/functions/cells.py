@@ -29,11 +29,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
@@ -202,9 +200,3 @@ ALL_CELL_FUNCTIONS = {
     "st_ispolygonccw": st_ispolygonccw,
     "st_shiftlongitude": st_shiftlongitude,
 }
-
-
-@once_per_session
-def register_cell_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_CELL_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -30,11 +30,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry
 
@@ -152,9 +150,3 @@ ALL_CLUSTER_GEO_FUNCTIONS = {
     "st_clusterintersecting": st_clusterintersecting,
     "st_clusterwithin": st_clusterwithin,
 }
-
-
-@once_per_session
-def register_cluster_geo_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_CLUSTER_GEO_FUNCTIONS.items():
-        spark.udf.register(name, fn)

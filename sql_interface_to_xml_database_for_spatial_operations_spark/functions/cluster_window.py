@@ -32,11 +32,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType
 
-from ._register_once import once_per_session
 from . import geometry as G
 
 _MAX_MEMBERS = 2048  # n² pair budget ≈ 4.2M — the linearref idiom
@@ -197,9 +195,3 @@ ALL_CLUSTER_WINDOW_FUNCTIONS = {
     "st_clusterkmeans_all": st_clusterkmeans_all,
     "st_clusterdbscan_all": st_clusterdbscan_all,
 }
-
-
-@once_per_session
-def register_cluster_window_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_CLUSTER_WINDOW_FUNCTIONS.items():
-        spark.udf.register(name, fn)

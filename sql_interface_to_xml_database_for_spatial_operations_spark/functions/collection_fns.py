@@ -33,11 +33,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
@@ -318,9 +316,3 @@ ALL_COLLECTION_FUNCTIONS = {
     "st_points": st_points,
     "st_boundingdiagonal": st_boundingdiagonal,
 }
-
-
-@once_per_session
-def register_collection_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_COLLECTION_FUNCTIONS.items():
-        spark.udf.register(name, fn)

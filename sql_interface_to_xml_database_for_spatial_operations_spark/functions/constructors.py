@@ -32,11 +32,9 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry
 
@@ -133,9 +131,3 @@ ALL_CONSTRUCTOR_FUNCTIONS = {
     "st_makepolygon": st_makepolygon,
     "st_makepolygon_holes": st_makepolygon_holes,
 }
-
-
-@once_per_session
-def register_constructor_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_CONSTRUCTOR_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -49,11 +49,9 @@ import math
 from fractions import Fraction
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import IntegerType
 
-from ._register_once import once_per_session
 from . import geometry as G
 
 _MAX_PAIR_WORK = 4_000_000  # segment-pair budget (linearref idiom)
@@ -249,9 +247,3 @@ def st_linecrossingdirection(a: pd.Series, b: pd.Series) -> pd.Series:
 ALL_CROSSING_FUNCTIONS = {
     "st_linecrossingdirection": st_linecrossingdirection,
 }
-
-
-@once_per_session
-def register_crossing_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_CROSSING_FUNCTIONS.items():
-        spark.udf.register(name, fn)

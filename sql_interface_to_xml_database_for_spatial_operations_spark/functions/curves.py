@@ -43,11 +43,9 @@ import math
 import re
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .buffer import _MAX_QUAD_SEGS
 from .cells import _int_arg
@@ -713,9 +711,3 @@ ALL_CURVE_FUNCTIONS = {
     "st_curvetoline": st_curvetoline,
     "st_linetocurve": st_linetocurve,
 }
-
-
-@once_per_session
-def register_curve_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_CURVE_FUNCTIONS.items():
-        spark.udf.register(name, fn)

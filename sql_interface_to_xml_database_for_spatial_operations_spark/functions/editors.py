@@ -47,11 +47,9 @@ import math
 import re
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry
 
@@ -406,9 +404,3 @@ ALL_EDITOR_FUNCTIONS = {
     "st_segmentize": st_segmentize,
     "st_expand": st_expand,
 }
-
-
-@once_per_session
-def register_editor_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_EDITOR_FUNCTIONS.items():
-        spark.udf.register(name, fn)

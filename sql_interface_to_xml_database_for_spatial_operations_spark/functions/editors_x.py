@@ -48,11 +48,9 @@ import math
 import struct
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
@@ -364,9 +362,3 @@ ALL_EDITORS_X_FUNCTIONS = {
     "st_wrapx": st_wrapx,
     "st_quantizecoordinates": st_quantizecoordinates,
 }
-
-
-@once_per_session
-def register_editors_x_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_EDITORS_X_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -30,11 +30,9 @@ import heapq
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import measure_m as _mm
 from .simplify import _tri_area2
@@ -117,9 +115,3 @@ def st_seteffectivearea(w: pd.Series) -> pd.Series:
 ALL_EFFECTIVE_AREA_FUNCTIONS = {
     "st_seteffectivearea": st_seteffectivearea,
 }
-
-
-@once_per_session
-def register_effective_area_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_EFFECTIVE_AREA_FUNCTIONS.items():
-        spark.udf.register(name, fn)

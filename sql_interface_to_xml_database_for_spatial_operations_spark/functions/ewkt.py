@@ -58,11 +58,9 @@ import math
 import re
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import IntegerType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import measure_m as _mm
 from . import surface3d as _s3
@@ -276,9 +274,3 @@ ALL_EWKT_FUNCTIONS = {
     # PostGIS's legacy M-point name — the same kernel
     "st_makepointm": st_pointm,
 }
-
-
-@once_per_session
-def register_ewkt_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_EWKT_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -34,11 +34,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import surface3d as _s3
 from .geometry import Geometry
@@ -166,9 +164,3 @@ ALL_EXTRUDE_FUNCTIONS = {
     # PostGIS documents both spellings
     "st_tessellate": st_tesselate,
 }
-
-
-@once_per_session
-def register_extrude_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_EXTRUDE_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -30,11 +30,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
@@ -179,9 +177,3 @@ ALL_EXPORT_FUNCTIONS = {
     "st_asgml": st_asgml,
     "st_askml": st_askml,
 }
-
-
-@once_per_session
-def register_export_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_EXPORT_FUNCTIONS.items():
-        spark.udf.register(name, fn)

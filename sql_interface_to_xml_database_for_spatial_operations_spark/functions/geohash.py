@@ -34,11 +34,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 
@@ -257,9 +255,3 @@ ALL_GEOHASH_FUNCTIONS = {
     "st_geomfromgeohash": st_geomfromgeohash,
     "st_box2dfromgeohash": st_box2dfromgeohash,
 }
-
-
-@once_per_session
-def register_geohash_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_GEOHASH_FUNCTIONS.items():
-        spark.udf.register(name, fn)

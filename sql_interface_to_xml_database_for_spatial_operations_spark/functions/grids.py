@@ -49,11 +49,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
@@ -514,12 +512,6 @@ ALL_GRID_FUNCTIONS = {
     "st_project": st_project,
     "st_generatepoints": st_generatepoints,
 }
-
-
-@once_per_session
-def register_grid_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_GRID_FUNCTIONS.items():
-        spark.udf.register(name, fn)
 
 
 # --- smoothing / dumps / line editors (late r12) --------------------------

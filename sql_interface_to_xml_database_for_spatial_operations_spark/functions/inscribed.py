@@ -40,11 +40,9 @@ import heapq
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
@@ -380,9 +378,3 @@ ALL_INSCRIBED_FUNCTIONS = {
     "st_largestemptycircle": st_largestemptycircle,
     "st_largestemptyradius": st_largestemptyradius,
 }
-
-
-@once_per_session
-def register_inscribed_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_INSCRIBED_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -41,11 +41,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry
 
@@ -374,9 +372,3 @@ ALL_LINEARREF_FUNCTIONS = {
     "st_longestline": st_longestline,
     "st_maxdistance": st_maxdistance,
 }
-
-
-@once_per_session
-def register_linearref_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_LINEARREF_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -25,11 +25,9 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry
 from .overlay import _merge_contiguous_lines
@@ -107,9 +105,3 @@ ALL_LINEWORK_FUNCTIONS = {
     "st_linemerge": st_linemerge,
     "st_reverse": st_reverse,
 }
-
-
-@once_per_session
-def register_linework_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_LINEWORK_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -63,11 +63,9 @@ import math
 import re
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
@@ -850,9 +848,3 @@ ALL_MEASURE_M_FUNCTIONS = {
     "st_distancecpa": st_distancecpa,
     "st_cpawithin": st_cpawithin,
 }
-
-
-@once_per_session
-def register_measure_m_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_MEASURE_M_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -49,11 +49,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, DoubleType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry, Point
@@ -600,9 +598,3 @@ ALL_MEASURE_FUNCTIONS = {
     "st_minimumclearanceline": st_minimumclearanceline,
     "st_geometricmedian": st_geometricmedian,
 }
-
-
-@once_per_session
-def register_measure_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_MEASURE_FUNCTIONS.items():
-        spark.udf.register(name, fn)

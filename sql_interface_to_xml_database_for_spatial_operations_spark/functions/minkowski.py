@@ -39,11 +39,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
@@ -146,9 +144,3 @@ def st_minkowskisum(a: pd.Series, b: pd.Series) -> pd.Series:
 ALL_MINKOWSKI_FUNCTIONS = {
     "st_minkowskisum": st_minkowskisum,
 }
-
-
-@once_per_session
-def register_minkowski_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_MINKOWSKI_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -44,11 +44,9 @@ import math
 import re
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, LongType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from . import zcoord as Z
@@ -267,9 +265,3 @@ ALL_MISC_FUNCTIONS = {
     "st_area2d": st_area,
     "st_forcerhr": st_forcepolygoncw,
 }
-
-
-@once_per_session
-def register_misc_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_MISC_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -46,11 +46,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, IntegerType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import measure_m as _mm
 from . import overlay as _ov
@@ -468,9 +466,3 @@ ALL_MISC2_FUNCTIONS = {
     "st_rotatez": st_rotatez,
     "st_transscale": st_transscale,
 }
-
-
-@once_per_session
-def register_misc2_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_MISC2_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -35,11 +35,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .cells import _int_arg
@@ -192,9 +190,3 @@ def st_asmvtgeom(
 ALL_MVT_FUNCTIONS = {
     "st_asmvtgeom": st_asmvtgeom,
 }
-
-
-@once_per_session
-def register_mvt_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_MVT_FUNCTIONS.items():
-        spark.udf.register(name, fn)

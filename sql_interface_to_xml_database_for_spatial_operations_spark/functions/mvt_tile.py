@@ -50,11 +50,9 @@ import math
 import struct
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType
 
-from ._register_once import once_per_session
 from . import geometry as G
 
 _MAX_FEATURES = 65_536  # per-tile sanity budget (loud NULL)
@@ -267,9 +265,3 @@ def st_asmvt(features: pd.Series, name: pd.Series, extent: pd.Series) -> pd.Seri
 ALL_MVT_TILE_FUNCTIONS = {
     "st_asmvt": st_asmvt,
 }
-
-
-@once_per_session
-def register_mvt_tile_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_MVT_TILE_FUNCTIONS.items():
-        spark.udf.register(name, fn)

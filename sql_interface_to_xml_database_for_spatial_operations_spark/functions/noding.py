@@ -40,11 +40,9 @@ from fractions import Fraction
 from functools import cmp_to_key
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry, Point
@@ -498,9 +496,3 @@ ALL_NODING_FUNCTIONS = {
     "st_node": st_node,
     "st_polygonize": st_polygonize,
 }
-
-
-@once_per_session
-def register_noding_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_NODING_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -46,11 +46,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .buffer import _JOIN_ALIAS, _MAX_QUAD_SEGS, DEFAULT_MITRE_LIMIT, _unit
@@ -366,9 +364,3 @@ ALL_OFFSET_FUNCTIONS = {
     "st_offsetcurve": st_offsetcurve,
     "st_offsetcurvestyle": st_offsetcurvestyle,
 }
-
-
-@once_per_session
-def register_offset_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_OFFSET_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -88,11 +88,9 @@ import re
 from fractions import Fraction
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry
 from .union_ops import (
@@ -1329,9 +1327,3 @@ ALL_OVERLAY_FUNCTIONS = {
     "st_difference": st_difference,
     "st_symdifference": st_symdifference,
 }
-
-
-@once_per_session
-def register_overlay_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_OVERLAY_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -35,11 +35,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry, _orient
@@ -204,9 +202,3 @@ def st_simplifypolygonhull(
 ALL_POLYGON_HULL_FUNCTIONS = {
     "st_simplifypolygonhull": st_simplifypolygonhull,
 }
-
-
-@once_per_session
-def register_polygon_hull_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_POLYGON_HULL_FUNCTIONS.items():
-        spark.udf.register(name, fn)

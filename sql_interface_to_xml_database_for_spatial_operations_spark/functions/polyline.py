@@ -40,11 +40,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 
 _MAX_PRECISION = 8
@@ -164,9 +162,3 @@ ALL_POLYLINE_FUNCTIONS = {
     "st_asencodedpolyline": st_asencodedpolyline,
     "st_linefromencodedpolyline": st_linefromencodedpolyline,
 }
-
-
-@once_per_session
-def register_polyline_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_POLYLINE_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -56,11 +56,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry
 
@@ -534,7 +532,6 @@ class _MercCrs:
             + self._c8 * math.sin(8.0 * chi)
         )
         return math.degrees(lam), math.degrees(phi)
-
 
 
 class _LaeaPolarCrs:
@@ -2005,9 +2002,3 @@ def st_azimuth(a: pd.Series, b: pd.Series) -> pd.Series:
 
 
 ALL_PROJECTION_FUNCTIONS = {"st_transform": st_transform, "st_azimuth": st_azimuth}
-
-
-@once_per_session
-def register_projection_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_PROJECTION_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -50,11 +50,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry, Point
@@ -362,9 +360,3 @@ ALL_RELATE_FUNCTIONS = {
     "st_relate": st_relate,
     "st_relatematch": st_relatematch,
 }
-
-
-@once_per_session
-def register_relate_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_RELATE_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -42,11 +42,9 @@ import math
 from fractions import Fraction
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry, Point
 from .spatial import _binary_fallback
@@ -492,11 +490,3 @@ ALL_RELATION_FUNCTIONS = {
     "st_overlaps": st_overlaps,
     "st_crosses": st_crosses,
 }
-
-
-@once_per_session
-def register_relation_functions(spark: SparkSession) -> None:
-    """Register the relation predicates for spark.sql strings, alongside
-    ``register_spatial_functions`` (engine.py wires both)."""
-    for name, fn in ALL_RELATION_FUNCTIONS.items():
-        spark.udf.register(name, fn)

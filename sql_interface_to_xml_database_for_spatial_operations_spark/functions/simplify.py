@@ -32,11 +32,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry
 
@@ -435,9 +433,3 @@ ALL_SIMPLIFY_FUNCTIONS = {
     "st_simplifypreservetopology": st_simplifypreservetopology,
     "st_reduceprecision": st_reduceprecision,
 }
-
-
-@once_per_session
-def register_simplify_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_SIMPLIFY_FUNCTIONS.items():
-        spark.udf.register(name, fn)

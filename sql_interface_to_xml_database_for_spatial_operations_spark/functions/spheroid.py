@@ -41,11 +41,9 @@ import math
 import re
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, DoubleType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 
@@ -792,9 +790,3 @@ ALL_SPHEROID_FUNCTIONS = {
     "st_areaspheroid": st_areaspheroid,
     "st_perimeterspheroid": st_perimeterspheroid,
 }
-
-
-@once_per_session
-def register_spheroid_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_SPHEROID_FUNCTIONS.items():
-        spark.udf.register(name, fn)

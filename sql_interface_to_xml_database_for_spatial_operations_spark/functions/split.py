@@ -45,11 +45,9 @@ import math
 from fractions import Fraction
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry, Point
@@ -475,9 +473,3 @@ ALL_SPLIT_FUNCTIONS = {
     "st_split": st_split,
     "st_sharedpaths": st_sharedpaths,
 }
-
-
-@once_per_session
-def register_split_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_SPLIT_FUNCTIONS.items():
-        spark.udf.register(name, fn)

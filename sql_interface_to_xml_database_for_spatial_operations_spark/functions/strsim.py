@@ -35,11 +35,9 @@ cross join; the driver row demonstrates exactly that shape
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType
 
-from ._register_once import once_per_session
 
 _MAX_LEN = 10_000  # quadratic-kernel budget: longer inputs are loud
 
@@ -186,9 +184,3 @@ ALL_STRSIM_FUNCTIONS = {
     "text_hamming": text_hamming,
     "text_jaccard_chars": text_jaccard_chars,
 }
-
-
-@once_per_session
-def register_strsim_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_STRSIM_FUNCTIONS.items():
-        spark.udf.register(name, fn)

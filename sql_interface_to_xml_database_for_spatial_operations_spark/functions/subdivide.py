@@ -42,11 +42,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
@@ -196,9 +194,3 @@ def st_subdivide(wkt: pd.Series, maxv: pd.Series) -> pd.Series:
 ALL_SUBDIVIDE_FUNCTIONS = {
     "st_subdivide": st_subdivide,
 }
-
-
-@once_per_session
-def register_subdivide_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_SUBDIVIDE_FUNCTIONS.items():
-        spark.udf.register(name, fn)

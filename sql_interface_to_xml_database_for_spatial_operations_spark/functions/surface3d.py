@@ -37,11 +37,11 @@ Semantics (PostGIS/SFCGAL-matching unless noted):
   cancel their flux automatically). Open surface → loud NULL
   (PostGIS ST_Volume requires a solid; a closed surface WKT stands
   for the solid it bounds).
-- ``st_isclosed(g)`` — surface overload: TRUE iff every undirected
-  edge of the patch mesh is shared by exactly TWO patch rings
-  (liblwgeom ``lwpsurface_is_closed`` / ``lwtin_is_closed``).
-  Non-surface input delegates to the 2-D lineal kernel
-  (accessors.is_closed) so one registered name serves both.
+- ``st_isclosed(g)`` on a surface — TRUE iff every undirected edge of
+  the patch mesh is shared by exactly TWO patch rings (liblwgeom
+  ``lwpsurface_is_closed`` / ``lwtin_is_closed``). ``surface_is_closed``
+  here is the kernel; the SQL name belongs to the accessors family,
+  whose ``is_closed`` routes surface WKT to it.
 - ``st_3dintersects(a, b)`` — EXACT boolean over puntal / lineal
   operands (2-D / M / Z / ZM via the zcoord primitive reader, absent
   Z = 0): a float distance pre-filter (the Shewchuk-style
@@ -65,12 +65,9 @@ import re
 from fractions import Fraction
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, DoubleType, LongType, StringType
 
-from ._register_once import once_per_session
-from . import accessors as _acc
 from . import zcoord as Z
 
 _HEAD_RE = re.compile(
@@ -301,18 +298,6 @@ def _oriented_closed(patches, use_z: bool = True) -> bool:
     )
 
 
-def is_closed_any(wkt) -> bool | None:
-    """Surface overload of ST_IsClosed; lineal input delegates to the
-    2-D kernel (accessors.is_closed) — one name, both contracts."""
-    ps = parse_surface_wkt(wkt)
-    if ps is not None:
-        kind, dims, patches = ps
-        if not patches:
-            return None
-        return surface_is_closed(patches, "Z" in dims)
-    return _acc.is_closed(wkt)
-
-
 def volume_wkt(wkt) -> float | None:
     """ST_Volume of a CLOSED, CONSISTENTLY ORIENTED surface (divergence
     theorem over signed ring fans); open / mixed-winding / non-surface
@@ -479,11 +464,6 @@ def st_volume(w: pd.Series) -> pd.Series:
 
 
 @pandas_udf(BooleanType())
-def st_isclosed(w: pd.Series) -> pd.Series:
-    return pd.Series([_safe(is_closed_any, x) for x in w], dtype="object")
-
-
-@pandas_udf(BooleanType())
 def st_3dintersects(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(
         [_safe(intersects3d_wkt, x, y) for x, y in zip(a, b)], dtype="object"
@@ -495,12 +475,5 @@ ALL_SURFACE3D_FUNCTIONS = {
     "st_patchn": st_patchn,
     "st_3darea": st_3darea,
     "st_volume": st_volume,
-    "st_isclosed": st_isclosed,  # surface overload; lineal delegates
     "st_3dintersects": st_3dintersects,
 }
-
-
-@once_per_session
-def register_surface3d_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_SURFACE3D_FUNCTIONS.items():
-        spark.udf.register(name, fn)

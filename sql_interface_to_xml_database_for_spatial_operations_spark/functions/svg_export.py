@@ -45,11 +45,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
@@ -285,9 +283,3 @@ ALL_SVG_FUNCTIONS = {
     "st_assvg": st_assvg,
     "st_aslatlontext": st_aslatlontext,
 }
-
-
-@once_per_session
-def register_svg_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_SVG_FUNCTIONS.items():
-        spark.udf.register(name, fn)

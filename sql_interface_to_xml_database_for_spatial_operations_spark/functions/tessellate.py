@@ -45,11 +45,9 @@ from __future__ import annotations
 from fractions import Fraction
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry, Point
@@ -589,9 +587,3 @@ ALL_TESSELLATE_FUNCTIONS = {
     "st_concavehull": st_concavehull,
     "st_concavehull_holes": st_concavehull_holes,
 }
-
-
-@once_per_session
-def register_tessellate_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_TESSELLATE_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -25,11 +25,8 @@ from __future__ import annotations
 import unicodedata
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
-
-from ._register_once import once_per_session
 
 
 def nfc(s) -> str | None:
@@ -78,9 +75,3 @@ ALL_TEXTNORM_FUNCTIONS = {
     "text_nfkc": text_nfkc,
     "text_strip_accents": text_strip_accents,
 }
-
-
-@once_per_session
-def register_textnorm_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_TEXTNORM_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -47,11 +47,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import wkb as _wkb
 from .geometry import Geometry
@@ -394,9 +392,3 @@ ALL_TWKB_FUNCTIONS = {
     "st_astwkb": st_astwkb,
     "st_geomfromtwkb": st_geomfromtwkb,
 }
-
-
-@once_per_session
-def register_twkb_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_TWKB_FUNCTIONS.items():
-        spark.udf.register(name, fn)

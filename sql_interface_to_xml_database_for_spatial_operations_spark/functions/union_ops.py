@@ -63,11 +63,9 @@ from bisect import bisect_left
 from collections import defaultdict
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry
 
@@ -683,9 +681,3 @@ ALL_UNION_FUNCTIONS = {
     "st_union": st_union,
     "st_union_all": st_union_all,
 }
-
-
-@once_per_session
-def register_union_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_UNION_FUNCTIONS.items():
-        spark.udf.register(name, fn)

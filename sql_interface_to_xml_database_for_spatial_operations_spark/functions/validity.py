@@ -50,11 +50,9 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry, Point
@@ -667,9 +665,3 @@ ALL_VALIDITY_FUNCTIONS = {
     "st_makevalid": st_makevalid,
     "st_isvaliddetail": st_isvaliddetail,
 }
-
-
-@once_per_session
-def register_validity_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_VALIDITY_FUNCTIONS.items():
-        spark.udf.register(name, fn)

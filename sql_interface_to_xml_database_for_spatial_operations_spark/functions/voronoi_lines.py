@@ -21,11 +21,9 @@ junk / non-puntal-vertex input follows the st_voronoipolygons gates
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from .geometry import Geometry
 from .tessellate import voronoi_cells
@@ -71,9 +69,3 @@ def st_voronoilines(w: pd.Series) -> pd.Series:
 ALL_VORONOI_LINE_FUNCTIONS = {
     "st_voronoilines": st_voronoilines,
 }
-
-
-@once_per_session
-def register_voronoi_line_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_VORONOI_LINE_FUNCTIONS.items():
-        spark.udf.register(name, fn)

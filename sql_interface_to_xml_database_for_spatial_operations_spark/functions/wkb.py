@@ -42,11 +42,9 @@ import math
 import struct
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType, IntegerType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import measure_m as _mm
 from . import surface3d as _s3
@@ -874,9 +872,3 @@ ALL_WKB_FUNCTIONS = {
     "st_geomfromewkb": st_geomfromewkb,
     "st_sridfromewkb": st_sridfromewkb,
 }
-
-
-@once_per_session
-def register_wkb_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_WKB_FUNCTIONS.items():
-        spark.udf.register(name, fn)

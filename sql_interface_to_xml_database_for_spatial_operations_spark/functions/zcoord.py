@@ -55,11 +55,9 @@ import math
 import re
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StringType
 
-from ._register_once import once_per_session
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
@@ -1233,9 +1231,3 @@ ALL_ZCOORD_FUNCTIONS = {
     "st_3dlongestline": st_3dlongestline,
     "st_locatebetweenelevations": st_locatebetweenelevations,
 }
-
-
-@once_per_session
-def register_zcoord_functions(spark: SparkSession) -> None:
-    for name, fn in ALL_ZCOORD_FUNCTIONS.items():
-        spark.udf.register(name, fn)

@@ -40,14 +40,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.accessors import register_accessor_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-    register_accessor_functions(spark)
-
-
 _PT = {**CORNERS, **HOLE_CORNERS}
 
 _cat = sql_concat
@@ -124,7 +116,6 @@ def q150_st_accessors(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected value string-built in both engines (module docstring).
     NULL sentinels pin the LINESTRING-only / out-of-range → NULL
     contracts inside the same rows."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), {
         "ngeom": f"CAST(st_numgeometries({_M_IN}) AS STRING) || ' | ' || "
                  f"CAST(st_numgeometries({_BOX_IN}) AS STRING) || ' | ' || "
@@ -174,7 +165,6 @@ def q151_st_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossing bowtie vs open), IsEmpty, and all six boundary output
     shapes incl. the SQL/MM mod-2 cancellation of a shared chain
     endpoint (module docstring)."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), {
         "isclosed": f"CAST(st_isclosed({_RING_IN}) AS STRING) || ' | ' || "
                     f"CAST(st_isclosed({_D_IN}) AS STRING) || ' | ' || "

@@ -33,14 +33,6 @@ from .spatial_ops import CUSTOMER_POINTS_SQL, NATION_BOXES_SQL, _fmt_sql, custom
 THETA = 0.3  # radians
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.affine import register_affine_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-    register_affine_functions(spark)
-
-
 _Q148_ORACLE = f"""
     WITH pts AS ({CUSTOMER_POINTS_SQL}),
     moved AS (
@@ -76,7 +68,6 @@ def q148_st_affine(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer points (micro-int coordinates), plus translate → scale
     over each nation box pinned as an exact WKT string with vertex
     order preserved (module docstring)."""
-    _ensure_udfs(spark)
     pts = customer_points(spark, sf_dir)
     point_rows = pts.select(
         F.lit("point").alias("fam"),

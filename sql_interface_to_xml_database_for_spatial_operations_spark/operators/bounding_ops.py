@@ -33,14 +33,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.bounding import register_bounding_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-    register_bounding_functions(spark)
-
-
 def _pt(xe: str, ye: str) -> str:
     return f"{int_str(xe)} || ' ' || {int_str(ye)}"
 
@@ -95,5 +87,4 @@ def q159_st_bounding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12 bounding family: Welzl minimum enclosing circles and
     rotating-calipers oriented envelopes with closed-form oracles
     (module docstring)."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), _FAMILIES)

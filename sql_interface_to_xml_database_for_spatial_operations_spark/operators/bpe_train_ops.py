@@ -49,11 +49,8 @@ def q176_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn 4 BPE merges from the closed-form corpus through the
     distributed trainer, then re-encode with the learned table
     (module docstring derivation)."""
-    from ..functions.bpe import register_bpe_functions
-
     from ..sources.tables import load_table
 
-    register_bpe_functions(spark)
     corpus = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("k"),
         F.repeat(F.lit("ab"), (F.lit(3) + F.col("n_nationkey") % 5)).alias("txt"),

@@ -48,16 +48,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.grids import register_grid_functions
-    from ..functions.offsetcurve import register_offset_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-    register_offset_functions(spark)  # st_offsetcurve(style) (r14/r15)
-    register_grid_functions(spark)  # st_dumppoints for the oc_round pins
-
-
 _BOX_WKT = sql_concat(
     "'POLYGON (('", CORNERS["bl"], "', '", CORNERS["br"], "', '",
     CORNERS["tr"], "', '", CORNERS["tl"], "', '", CORNERS["bl"], "'))'",
@@ -299,5 +289,4 @@ def q155_st_buffer_lines_polys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12 ST_Buffer beyond points: line stadiums, right-angle polyline
     joins, convex Minkowski sums, hole shrinkage, and negative-distance
     erosion, each pinned to its closed-form area (module docstring)."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), _FAMILIES)

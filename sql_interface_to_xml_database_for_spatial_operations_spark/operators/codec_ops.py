@@ -40,16 +40,6 @@ from .spatial_ops import (
 )
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.curves import register_curve_functions
-    from ..functions.spatial import register_spatial_functions
-    from ..functions.wkb import register_wkb_functions
-
-    register_spatial_functions(spark)
-    register_wkb_functions(spark)
-    register_curve_functions(spark)  # the r16 curved-WKB families
-
-
 _Q140_ORACLE = f"""
     WITH pts AS ({CUSTOMER_POINTS_SQL}), boxes AS ({NATION_BOXES_SQL})
     SELECT 'pt' AS fam, c_custkey AS key,
@@ -130,7 +120,6 @@ def q140_wkb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12/S-codec: ST_AsBinary → length/header checks → ST_GeomFromWKB
     round-trip, over both a point family (customers) and a polygon
     family (nation boxes)."""
-    _ensure_udfs(spark)
 
     # r17 optimization: the per-branch unionByName fold re-analyzed a
     # growing plan per family; the same branches now build ONE SQL

@@ -20,19 +20,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.agg_forms import register_agg_form_functions
-    from ..functions.cluster_window import register_cluster_window_functions
-    from ..functions.collection_fns import register_collection_functions
-
-    from ..functions.grids import register_grid_functions
-
-    register_collection_functions(spark)
-    register_agg_form_functions(spark)
-    register_grid_functions(spark)  # st_normalize canonicalizes the face walk
-    register_cluster_window_functions(spark)
-
-
 def _pt(xe: str, ye: str) -> str:
     return f"{int_str(xe)} || ' ' || {int_str(ye)}"
 
@@ -154,5 +141,4 @@ def q161_st_collect_dump(spark: SparkSession, sf_dir: str) -> DataFrame:
     ST_Multi idempotent promotion, and ST_Dump's recursive part
     decomposition via the explodable st_dumpparts array (module
     docstring)."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), _FAMILIES)

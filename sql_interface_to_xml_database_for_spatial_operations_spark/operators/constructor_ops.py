@@ -33,14 +33,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.affine import register_affine_functions
-    from ..functions.constructors import register_constructor_functions
-
-    register_affine_functions(spark)
-    register_constructor_functions(spark)
-
-
 _BL, _BR, _TR, _TL = CORNERS["bl"], CORNERS["br"], CORNERS["tr"], CORNERS["tl"]
 _cat = sql_concat
 
@@ -97,7 +89,6 @@ def q154_st_constructors(spark: SparkSession, sf_dir: str) -> DataFrame:
     forms), MakePolygon (shell / with-holes / open-NULL), exact
     integer-matrix 90° ST_Affine, and the scale-translate matrix pinned
     equal to the composed st_translate∘st_scale (module docstring)."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), {
         "makeline": f"st_makeline({_PT_BL}, {_PT_TR}) || ' | ' || "
                     f"st_makeline({_EDGE_IN}, {_PT_TR}) || ' | ' || "

@@ -33,14 +33,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.editors import register_editor_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-    register_editor_functions(spark)
-
-
 _BL, _BR, _TR, _TL = CORNERS["bl"], CORNERS["br"], CORNERS["tr"], CORNERS["tl"]
 _cat = sql_concat
 
@@ -111,7 +103,6 @@ def q153_st_editors(spark: SparkSession, sf_dir: str) -> DataFrame:
     too-short NULL), FlipCoordinates, Segmentize into exact thirds, and
     Expand — every expected WKT string-built from integer box
     coordinates (module docstring)."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), {
         "addpt": f"st_addpoint({_EDGE_IN}, {_PT_TR}, -1) || ' | ' || "
                  f"st_addpoint({_DIAG_IN}, {_PT_BR}, 1) || ' | ' || "

@@ -68,31 +68,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.accessors import register_accessor_functions
-    from ..functions.editors_x import register_editors_x_functions
-    from ..functions.ewkt import register_ewkt_functions
-    from ..functions.measure_m import register_measure_m_functions
-    from ..functions.misc_fns import register_misc_functions
-    from ..functions.misc_fns2 import register_misc2_functions
-    from ..functions.polyline import register_polyline_functions
-    from ..functions.twkb import register_twkb_functions
-    from ..functions.spatial import register_spatial_functions
-    from ..functions.zcoord import register_zcoord_functions
-
-    register_spatial_functions(spark)  # st_area / st_xmin / st_xmax / type
-    register_accessor_functions(spark)  # st_numgeometries / interior rings
-    register_editors_x_functions(spark)
-    register_misc_functions(spark)  # summary / nrings / hasarc / ext3d
-    register_ewkt_functions(spark)  # SRID=n; codec + point constructors
-    register_measure_m_functions(spark)  # st_m reads the ZM point back
-    register_misc2_functions(spark)  # orderingequals / clip / filterbym
-    # zcoord registration below also provides st_ndims/force3dm/force4d
-    register_polyline_functions(spark)  # encoded-polyline codec
-    register_twkb_functions(spark)  # TWKB codec
-    register_zcoord_functions(spark)  # st_zmin probes the 3-D rotations
-
-
 _K = "n_nationkey"
 _A = f"(1 + {_K} % 4)"
 
@@ -282,7 +257,6 @@ _Q180_ORACLE = f"""
 def q180_st_editors_x(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST_ForceCollection / ST_UnaryUnion / ST_BuildArea / ST_WrapX /
     ST_QuantizeCoordinates end to end (module docstring fixtures)."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir)
 
     # r17 optimization: each fam() is one branch of a single-analysis

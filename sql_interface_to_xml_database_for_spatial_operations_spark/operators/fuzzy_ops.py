@@ -80,8 +80,5 @@ _Q181_ORACLE = _pair_sql(
 def q181_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-letter-blocked fuzzy scoring of nation-name pairs against
     DuckDB's own similarity implementations (module docstring)."""
-    from ..functions.strsim import register_strsim_functions
-
-    register_strsim_functions(spark)
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     return spark.sql(_SPARK_SQL)

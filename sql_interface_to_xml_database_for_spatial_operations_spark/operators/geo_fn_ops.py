@@ -50,16 +50,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.projection import register_projection_functions
-    from ..functions.simplify import register_simplify_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-    register_simplify_functions(spark)
-    register_projection_functions(spark)
-
-
 # ---------------------------------------------------------------------------
 # q128: ST_Simplify (tolerance 0 → exact collinear-vertex removal)
 # ---------------------------------------------------------------------------
@@ -101,7 +91,6 @@ def q128_st_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the simplify UDF runs Python (Arrow-vectorized, map-only)."""
     from ..sources.tables import load_table
 
-    _ensure_udfs(spark)
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", (F.col("n_nationkey") % 4 + 2).alias("m")
     )
@@ -166,7 +155,6 @@ def q129_st_snaptogrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/simplify.py::_snap_seq docstring)."""
     from .spatial_ops import customer_points
 
-    _ensure_udfs(spark)
     pts = customer_points(spark, sf_dir).filter(F.col("c_custkey") < 500)
     line = F.concat(
         F.lit("LINESTRING ("),
@@ -269,7 +257,6 @@ def q130_st_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor is deterministic."""
     from ..sources.tables import load_table
 
-    _ensure_udfs(spark)
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 300)
     pts = c.select(
         "c_custkey",
@@ -565,7 +552,6 @@ def q131_st_azimuth(spark: SparkSession, sf_dir: str) -> DataFrame:
     error)."""
     from .spatial_ops import customer_points
 
-    _ensure_udfs(spark)
     pts = customer_points(spark, sf_dir).filter(F.col("c_custkey") < 1000).select(
         "c_custkey",
         "lon",
@@ -695,8 +681,6 @@ def q186_st_worked_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import surface3d_ops as S3
     from .spatial_ops import nation_boxes
 
-    _ensure_udfs(spark)
-    S3._ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir)
 
     # r17 optimization: branch strings into one SQL UNION ALL

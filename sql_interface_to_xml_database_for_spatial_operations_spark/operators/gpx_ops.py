@@ -134,10 +134,8 @@ _Q183_ORACLE = """
 @query("q183_gpx_roundtrip", oracle=_Q183_ORACLE)
 def q183_gpx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPX source end to end (module docstring fixture)."""
-    from ..functions.spatial import register_spatial_functions
     from ..sources.gpx import read_gpx
 
-    register_spatial_functions(spark)
     rows = sorted(
         load_table(spark, sf_dir, "nation")
         .select("n_nationkey", "n_regionkey", "n_name")

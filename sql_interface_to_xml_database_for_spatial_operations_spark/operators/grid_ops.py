@@ -86,36 +86,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.cells import register_cell_functions
-    from ..functions.collection_fns import register_collection_functions
-    from ..functions.curves import register_curve_functions
-    from ..functions.editors import register_editor_functions
-    from ..functions.geo_export import register_export_functions
-    from ..functions.geohash import register_geohash_functions
-    from ..functions.measure_m import register_measure_m_functions
-    from ..functions.mvt import register_mvt_functions
-    from ..functions.spheroid import register_spheroid_functions
-    from ..functions.grids import register_grid_functions
-    from ..functions.simplify import register_simplify_functions
-    from ..functions.spatial import register_spatial_functions
-    from ..functions.svg_export import register_svg_functions
-
-    register_spatial_functions(spark)
-    register_grid_functions(spark)
-    register_simplify_functions(spark)  # the r13 vw/spt/redp families
-    register_editor_functions(spark)  # st_snap (r13)
-    register_collection_functions(spark)  # shape tools (r13)
-    register_geohash_functions(spark)  # geohash codec (r14)
-    register_cell_functions(spark)  # single cells + orientation (r14)
-    register_export_functions(spark)  # GML/KML writers (r14)
-    register_spheroid_functions(spark)  # Vincenty distances (r14)
-    register_curve_functions(spark)  # CIRCULARSTRING linearize (r14)
-    register_measure_m_functions(spark)  # st_force2d (r14)
-    register_mvt_functions(spark)  # ST_AsMVTGeom (r14)
-    register_svg_functions(spark)  # ST_AsSVG / ST_AsLatLonText (r15)
-
-
 def _micro(expr: str) -> str:
     return f"CAST(CAST(floor(({expr}) * 1e6 + 0.5) AS BIGINT) AS STRING)"
 
@@ -1096,7 +1066,6 @@ def q169_st_grids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12 grid/tiling + editor family: square/hexagon grids, XYZ tile
     envelopes, and the small editors, each pinned by the closed-form /
     string-built oracles in the module docstring."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), _GRID_FAMILIES)
 
 
@@ -1106,5 +1075,4 @@ def q177_st_geodesy(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec anchors, Vincenty/Karney spheroid distances (published GDA +
     nearly-antipodal anchors, spheroid-argument parsing, perimeter),
     and the GML/KML writer round trips."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), _GEO_FAMILIES)

@@ -37,14 +37,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.misc_fns2 import register_misc2_functions
-    from ..functions.zcoord import register_zcoord_functions
-
-    register_misc2_functions(spark)  # st_iscollection / st_memsize
-    register_zcoord_functions(spark)  # st_locatebetweenelevations / 3dll
-
-
 _K = "n_nationkey"
 _X0, _Y0 = "minx", "miny"
 
@@ -120,7 +112,6 @@ _Q185_ORACLE = f"""
 def q185_st_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST_IsCollection / ST_MemSize / ST_LocateBetweenElevations /
     ST_3DLongestLine driver row (module docstring fixtures)."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir)
 
     # r17 optimization: branch strings into one SQL UNION ALL

@@ -63,24 +63,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.accessors import register_accessor_functions
-    from ..functions.linearref import register_linearref_functions
-    from ..functions.measure_m import register_measure_m_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-    register_accessor_functions(spark)  # st_numpoints counts slice vertices
-    register_linearref_functions(spark)
-    from ..functions.crossing import register_crossing_functions
-
-    register_measure_m_functions(spark)  # M measures (r14 continuation)
-    from ..functions.effective_area import register_effective_area_functions
-
-    register_crossing_functions(spark)  # ST_LineCrossingDirection (r15)
-    register_effective_area_functions(spark)  # ST_SetEffectiveArea (r15)
-
-
 _PT_BL = CORNERS["bl"]
 _PT_BR = CORNERS["br"]
 _PT_TR = CORNERS["tr"]
@@ -286,7 +268,6 @@ def q152_st_linear_referencing(spark: SparkSession, sf_dir: str) -> DataFrame:
     closest-point / shortest-line over the integer L-path, every
     expected value a SQL closed form compared micro-int (module
     docstring)."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir)
 
     # r17 optimization: each fam() is one branch of a single-analysis

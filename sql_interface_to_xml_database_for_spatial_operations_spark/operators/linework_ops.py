@@ -31,14 +31,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.linework import register_linework_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-    register_linework_functions(spark)
-
-
 _PT = {
     **CORNERS,
     # lone segment well outside any box (box coords are >= -180, < 500)
@@ -104,7 +96,6 @@ def q149_st_linework(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12 linework: ST_LineMerge over the ring/chain/tee families and
     ST_Reverse over the merged ring, every expected WKT string-built
     from the integer nation-box coordinates (module docstring)."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir)
     ring = boxes.select(
         F.lit("ring").alias("fam"),

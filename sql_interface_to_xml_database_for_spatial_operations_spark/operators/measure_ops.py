@@ -53,27 +53,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.accessors import register_accessor_functions
-    from ..functions.inscribed import register_inscribed_functions
-    from ..functions.measures import register_measure_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-    register_accessor_functions(spark)
-    register_measure_functions(spark)
-    from ..functions.polygon_hull import register_polygon_hull_functions
-
-    register_inscribed_functions(spark)  # MIC (r14 continuation)
-    from ..functions.voronoi_lines import register_voronoi_line_functions
-
-    register_polygon_hull_functions(spark)  # ST_SimplifyPolygonHull (r15)
-    register_voronoi_line_functions(spark)  # ST_VoronoiLines (r15)
-    from ..functions.minkowski import register_minkowski_functions
-
-    register_minkowski_functions(spark)  # ST_MinkowskiSum (r15)
-
-
 def _pt(xe: str, ye: str) -> str:
     return f"{int_str(xe)} || ' ' || {int_str(ye)}"
 
@@ -403,5 +382,4 @@ def q158_st_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     discrete Hausdorff/Fréchet distances, the clockwise four-point
     angle, ear-clip triangulation, and minimum clearance with its
     witness line (module docstring)."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), _FAMILIES)

@@ -35,12 +35,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.mvt_tile import register_mvt_tile_functions
-
-    register_mvt_tile_functions(spark)
-
-
 # DuckDB-side byte builder: one byte as two uppercase hex chars
 def _hx(expr: str) -> str:
     return f"lpad(upper(to_hex({expr})), 2, '0')"
@@ -146,7 +140,6 @@ def q175_st_asmvt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MVT tile assembly end to end: full layer layout, polygon
     command stream, multi-feature key/value dedup, loud NULLs — every
     expected tile a byte-exact hex closed form (module docstring)."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir)
 
     def fam(name: str, expr: str) -> DataFrame:

@@ -24,16 +24,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.accessors import register_accessor_functions
-    from ..functions.noding import register_noding_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)  # st_area / st_length over results
-    register_accessor_functions(spark)  # st_numgeometries
-    register_noding_functions(spark)
-
-
 def _pt(xe: str, ye: str) -> str:
     return f"{int_str(xe)} || ' ' || {int_str(ye)}"
 
@@ -129,5 +119,4 @@ def q164_st_node_polygonize(spark: SparkSession, sf_dir: str) -> DataFrame:
     conservation) and half-edge polygonization (face counts + exact
     area totals incl. the nested-ring island and dangle stripping);
     non-lineal operands stay loud NULL (module docstring)."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), _FAMILIES)

@@ -57,14 +57,6 @@ _HOLED_H = poly_sql(
 _AREA0 = "IF(endswith({g}, 'EMPTY'), 0.0D, st_area({g}))"
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.overlay import register_overlay_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-    register_overlay_functions(spark)
-
-
 _Q139_ORACLE = f"""
     WITH boxes AS ({NATION_BOXES_SQL}),
     pairs AS (
@@ -107,7 +99,6 @@ def q139_st_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12: ST_Intersection + ST_Difference. Box pairs check exact
     values; arrowhead-vs-box rows check exact invariants through the
     triangulation path (module docstring)."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir).withColumn(
         "geom", F.expr("st_makeenvelope(minx, miny, maxx, maxy)")
     )
@@ -242,7 +233,6 @@ def q146_st_symdifference(spark: SparkSession, sf_dir: str) -> DataFrame:
     area(aΔb) − area(a) − area(b) + 2·area(a∩b) = 0 and commutativity
     in micro-units, plus a non-triviality flag. Same broadcast
     bbox-pair generator and 100 TB shape as q139 (module docstring)."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir).withColumn(
         "geom", F.expr("st_makeenvelope(minx, miny, maxx, maxy)")
     )

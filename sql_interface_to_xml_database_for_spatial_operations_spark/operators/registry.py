@@ -7,6 +7,8 @@ halves of each query in one ``@query`` registration makes drift impossible.
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -27,759 +29,19 @@ class RegisteredQuery:
 
 QUERIES: dict[str, RegisteredQuery] = {}
 
-# Queries with a green driver CORRECTNESS row in a PRIOR round whose
-# implementation (including transitive helpers) is UNCHANGED since that
-# row was recorded. The driver's per-round correctness check covers the
-# first 50 entries in exposure order; entries NOT in this set — never
-# checked, red last round, or touched by this round's diff — are exposed
-# first so they are (re-)checked, and the remaining slots fall to the
-# stalest greens in registration order. Exposure order only —
-# registration order and query semantics are unchanged.
-#
-# Maintenance rule (ADVICE r2): whenever a round's diff changes code a
-# verified query depends on, REMOVE that query here so the next driver
-# run re-verifies it — helpers count, not just direct rewrites
-# (VERDICT r3 #1). tests/test_registry.py now enforces this
-# automatically: every name listed here must carry an unchanged
-# source-fingerprint in operators/_verified_fingerprints.json, so a
-# diff touching a green query's module fails the suite until the query
-# is either re-exposed or its fingerprint deliberately re-recorded.
-#
-# Round 12 state: CORRECTNESS_r11 came back 50/50 green (eighth
-# consecutive all-green round) and tests/test_registry.py was green at
-# round start. This set executes the r12 rotation plan as written
-# (VERDICT r11 item 1 + the r11 registry comment): fold the 50 r11
-# greens in and expose
-#   - ALL 32 remaining r7-green rows (q60-q73, q88, q90-q93,
-#     q103-q107, q109-q111, q115, q132, q134, q135, q141) — the last
-#     cohort older than 4 rounds; this retires the staleness debt and
-#     puts the steady state at "nothing older than 4 rounds".
-#   - this round's diff (3 so far): the ADVICE-r11 fixes changed
-#     executed paths — subdivide.py went pivot-vertex splitting +
-#     guaranteed budget (q162 re-exposes), jpeg_codec.py gained the
-#     trailing-ZRL overflow check (q163 re-exposes), split.py's
-#     shared-paths both-directions spans now single-report in the
-#     same bucket (q166 re-exposes).
-#   - fill (15): the oldest r9-green rows in registration order —
-#     q01, q08, q11-q16, q18, q19, q30, q112, q46-q48. Planned r12
-#     feature work (dissolved st_union -> q124, concave overlay
-#     oracle families -> q139/q146, LCC st_transform -> q130,
-#     concave-hull holes -> q165, k-means convergence -> q143 module
-#     closure, MJPEG video frames + new rows) displaces fill rows
-#     one-in-one-out from the END of that list as it lands, each swap
-#     recorded below.
-# Window arithmetic: 32 r7-stale + 3 diff + 15 r9 fill = 50.
-# Remaining greens whose fingerprints drift only via the registry.py /
-# module-closure edits of the ADVICE fixes (no executed-path change:
-# the split.py doc header, the registry comment itself) are
-# deliberately re-recorded — the same result-invariant class as the
-# r8/r10/r11 re-records.
-# r12 edit #1 (dissolved st_union, VERDICT r11 item 3): new
-# functions/dissolve.py (exact boundary-dissolve kernel on the noding
-# faces), union_ops.py component resolution rewritten (convex-pair +
-# seamed decomposition paths REMOVED, shared-linework component
-# edges added), noding.py refactored to expose faces_frac. Executed
-# paths changed for: q124 (st_union_all + new concave_union column,
-# oracle extended) -> RE-EXPOSES displacing fill q48; q164
-# (polygonize) -> RE-EXPOSES displacing q47; q53/q155 (st_buffer
-# dissolves its piece union through union_geoms, buffer.py:121) ->
-# RE-EXPOSE displacing q46/q112. Greens touching only unchanged
-# helpers of those modules (linework/collection_fns use _flatten;
-# overlay imports _clip_convex/_is_convex_ring/_seg_intersections;
-# accessors uses _signed_area_ring; validity/relations reference it
-# in comments only) are result-invariant — fingerprints deliberately
-# re-recorded (q139/q146/q149/q156/q157/q161 re-expose later this
-# round anyway where planned).
-# r12 edit #2 (general-concave overlay oracle families, VERDICT r11
-# item 2): overlay_ops.py q139/q146 gain 'concave' and 'holed'
-# invariant families (and their oracles grow matching rows) ->
-# q139/q146 RE-EXPOSE displacing fill q30/q19. _sql_fixtures.py gained
-# pt_sql/ring_sql/poly_sql (pure additions; union_agg refactored onto
-# them — q124 already exposed) — every other drifted green only
-# imports the module without executing the new helpers:
-# result-invariant, fingerprints deliberately re-recorded.
-# r12 edit #3 (LCC 2SP st_transform, VERDICT r11 item 4):
-# projection.py gained the Snyder 2SP closed forms (EPSG:2154/3034)
-# and geo_fn_ops.py's q130 gained the LCC round-trip + false-origin
-# anchor family -> q130 RE-EXPOSES displacing fill q18. The module
-# siblings q128/q129/q131 (same geo_fn_ops.py file) and q131's
-# st_azimuth (same projection.py file) execute unchanged code — the
-# LCC code is pure addition; fingerprints deliberately re-recorded.
-# r12 edit #4 (AVI/MJPEG video frames, VERDICT r11 item 5): new
-# operators/video_ops.py (strict RIFF walk + MJPEG frames through the
-# real JPEG decoder) registers q167_video_frames WITH its driver row,
-# displacing fill q16. multimodal.decode_meta gained the AVI dispatch
-# branch — a pure addition; the SIMG/JPEG/SRAS/PNG paths the greens
-# q80/q81/q82/q133/q136 execute are byte-unchanged, fingerprints
-# deliberately re-recorded.
-# r12 edit #5 (k-means to convergence, VERDICT r11 item 6):
-# cluster_ops.py gained kmeans_rounds (integer-quantized Lloyd,
-# centroid fixed-point convergence, broadcast-data centroids so the
-# per-round plan/codegen is reused) and q168_kmeans_converged
-# registers WITH its driver row, displacing fill q15. q143's one-step
-# module sibling executes unchanged code (the additions are pure) —
-# BUT cluster_ops.py is its defining module, so q143 RE-EXPOSES
-# instead of a re-record (same-module additions have bitten before),
-# displacing fill q14.
-# r12 edit #6 (code-review fixes): st_transform's UDF now NULLs
-# non-finite coordinates (q130 exposed; executed), the q168 oracle
-# derives the embedding dim from vectors.DIM, dead _D2_INT removed,
-# COVERAGE counts corrected to 167. The drifted greens
-# (q99-q102/q108/q114/q118/q121/q128/q129/q131/q148/q154) only share
-# the projection/engine module closure without executing st_transform
-# — result-invariant, fingerprints deliberately re-recorded.
-# r12 edit #7 (concave-hull holes, VERDICT r11 missing item 5):
-# tessellate.py gained allow_holes (interior-triangle digging with
-# off-boundary vertex regularity, holed assembly through the dissolve
-# kernel) + the st_concavehull_holes UDF; q165 gains the ch_holes
-# pinned-WKT family and the ch_holes_bay_match cross-kernel assembly
-# pin -> q165 RE-EXPOSES displacing fill q13.
-# r12 edit #8 (LAEA EPSG:3035): projection.py gained the Snyder
-# authalic-sphere Lambert azimuthal equal-area forms and q130 gained
-# the in-domain LAEA round-trip + false-origin-anchor family (q130 is
-# already exposed). The same module-closure greens as edit #6 drift
-# without executing the new code — pure addition, fingerprints
-# deliberately re-recorded.
-# r12 edit #9 (repair-then-dissolve union): union_geoms now routes a
-# component member with a non-simple ring through the exact linework
-# makevalid before dissolving (_repair_members) — the PostGIS
-# re-noding behavior; only makevalid-refused components keep the
-# stacked warning. q156/q157 EXECUTE union_geoms through makevalid's
-# parts union, so they RE-EXPOSE (helpers count — the r3 rule)
-# displacing fill q11/q12; the other drifted greens share only the
-# union_ops module closure without executing the changed component
-# resolution — fingerprints deliberately re-recorded.
-# r12 edit #10 (grid/tiling family + exact synthesized probes): new
-# functions/grids.py (ST_SquareGrid/ST_HexagonGrid/ST_TileEnvelope +
-# st_removerepeatedpoints/forcepolygonccw/cw/normalize/swapordinates/
-# st_project) registers q169_st_grids WITH its driver row. Writing its
-# hex-tiling test exposed a REAL predicate bug: engine-SYNTHESIZED
-# probe points (edge sub-midpoints, covered-line splits) were float-
-# evaluated and rounded off their own segment — equals(x, x)/
-# within(x, x) returned FALSE for float-coordinate geometries and
-# edge-adjacent float polygons got a false interiors_intersect.
-# Synthesized probes are now exact Fraction contact points
-# (geometry._exact_split_points/_point_in_polygon_frac) with exact
-# lifted evaluation; float INPUT probes keep their old paths byte for
-# byte. Executed paths changed for q44 (within_ogc) and q122
-# (equals/touches/overlaps/crosses) -> RE-EXPOSE. To keep the window
-# at 50: the exhausted fill rows q01/q08 fold back, and q143's
-# re-exposure downgrades to a deliberate re-record — its executed
-# path (the one-step kmeans) is byte-unchanged by the kmeans_rounds
-# ADDITION, and q168 (same module, all the new code) IS
-# driver-checked this round. q45 (st_intersects) executes none of the
-# changed predicate helpers (G.intersects uses the untouched float
-# _point_in_polygon/_segs_intersect) — deliberate re-record.
-# Window arithmetic: 32 r7-stale + 13 diff (q124 q130 q139 q146 q53
-# q155 q156 q157 q162 q163 q165 q166 q44) + q122 + 3 new (q167 q168
-# q169) + 0 fill = 50 exactly.
-# r12 edit #11 (late surfaces at ZERO window cost — the one-in-one-out
-# rule's cheaper sibling: extend rows already exposed this round):
-# grids.py gained st_chaikinsmoothing / st_scroll / st_lineextend /
-# st_dumpsegments / st_dumprings / st_dumppoints (q169 gains six
-# pinned families — chaikin octagon of exact quarter points, scroll,
-# 3-4-5 line extension, dump surfaces); new functions/cluster_geo.py
-# implements ST_ClusterIntersecting / ST_ClusterWithin as
-# collect_list aggregates and q124 gains n_clusters / max_cluster /
-# n_clusters_d5 with a recursive-CTE transitive-closure oracle (the
-# q90 idiom). Both q169 and q124 are in this round's exposure list
-# already. The engine-registration closure drifts the ingest greens
-# (q99-q102/q108/q114/q118/q121) without executing any new code —
-# fingerprints deliberately re-recorded.
-#
-# Round 13 rotation plan (write the r13 set from this): fold the 50
-# r12 greens in, then expose (a) the 44 r9-green rows — q01 (checked
-# r9 via the r12 fill? NO: q01/q08 folded back unchecked, so they
-# lead), q08, q11-q16, q18, q19, q30, q46-q48, q50-q52, q59, q85,
-# q94, q95, q97-q102, q108, q112, q118, q123, q137, q138, q142,
-# q143 (re-record heritage), q144, q145, q147-q154 — 4 rounds stale
-# by r13, oldest first; (b) whatever r13's diff touches; (c) any r12
-# reds. 44 + 6 diff slots fits the 50-window; if the diff runs over,
-# the freshest r9 rows (q148-q154, last registered) defer one round
-# and the bar ("nothing older than 4 rounds") still holds through
-# r14.
-#
-# r13 EXECUTED rotation: the 50 r12 greens fold in; exposure = 43 of
-# the 45 r9-green rows (the plan's list minus q153/q154, the two
-# freshest-registered, deferred one round via the escape clause)
-# + 5 diff-touched re-exposures whose EXECUTED closures changed —
-# q124 (cluster_geo union-find rewrite), q130 (st_transform dispatch
-# gained Albers EAC 5070/3577 + aea oracle families), q158 (measures
-# gained minimum-clearance kernels + 7 families), q167 (AVI walk
-# gained duplicate-hdrl/avih/movi strictness), q169 (hexagon_grid
-# gate now counts emitted cells) — + 2 new rows q170_bm25_search /
-# q171_bigram_perplexity (operators/lm_ops.py). q152 is in the r9
-# list AND diff-touched (general-pair closest/shortest + new
-# longest/maxdistance execute there), so it costs one slot, not two.
-# 43 + 5 + 2 = 50 exactly.
-# Deliberate re-records (closure drift, executed path byte-unchanged
-# or semantics unchanged for well-formed input): q80-q82/q133/q136
-# (multimodal decode_meta walks AVI headers through the stricter
-# parse_avi_header — new checks EXECUTE but only raise on crafted
-# duplicate containers the fixtures never build; q167 re-exposed
-# covers the walk); q114/q121 + ingest closure (registration-only);
-# q128/q129/q131/q140-q151/q153/q154/q159-q161/q41-q45/q49 (spatial
-# registration closure — new function families registered, none of
-# their executed kernels changed; verified by grep: only q152/q158
-# execute the new linearref/measures code).
-#
-# Round 14 rotation plan: fold the 50 r13 greens in, then expose
-# (a) q153/q154 (deferred here — FIRST in line), (b) the r10-green
-# cohort (4 rounds stale by r14): q02-q07, q09, q10, q17, q20-q29,
-# q31, q54-q58, q86, q87, q113, q117, q121, q126-q129, q139-q141,
-# q146, q159, q161 — take the oldest first until the window fills
-# after (c) whatever r14's diff touches and (d) any r13 reds.
-#
-# r14 EXECUTED rotation: the 50 r13 greens fold in; exposure =
-# q153/q154 (the deferred r9 pair, first in line) + 9 diff-touched
-# re-exposures whose EXECUTED closures changed — q44/q45/q122 (the
-# filtered-exact _orient closed the float-coincident predicate class;
-# the intersects 0-D fallthrough went exact; q122 gained the 'fs'
-# scaled-float oracle family), q130 (st_transform gained polar
-# stereographic 3413/3031/3032 + ps oracle families), q152 (nearest
-# pairs return vertex witnesses for intersecting operands + work
-# bounds; overlap_null became overlap_vertex + touch_vertex/
-# mixed_member families), q155 (st_bufferstyle + 9 style families),
-# q158 (clearance vertex budget executes per call), q165 (tessellation
-# site gate executes per call), q169 (homogenize mixed-kind bucketing
-# + chom_mixed/chom_empty families) — + 1 new row q172_bpe_tokenize
-# (operators/tokenize_ops.py) + 37 of the 40-row r10 cohort, oldest
-# first (q146/q159/q161, the three freshest-registered cohort rows,
-# defer one round via the r13 escape clause; all three are first in
-# line for r15 alongside whatever r15's diff touches — q146 deferred
-# late-round when q173_y4m_frames, the second new row, took its slot).
-# 2 + 9 + 2 + 37 = 50 exactly.
-# Deliberate re-records (closure drift through geometry._orient /
-# relations / buffer / linearref / measures / tessellate registration,
-# executed results byte-unchanged for integer/decimal fixtures — the
-# filtered orient takes the identical fast path there, verified by the
-# full-registry sf0.01 sweep): q41-q43, q46-q53, q59, q85, q94-q102,
-# q108, q114, q118, q124, q131, q142-q151, q156, q157, q159-q164,
-# q166-q168 and the non-spatial rows whose fingerprints absorb the
-# engine-registration closure (register_bpe_functions added).
-#
-# r14 continuation edits (post-wrap session, all at ZERO window cost —
-# the one-in-one-out rule's cheaper sibling: every new surface lands as
-# oracle families on rows ALREADY EXPOSED this round):
-# - geohash codec (new functions/geohash.py): st_geohash /
-#   st_pointfromgeohash / st_geomfromgeohash; q169 gains 9 gh_*
-#   families (published anchors, auto-precision, dyadic decode,
-#   round-trip, range gate, per-key covered-by-own-cell).
-# - ST_OffsetCurve (new functions/offsetcurve.py, reuses buffer.py's
-#   style aliases without editing it): q155 gains 9 oc_* families
-#   (exact concave trim, mitre/bevel integer chains, round-join point
-#   count + exact 45° arc point, zero echo, kind/style gates).
-# - single cells + orientation + longitude shift (new
-#   functions/cells.py): st_square / st_hexagon (bit-identical to the
-#   grid's cell at the same lattice coords) / st_ispolygoncw/ccw /
-#   st_shiftlongitude; q169 gains 7 families.
-# - measure (M) linear referencing (new functions/measure_m.py,
-#   self-contained WKT M codec): st_addmeasure / st_m / st_mmin /
-#   st_mmax / st_zmflag / st_interpolatepoint / st_locatealong /
-#   st_locatebetween / st_lineinterpolatepoints; q152 gains 6
-#   numeric families.
-# - trajectory suite (measure_m.py addition): st_isvalidtrajectory /
-#   st_closestpointofapproach / st_distancecpa / st_cpawithin — the
-#   PostGIS temporal functions over LINESTRING M; q152 gains 4 cpa_*
-#   families (closed-form crossing CPA, instant overlap, disjoint
-#   NULL, validity).
-# - ST_MaximumInscribedCircle (new functions/inscribed.py, GEOS-style
-#   deterministic branch-and-bound): q158 gains 5 mic_* families
-#   (unique incircle at milli, exact square center, kind gate).
-# - GML/KML writers (new functions/geo_export.py): st_asgml (GML 2,
-#   gml: prefix, outer/innerBoundaryIs) / st_askml (KML 2.2,
-#   collections flatten to MultiGeometry) — byte-exact round trips
-#   through the existing readers; q169 gains 4 families.
-# - Vincenty spheroid distances (new functions/spheroid.py):
-#   st_distancespheroid / st_lengthspheroid on WGS84, published GDA
-#   anchor + equatorial closed form; q169 gains 4 mm-pinned families.
-# - code-review fixes: lineinterpolatepoints' last-segment fallback
-#   goes BY INDEX (duplicate-valued segments snapped mid-line
-#   fractions wrong), locatebetween returns exact segment endpoints
-#   at t = 0/1 (ulp residue split fully-covered lines), addmeasure
-#   preserves the input kind (MULTILINESTRING stays multi, empties
-#   keep their kind), the offset-curve honesty checks gain a 4e6
-#   pair-evaluation budget, and the inscribed/empty-circle node
-#   budget scales down with vertex count (4e6 total point-segment
-#   evaluations). All in q152/q155/q158/q169's executed closures —
-#   every one EXPOSED this round.
-# - unicode normalization (new functions/textnorm.py): text_nfc /
-#   text_nfkc / text_strip_accents over stdlib unicodedata — the
-#   normalize-before-tokenize pass of the LLM pipeline; q172 gains
-#   nfc_n / strip_acc columns whose oracle runs DuckDB's OWN
-#   independent nfc_normalize / strip_accents implementations.
-# - CIRCULARSTRING linearization (new functions/curves.py):
-#   st_curvetoline — circumcircle arcs at quad_segs resolution, exact
-#   endpoints, full-circle p0==p2 diameter convention, collinear
-#   degeneration; COMPOUNDCURVE/CURVEPOLYGON are a documented loud
-#   NULL. st_force2d (measure_m.py addition) drops M / echoes 2-D.
-#   q169 gains 5 families (exact semicircle string, 135° libm mirror,
-#   curve gate, force2d drop + echo).
-# - ST_AsMVTGeom (new functions/mvt.py): the Mapbox-Vector-Tile grid
-#   transform (integer snap + Y flip + CW winding + buffered-tile
-#   clip through the exact overlay kernel; degenerations and refused
-#   repairs are loud NULLs). q169 gains 4 mvt_* families.
-# - second code-review pass fixes (offsetcurve budget consistency,
-#   inscribed node floor, curves budgets/_int_arg/canonical EMPTY,
-#   geo_export non-finite gate) — all in exposed rows' closures.
-# - third code-review pass fixes: asmvtgeom drops collapsed PARTS by
-#   distinct-vertex count (not whole-geometry NULL; the old line test
-#   was dead — dedup pads collapsed chains), keeps the container kind
-#   independent of the clip flag, uses G.dimension and the
-#   geometry-level intersection kernel; offsetcurve's honesty checks
-#   go sweep-pruned, restoring the full 4096-vertex capacity with the
-#   pair budget as the adversarial bound only.
-# Closure drift from the engine.py registrations alone (the new
-# modules execute nothing in any verified row): q99-q102, q108, q114,
-# q118 — result-invariant, fingerprints deliberately re-recorded (the
-# every-round ingest-closure class).
-#
-# Round 15 rotation plan: fold the 50 r14 greens in, then expose
-# (a) q146/q159/q161 (deferred here — FIRST in line), (b) the r11-green
-# cohort (4 rounds stale by r15): q32-q43, q46-q53, q59, q75-q85,
-# q88-q102, q108, q111, q114, q116, q118-q120, q123, q125, q131-q138,
-# q142-q151 — oldest first until the window fills after (c) whatever
-# r15's diff touches and (d) any r14 reds.
-#
-# r15 EXECUTED rotation (VERDICT r14 "what's wrong" item 1: the
-# STALE-ROW PIN runs first, derived from the per-round CORRECTNESS
-# artifacts rather than the hand-kept cohort labels that mislabeled
-# six r10 rows as r11-green): the 50 r14 greens fold in; exposure =
-# (a) the full r10-green cohort — q41/q42/q43/q49/q114/q131/q159/q161
-# (8 rows, 5 rounds stale, judge-reverified r14) — PINNED first;
-# (b) the full r11-green cohort (28 rows): q32-q40, q75-q84, q89,
-# q96, q116, q119, q120, q125, q133, q136, q160;
-# (c) 5 diff-touched re-exposures whose EXECUTED closures changed —
-# q140 (wkb.py gained ISO/EWKB Z/M/ZM codec paths), q152 (measure_m
-# locatebetween POINT contacts + zcoord delegation in force2d/zmflag/
-# st_m), q155 (offsetcurve NULL-style defaults + st_offsetcurvestyle
-# split + oc_plain family), q158 (inscribed plateau best-so-far +
-# mic_rect families), q169 (spheroid PostGIS arity + perimeter +
-# sphere/badsph families, COMPOUNDCURVE/CURVEPOLYGON linearization +
-# cc_*/cp_* families, MULTICURVE gate swap);
-# (d) 3 new rows — q174_st_z (zcoord suite), q175_st_asmvt (MVT tile
-# protobuf assembly, byte-exact hex oracle), q176_bpe_train (the
-# distributed trainer's groupBy-argmax loop, closed-form merges);
-# (e) fill (6): the oldest r12-green rows in registration order —
-# q53, q60, q61, q62, q63, q109. LATE-ROUND SWAP (one-in-one-out):
-# q169 crossed the judge's ~3 s split line at 82 families, so its 21
-# geodesy/export families (gh_*/sphd_*/kml_*/gml_*) moved to the NEW
-# row q177_st_geodesy — q177 takes q109's fill slot (q109 folds back
-# verified on its recorded r12 fingerprint; it leads the r16 cohort).
-# Window arithmetic: 8 + 28 + 5 + 4 + 5 = 50 exactly. After r15 the
-# oldest remaining green is r12 — the "nothing older than 4 rounds"
-# bar holds.
-# Deliberate re-records (closure drift, executed paths byte-unchanged):
-# the engine.py registration closure (zcoord/mvt_tile registrations
-# added — ingest rows q99-q102/q108/q114*/q118/q121 and every row
-# whose _ensure_udfs imports measure_m/wkb/spheroid/curves without
-# executing the new branches; *q114 is also in the r10 pin, so it is
-# EXPOSED, not re-recorded). The full sf0.01 engine-vs-DuckDB sweep
-# (this round's verify run, MISMATCHES: none across all rows) backs
-# every re-record.
-#
-# r15 continuation swaps (one-in-one-out, same late-round mechanism as
-# the q177 split): each NEW row takes the newest remaining fill slot —
-# q178_st_surface3d (POLYHEDRALSURFACE/TIN/TRIANGLE codec, Newell
-# 3-D area, divergence-theorem volume, mesh closedness, filtered-exact
-# ST_3DIntersects) takes q63_fingerprint's slot (q63 folds back
-# verified on its recorded r12 fingerprint; it joins q109 at the head
-# of the r16 cohort), and q179_substring_dedup (Lee et al. 2021
-# span-removal dedup: k-token rolling windows, global ≥2 set, per-doc
-# span merge — two shuffles, JVM-only) takes q62_language_id's slot
-# (q62 likewise folds back on its recorded r12 fingerprint), and
-# q180_st_editors_x (ST_ForceCollection / ST_UnaryUnion / ST_BuildArea
-# odd-even nesting / ST_WrapX dateline healer / ST_QuantizeCoordinates
-# bit-trim pinned to the PostGIS doc example) takes q61_quality_score's
-# slot (q61 folds back the same way; q61-q63 + q109 now lead the r16
-# cohort). Window stays 50 exactly. MULTICURVE/MULTISURFACE
-# linearization lands in curves.py with its families on the EXPOSED
-# q169 row (mc_mixed/ms_mixed; ctl_gate's probe moves to a puntal
-# member). Closure drift from the surface3d/editors_x
-# engine.py/operators-__init__ registrations and the curves.py edit
-# (the every-round ingest-closure class — no verified row executes the
-# new code): fingerprints deliberately re-recorded, backed by the
-# full-registry sf0.01 engine-vs-DuckDB sweep (MISMATCHES: none) and
-# the sf0.001 parity battery green at the same commit. The aggregate
-# forms (st_collect_all / st_makeline_all / st_polygonize_all,
-# functions/agg_forms.py — the st_union_all fn(collect_list(...))
-# idiom) land their families on the EXPOSED q161 row (agg_collect /
-# agg_makeline / agg_polygonize canonicalized through st_normalize /
-# agg_nulls); same re-record class for the registration closure. The
-# surface WKB codec (ISO codes 15/16/17 +1000 Z in functions/wkb.py,
-# strict patch-kind and re-parse validation) lands its round-trip
-# family on the EXPOSED q178 row (wkb3d) with unit coverage in
-# tests/test_wkb.py; wkb.py's other carriers (q140/q152/q174) are all
-# exposed this round, so the only verified-row drift is again the
-# engine registration closure — same re-record class. The window-form
-# clustering surface (st_clusterkmeans_all deterministic
-# first-k-distinct seeding / st_clusterdbscan_all with the q160
-# canonical label rules, functions/cluster_window.py) rides q161 too
-# (agg_kmeans/agg_dbscan — closed-form label strings), with a brute
-# transitive-closure fuzz in tests/test_cluster_window.py. The misc
-# batch (functions/misc_fns.py: st_summary, st_nrings,
-# st_pointinsidecircle strict-<, st_hasarc, the exact 2-D aliases
-# st_length2d/st_perimeter2d/st_area2d, st_forcerhr ==
-# st_forcepolygoncw, st_3dextent_all BOX3D) rides the EXPOSED q180
-# (summ/misc/ext3 families); engine-registration drift re-recorded as
-# before, backed by the same sweeps.
-#
-# r15 code-review fixes (post-sweep session review of the round's own
-# diff — all six findings fixed in code): (1) ST_Volume now requires a
-# CONSISTENTLY ORIENTED closed mesh (_oriented_closed: each directed
-# edge once + its reverse once) — a one-face-flipped cube previously
-# returned a silently wrong 0.333 flux sum; ST_IsClosed keeps the pure
-# undirected watertightness test; (2) a TRIANGLE WKB buffer with >1
-# rings is now a decode error instead of a silent ring drop; (3) the
-# st_isclosed surface overload moved into its SINGLE owner
-# (accessors.is_closed delegates surface-prefixed WKT to surface3d)
-# so UDF registration order can no longer clobber it — the lazy
-# parse-attempt branch is provably inert for every non-surface input;
-# (4) st_3dextent_all skips NULL / typed-EMPTY members like PostGIS
-# aggregate rows (Z and 2-D empties now identical); (5) st_hasarc
-# validates the curve BODY through the linearizer (keyword + junk →
-# NULL); (6) st_asewkb carries surfaces (SRID flag over the ISO body,
-# round-trip + srid-0 degradation pinned); plus the duplicate
-# coordinate-walker cleanup (G._points/G.bbox) and O(n) k-means
-# seeding. The drifted verified rows (q150/q151 via accessors,
-# q162/q164/q165/q166 via its import closure, and the engine-closure
-# ingest rows) were ALL independently re-verified through the driver
-# recipe at sf0.01 after the fixes (MISMATCHES: none, this session)
-# before their fingerprints were re-recorded. ST_LineCrossingDirection
-# (functions/crossing.py — the exact topological crossing classifier,
-# Fraction contact intervals + wedge-rule vertex sides, pinned to the
-# published PostGIS doc pair ±3) rides the EXPOSED q152 (lcd family,
-# packed single/parallel codes + the balanced double-cross −3); the
-# engine-registration drift is the same re-record class.
-# ST_SimplifyPolygonHull (functions/polygon_hull.py — the GEOS 3.11
-# corner-triangle ring hull: least-area reflex/convex corner deletion
-# behind the exact empty-corner-triangle safety test, holes taking the
-# opposite direction, deterministic area-then-index tie-break) rides
-# the EXPOSED q158 (sph_outer/sph_inner full-WKT closed forms +
-# sph_echo), with a 100-case star-polygon containment fuzz in
-# tests/test_polygon_hull.py; same engine-closure re-record class.
-# ST_VoronoiLines (functions/voronoi_lines.py — shared cell edges of
-# the exact Fraction Voronoi via the count==2 edge idiom, canonical
-# sorted 2-point parts over the engine's own padded cell box) rides
-# q158 too (vlines closed-form bisectors + the single-site EMPTY).
-# ST_SetEffectiveArea (functions/effective_area.py — VW effective
-# areas as M, monotone over deletion order, FLT_MAX endpoint pins;
-# the threshold-filter-reproduces-st_simplifyvw property is fuzzed)
-# rides q152 (sea family, tent closed form). The EWKT codec +
-# dimensional point constructors (functions/ewkt.py: st_geomfromewkt /
-# st_asewkt / st_setsrid / st_sridfromewkt over the st_asewkb
-# acceptance surface, st_makepoint / st_pointz / st_pointm /
-# st_pointzm / st_makepointm) ride the EXPOSED q180 (ewkt / mkpt
-# families: prefix round-trip 7k+1, fixed-4326 stamp, ZM constructor
-# read back through st_m); the engine-registration closure drift
-# (ingest rows q99-q102/q108/q118/q121) was re-verified through the
-# driver recipe at sf0.01 (MISMATCHES: none) before the re-record —
-# the established every-round class. The second misc batch
-# (functions/misc_fns2.py: st_orderingequals across the full codec
-# stack, st_clipbybox2d through the exact overlay kernel,
-# st_filterbym with PostGIS's returns_m=false shape, st_makebox2d,
-# st_rotatex/y/z with the 2-D z=0 rule, st_transscale) rides the
-# EXPOSED q180 too (clip / fbm / oe / rot3 families — exact-integer
-# or θ=π micro-int closed forms); same engine-closure re-record
-# class, same sf0.01 backing sweep. The encoded-polyline codec
-# (functions/polyline.py: st_asencodedpolyline /
-# st_linefromencodedpolyline, the published Google 5-bit-chunk
-# format with half-away rounding and the signed-32-bit envelope)
-# rides q180's epl family (integer round-trips exact at every
-# precision + the spec's own published example string); same
-# re-record class. The TWKB codec (functions/twkb.py: st_astwkb /
-# st_geomfromtwkb — zigzag-varint deltas, implied ring closure,
-# extended Z/M dims, reader-side bbox/size/idlist skip, spec worked
-# examples byte-exact) rides q180's twkb family; same re-record
-# class, same sf0.01 backing sweep.
-#
-# Round 16 rotation plan: fold the 50 r15 greens in, then expose the
-# remaining r12-green cohort (34 rows): q64-q73, q88, q90-q93,
-# q103-q107, q110, q111*, q115, q132, q134, q135, q146, q156, q157,
-# q162, q163, q164, q166, q168 (*q111 re-checked r15 via the r11
-# cohort) — oldest first until the window fills after whatever r16's
-# diff touches and any r15 reds.
-# r16 EXECUTED rotation: the 50 r15 greens fold in (CORRECTNESS_r15,
-# 50/50 green, plus the judge's independent full-registry sf0.01 sweep
-# at the same tree — MISMATCHES: none); exposure =
-# (a) the remaining r12-green cohort (34 rows, oldest in the ledger,
-# VERDICT r15 task 1): q64-q73, q88, q90-q93, q103-q107, q110, q111,
-# q115, q132, q134, q135, q146, q156, q157, q162, q163, q164, q166,
-# q168;
-# (b) 5 diff-touched re-exposures (r16's own plan, exposed BEFORE the
-# code lands so no fingerprint ever covers an unverified edit):
-# q130_st_transform (parameterized +proj= forms, VERDICT task 3),
-# q174_st_z + q140_wkb_roundtrip (GEOMETRYCOLLECTION Z/ZM + curved
-# WKB type codes 8-13, VERDICT task 4), q177_st_geodesy
-# (st_dwithinspheroid, VERDICT task 5), q182_shapefile_roundtrip
-# (ADVICE r15 deletion-flag/case/terminator fixes);
-# (c) q183_gpx_roundtrip — the GPX source's first driver row
-# (VERDICT r15 what's-missing item 1);
-# Window arithmetic, done FIRST this round per VERDICT r15 item 2:
-# 34 + 5 + 1 = 40 of 50; the 10 spare slots take r16's new rows as
-# they land (each noted below when registered). After this rotation
-# the oldest remaining verification in _DRIVER_VERIFIED is r13 — the
-# "nothing older than 4 rounds" bar holds with a round to spare.
-#
-# r16 slot usage beyond the plan: q184_spatial_partition_pruning (the
-# grid-cell parquet layout + partition-pruned bbox read,
-# operators/spatial_store_ops.py) takes one spare slot — window 41 of
-# 50. New FUNCTION surface landed on EXPOSED rows at zero window
-# cost: '+proj=' parameter strings + EPSG GN7-2 UPS variant-A pins on
-# q130 (pd_* families); GEOMETRYCOLLECTION Z/M/ZM + the curved-WKB
-# (codes 8-12) linearizing decode on q174 (gcz/gcz_rt) and q140
-# (curved/curved_cp/gcz_wkb); st_dwithinspheroid (sphd_dwithin),
-# st_areaspheroid/st_perimeterspheroid (spha_*), st_box2dfromgeohash
-# (gh_box), st_linetocurve (ltc_*) on q177; st_distancesphere is a
-# registration alias of st_distance_sphere (modern PostGIS spelling).
-# The spatial.py/curves.py/geohash.py closure drift over verified
-# rows is the deliberate re-record class, backed by this round's
-# full-registry sf0.01 engine-vs-DuckDB sweep (MISMATCHES: none) on
-# the settled tree.
-#
-# Round 17 rotation plan: fold the 50 r16 greens in, then derive the
-# STALE PIN from the per-round CORRECTNESS artifacts (the r15
-# mechanism — never the hand-kept cohort labels): the oldest
-# still-resting verifications after this fold are the r13-green rows
-# (CORRECTNESS_r13 keys) MINUS everything re-verified since (r14/r15/
-# r16 windows and the r16 exposure). Expose that remainder FIRST,
-# oldest artifact first, then whatever r17's diff touches, then any
-# r16 reds. Window arithmetic before any new rows, as always.
-#
-# r17 EXECUTED rotation: fold the 50 r16 greens in (CORRECTNESS_r16,
-# 50/50 green, 0 errs — plus the judge's independent full-registry
-# sf0.01 sweep, 183/183 MISMATCHES: none). Stale pin derived from the
-# CORRECTNESS artifacts per the plan above (never hand labels):
-# r13-green keys MINUS (r14 | r15 | r16 keys) = 44 rows whose most
-# recent driver verification is r13 — the join/setop/window core
-# (q11-q16/q18/q19/q30/q112), the ingest family (q99-q102/q108/q118),
-# the spatial-function mid-band (q46-q48/q50-q52/q59/q85/q94/q95/
-# q97/q98/q124/q148-q151), the streaming e2e rows (q123/q137/q138/
-# q142/q147), and q143/q144/q145/q167/q170/q171. All 44 exposed,
-# oldest-artifact-first by construction.
-# Diff-touched re-exposures for r17's plan (exposed BEFORE the code
-# lands, the r16 precedent): q130_st_transform (+units/+to_meter,
-# omerc/sterea obliques, ADVICE r16 pole-clamp + empty-param fixes —
-# VERDICT r17 tasks 2/3 + ADVICE), q178_st_surface3d (M/ZM surface
-# codec closure, VERDICT task 4), q184_spatial_partition_pruning
-# (ADVICE r16 hot-cell salt fix: row-unique hash key).
-# Window arithmetic FIRST, as always: 44 + 3 = 47 of 50; 3 spare
-# slots for r17's new rows as they land (each noted here when
-# registered).
-# r17 slot usage: q185_st_inspection (operators/inspect_ops.py —
-# st_iscollection / st_memsize / st_locatebetweenelevations /
-# st_3dlongestline, the dict-union gap sweep's finds) takes one spare
-# slot — window 48 of 50. New FUNCTION surface on EXPOSED rows at
-# zero window cost: '+proj=' +units/+to_meter + omerc + sterea +
-# krovak + eqc + cass + '+pm=' + NAD83 datum with GN 7-2 worked-
-# example pins on q130; M/ZM surface codec closure (WKB ISO
-# 2015/3015-class) first landed on q178.
-# r17 row-cost rebalance (the VERDICT r16 q140-budget rule): the
-# CONSTANT worked-example pin families (r16's ups/mks/ch + all the
-# r17 CRS pins, plus q178's new mtin/zmps/mwkb codec packs) moved off
-# the 250-row q130 / 25-row-heavyweight q178 onto the new
-# q186_st_worked_examples (geo_fn_ops.py, 25-row nation fixture) —
-# second spare slot, window 49 of 50. Idle A/B vs the r16 tree at
-# sf0.1: q130 2.7 -> ~1.9 s, q178 3.6 -> ~2.1 s (back to their r16
-# costs); q140 measured UNCHANGED vs the r16 tree in the same session
-# (3.04 vs 3.05 s under load — its absolute number is box-state, not
-# growth).
-# measure_m.py's ADVICE depth-cap fix rides with the
-# q178 exposure (its other carriers q169/q174/q177 are r16-green on
-# family SQL that never nests GCs past the cap — result-invariant
-# there, deliberate re-record class backed by the round-end
-# full-registry sf0.01 sweep on the settled tree; same class as the
-# projection.py-import drift over q114/q121/q128/q129/q131/q152/
-# q154/q158/q165/q169/q180).
-#
-# r17 OPTIMIZATION pass (OPTIMIZATION_r17.md): the round's diff is
-# result-invariant by design (plan/driver-overhead restructures —
-# register-once UDF groups, one-shot SQL unions, fan_out, literal
-# k-means centroids, JVM Morton sort key) and touches shared helpers
-# (_sql_fixtures.py, sources/tables.py, every functions/ module's
-# register_*), so EVERY verified fingerprint drifts. Exposure order is
-# unchanged (the executed r17 rotation above); the drift is the
-# deliberate re-record class, backed by full-registry engine-vs-DuckDB
-# sf0.01 sweeps run after each change batch this round (185/185,
-# MISMATCHES: none — see OPTIMIZATION_r17.md "Inherited state" and
-# "Numbers").
-#
-# r18 EXECUTED rotation (OPTIMIZATION round 2): fold the 50 r17 greens
-# in (CORRECTNESS_r17, 50/50 green, 0 errs). Exposure follows VERDICT
-# r17 "Next round" item 2 — every r17-optimizer-touched row whose
-# physical plan changed carries only builder sweeps, so ALL of them
-# enter the window FIRST: q140, q152-q161, q163-q166, q168, q169,
-# q174, q177, q180 (the #2/#3/#4 mechanisms) plus q90 (the #7 star-CC
-# distinct removal rides connected_components_star). Then the r18
-# optimization diff's own touched rows, exposed BEFORE the code lands
-# (the r16/r17 precedent): the dedup family q64-q69/q90/q91 (jaccard
-# group-enumerate restructure + shingle fan_out, window df cap, lazy
-# CC checkpoints — dedup.py), q107 (single-pass decontamination agg),
-# q144 (one-scan bloom bits), q168 (literal c0 map), q172/q176
-# (registered bpe_adjacent_pairs trainer), q162/q134 (profiled this
-# round; exposed pre-emptively in case the profile motivates an edit).
-# Window arithmetic: 34 exposed + 16 verified-head fill = the 50-row
-# driver sample; 151 rows stay verified on re-recorded fingerprints
-# (the r18 diff touches shared modules — sources/tables.py fan_out
-# probe, functions/bpe.py, operators/dedup.py — so untouched-path
-# rows like q143/q73/q70 drift fingerprints; deliberate re-record
-# class, backed by the full-registry sf0.01 engine-vs-DuckDB sweeps
-# run after every r18 change batch, MISMATCHES: none).
-_DRIVER_VERIFIED: frozenset[str] = frozenset(
-    {
-        "q01_filter_pushdown",
-        "q02_projection_pruning",
-        "q03_select_star",
-        "q04_alias_expressions",
-        "q05_where_and_or",
-        "q06_in_list",
-        "q07_not_in_list",
-        "q08_null_predicates",
-        "q09_where_bool_literal",
-        "q100_engine_rowset",
-        "q101_geojson_roundtrip",
-        "q102_geojson_sink_roundtrip",
-        "q103_stratified_sample",
-        "q104_language_quota",
-        "q105_mixture_weights",
-        "q106_sequence_packing",
-        "q108_kml_roundtrip",
-        "q109_tfidf_top_terms",
-        "q10_between_range",
-        "q110_repetition_metrics",
-        "q111_centroid_outliers",
-        "q112_window_lag_lead",
-        "q113_window_distribution",
-        "q114_compat_flattened",
-        "q115_ann_quantized_topk",
-        "q116_trailing_range_window",
-        "q117_approx_percentiles",
-        "q118_bucketed_join",
-        "q119_cohort_retention",
-        "q11_join_inner_equi",
-        "q120_event_funnel",
-        "q121_catalog_tables",
-        "q122_st_relations",
-        "q123_stream_tumbling_e2e",
-        "q124_st_union_agg",
-        "q125_document_chunking",
-        "q126_pii_redaction",
-        "q127_url_domains",
-        "q128_st_simplify",
-        "q129_st_snaptogrid",
-        "q12_join_theta",
-        "q130_st_transform",
-        "q131_st_azimuth",
-        "q132_audio_features",
-        "q133_resize_images",
-        "q135_cms_heavy_hitters",
-        "q136_image_dhash_neardup",
-        "q137_stream_session_e2e",
-        "q138_stream_interval_join_e2e",
-        "q139_st_intersection",
-        "q13_join_left_outer",
-        "q141_boilerplate_removal",
-        "q142_stream_dedup_e2e",
-        "q143_kmeans_assign",
-        "q145_inverted_index",
-        "q146_st_symdifference",
-        "q147_stream_stateful_totals_e2e",
-        "q148_st_affine",
-        "q149_st_linework",
-        "q14_join_right_outer",
-        "q150_st_accessors",
-        "q151_st_boundary",
-        "q15_join_full_outer",
-        "q167_video_frames",
-        "q16_join_multiway",
-        "q170_bm25_search",
-        "q171_bigram_perplexity",
-        "q173_y4m_frames",
-        "q175_st_asmvt",
-        "q178_st_surface3d",
-        "q179_substring_dedup",
-        "q17_natural_join",
-        "q181_fuzzy_match",
-        "q182_shapefile_roundtrip",
-        "q183_gpx_roundtrip",
-        "q184_spatial_partition_pruning",
-        "q185_st_inspection",
-        "q186_st_worked_examples",
-        "q18_semi_join_in_subquery",
-        "q19_anti_join_not_exists",
-        "q20_lateral_explode",
-        "q21_count_groupby",
-        "q22_agg_global",
-        "q23_agg_pricing_summary",
-        "q24_having",
-        "q25_distinct",
-        "q26_rollup",
-        "q27_orderby_limit_topk",
-        "q28_union_all",
-        "q29_intersect",
-        "q30_except",
-        "q31_window_rank",
-        "q32_window_running_sum",
-        "q33_subquery_from",
-        "q34_scalar_subquery",
-        "q35_correlated_exists",
-        "q36_date_functions",
-        "q37_mod_function",
-        "q38_string_functions",
-        "q39_case_expression",
-        "q40_math_functions",
-        "q41_st_point_accessors",
-        "q42_st_astext",
-        "q43_st_distance_radius",
-        "q44_spatial_join_within",
-        "q45_spatial_join_intersects",
-        "q46_st_area_props",
-        "q47_dwithin_pairs",
-        "q48_distance_sphere_count",
-        "q49_st_asgeojson",
-        "q50_st_geomfromtext",
-        "q51_st_geomfromgeojson",
-        "q52_centroid_perimeter",
-        "q53_buffer_contains",
-        "q54_cube",
-        "q55_grouping_sets",
-        "q56_pivot",
-        "q57_count_distinct_multi",
-        "q58_approx_count_distinct",
-        "q59_st_geomfromgml_kml",
-        "q60_token_count",
-        "q61_quality_score",
-        "q62_language_id",
-        "q63_fingerprint",
-        "q70_ann_bruteforce_topk",
-        "q71_ann_lsh_buckets",
-        "q72_ann_lsh_topk",
-        "q73_ann_ivf_topk",
-        "q75_tumbling_window",
-        "q76_sliding_window",
-        "q77_sessionize",
-        "q78_keyed_dedup_first",
-        "q79_json_props",
-        "q80_multimodal_metadata",
-        "q81_multimodal_features",
-        "q82_frame_sample",
-        "q83_asof_join",
-        "q84_range_join_banded",
-        "q85_st_extent_agg",
-        "q86_skew_salted_join",
-        "q87_percentiles",
-        "q88_levenshtein_neardup",
-        "q89_gap_fill_spine",
-        "q92_hash_sample",
-        "q93_train_val_test_split",
-        "q94_multipart_gml_ingest",
-        "q95_st_collect_agg",
-        "q96_event_attribution",
-        "q97_knn_within_radius",
-        "q98_hull_envelope",
-        "q99_xml_roundtrip",
-    }
-)
+# The driver's per-round correctness check covers the first 50 queries
+# in exposure order. A query is verified while its key is in
+# _verified_fingerprints.json, whose fingerprint pins the source it was
+# verified against (staleness.py; tests/test_registry.py fails on
+# drift). Unverified queries are exposed first, then the verified ones,
+# each in registration order. To re-expose a query, delete its key; to
+# mark one verified after a green driver row, add its key and re-record.
+# Read here, not through staleness.py: that module imports every
+# operator module, so importing it would put all of them in every
+# query's fingerprint closure.
+VERIFIED_JSON = os.path.join(os.path.dirname(__file__), "_verified_fingerprints.json")
+with open(VERIFIED_JSON, encoding="utf-8") as _fh:
+    _DRIVER_VERIFIED: frozenset[str] = frozenset(json.load(_fh))
 
 
 def _exposure_order() -> list[str]:
@@ -798,12 +60,17 @@ def query(name: str, oracle: str | None = None):
 
         # Entry hook: drop the previous query's tracked persists (see
         # caching.py) so sequential multi-query runs (the driver's
-        # correctness sweep) hold at most one query's intermediates.
+        # correctness sweep) hold at most one query's intermediates,
+        # and register every SQL function family on the session (once
+        # per session), so a vanilla caller-supplied session works.
         # The ORIGINAL fn is returned/used for in-package helper calls,
         # so a query composing another query's body never releases its
         # own caches mid-plan.
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            from ..functions.families import register_all
+
             release_tracked()
+            register_all(spark)
             return fn(spark, sf_dir)
 
         wrapped.__doc__ = fn.__doc__

@@ -39,16 +39,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.relate import register_relate_functions
-    from ..functions.spatial import register_spatial_functions
-    from ..functions.validity import register_validity_functions
-
-    register_spatial_functions(spark)  # st_area over makevalid results
-    register_relate_functions(spark)
-    register_validity_functions(spark)
-
-
 def _pt(xe: str, ye: str) -> str:
     return f"{int_str(xe)} || ' ' || {int_str(ye)}"
 
@@ -201,7 +191,6 @@ def q156_st_relate_isvalid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12 ST_Relate (full DE-9IM matrix), ST_RelateMatch, ST_IsValid and
     ST_IsValidReason over per-box fixture topologies with literal
     expected strings (module docstring)."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), _FAMILIES)
 
 
@@ -322,5 +311,4 @@ def q157_st_makevalid(spark: SparkSession, sf_dir: str) -> DataFrame:
     forms as micro-ints), valid/dup-vertex echoes, the diagonal
     bowtie's two triangles (VERDICT r10 item 3), the crossing-hole
     documented loud NULL, and st_isvalid over rebuilt results."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), _Q157_FAMILIES)

@@ -52,14 +52,6 @@ from .spatial_ops import (
 )
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.relations import register_relation_functions
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-    register_relation_functions(spark)
-
-
 def _fmt_num(c):
     """Print an integer-valued double the way the WKT serializer does
     (no trailing .0); box corners here are always multiples of 5."""
@@ -189,7 +181,6 @@ def q122_st_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop over tiny sides feeding the vectorized predicates —
     at scale the box side stays the broadcast dim exactly like
     q44/q45."""
-    _ensure_udfs(spark)
     a = _with_geoms(nation_boxes(spark, sf_dir)).select(
         F.col("n_nationkey").alias("k1"),
         F.col("geom").alias("geom_a"),

@@ -92,10 +92,8 @@ _Q182_ORACLE = """
 @query("q182_shapefile_roundtrip", oracle=_Q182_ORACLE)
 def q182_shapefile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shapefile source end to end (module docstring fixture)."""
-    from ..functions.spatial import register_spatial_functions
     from ..sources.shapefile import read_shapefile
 
-    register_spatial_functions(spark)
     rows = sorted(
         load_table(spark, sf_dir, "nation")
         .select("n_nationkey", "n_regionkey", "n_name")

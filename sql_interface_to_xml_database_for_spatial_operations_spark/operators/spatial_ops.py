@@ -116,12 +116,6 @@ def _pts(spark, sf_dir, with_geom=True) -> DataFrame:
     return df
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.spatial import register_spatial_functions
-
-    register_spatial_functions(spark)
-
-
 # ---------------------------------------------------------------------------
 # Queries
 # ---------------------------------------------------------------------------
@@ -140,7 +134,6 @@ def q41_st_point_accessors(spark, sf_dir):
     """F6/F5 + accessors: build WKT points, read back x/y/srid/type through
     the UDF path (reference: geo:srid basex_extension.ts:78,
     geometry-type 432-436)."""
-    _ensure_udfs(spark)
     return _pts(spark, sf_dir).select(
         "c_custkey",
         F.expr("st_x(geom)").alias("x"),
@@ -162,7 +155,6 @@ def q41_st_point_accessors(spark, sf_dir):
 def q42_st_astext(spark, sf_dir):
     """F7/F9: WKT serialization (reference: geo:as-text,
     basex_extension.ts:50-52; ST_AsText regexes 143-148)."""
-    _ensure_udfs(spark)
     return _pts(spark, sf_dir).select("c_custkey", F.expr("st_astext(geom)").alias("wkt"))
 
 
@@ -179,7 +171,6 @@ def q43_st_distance_radius(spark, sf_dir):
     """F1: ST_Distance(g, const) θ c — the reference's flagship pushdown
     predicate (basex regex 156-161; mongo $near/$maxDistance 47-51,
     129-152). Planar units, honest semantics (no 111.32 hack)."""
-    _ensure_udfs(spark)
     d = F.expr("st_distance(geom, 'POINT (0 0)')")
     return (
         _pts(spark, sf_dir)
@@ -206,7 +197,6 @@ def q44_spatial_join_within(spark, sf_dir):
     broadcast (25 rows vs millions of points at scale). r10: st_within
     is now OGC-strict (boundary points excluded — the ST_Covers
     distinction), so the oracle uses strict inequalities."""
-    _ensure_udfs(spark)
     pts = _pts(spark, sf_dir)
     boxes = nation_boxes(spark, sf_dir).withColumn(
         "box_geom", F.expr("st_makeenvelope(minx, miny, maxx, maxy)")
@@ -237,7 +227,6 @@ def q45_spatial_join_intersects(spark, sf_dir):
     """F3: ST_Intersects polygon×polygon join (reference:
     geo:intersects, basex_extension.ts:403-411 — BaseX 9.7 only).
     bbox-overlap candidates JVM-side, exact predicate in the UDF."""
-    _ensure_udfs(spark)
     nb = nation_boxes(spark, sf_dir).withColumnRenamed("minx", "nminx").withColumnRenamed(
         "miny", "nminy"
     ).withColumnRenamed("maxx", "nmaxx").withColumnRenamed("maxy", "nmaxy")
@@ -269,7 +258,6 @@ def q45_spatial_join_intersects(spark, sf_dir):
 def q46_st_area_props(spark, sf_dir):
     """F4/F5 + ST_Area: polygon measures (reference: geo:dimension
     basex_extension.ts:415-438; ST_Area was PG-only — F12)."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir).withColumn(
         "box_geom", F.expr("st_makeenvelope(minx, miny, maxx, maxy)")
     )
@@ -308,7 +296,6 @@ def q47_dwithin_pairs(spark, sf_dir):
     residuals prune JVM-side; the distance UDF sees only candidates —
     O(candidates) instead of the reference's O(n·m) XQuery nested loop
     (BASELINE.md: 5-10 min at 40k rows)."""
-    _ensure_udfs(spark)
     return (
         _grid_candidates(spark, sf_dir, DWITHIN_DIST)
         .filter((F.col("nk1") == F.col("nk2")) & (F.col("custkey1") < F.col("custkey2")))
@@ -384,7 +371,6 @@ def q48_distance_sphere_count(spark, sf_dir):
     """ST_DistanceSphere: honest haversine meters (replacing the
     reference's degrees×111.32 km heuristic, mongo_extension.ts:142-151).
     Customers within 2,000 km of POINT(10 10), counted per nation."""
-    _ensure_udfs(spark)
     return (
         _pts(spark, sf_dir)
         .filter(F.expr("st_distance_sphere('POINT (10 10)', geom)") <= 2000000.0)
@@ -405,7 +391,6 @@ def q48_distance_sphere_count(spark, sf_dir):
 def q49_st_asgeojson(spark, sf_dir):
     """S10/F12: GeoJSON output (reference: convertRestoGeoJSON,
     src/index.ts:323-347)."""
-    _ensure_udfs(spark)
     return (
         _pts(spark, sf_dir)
         .filter(F.col("c_custkey") < 100)
@@ -425,7 +410,6 @@ def q49_st_asgeojson(spark, sf_dir):
 def q50_st_geomfromtext(spark, sf_dir):
     """F8: WKT ingestion with messy input — lowercase tag + stray spaces,
     JVM-concatenated, normalized by st_geomfromtext∘st_astext."""
-    _ensure_udfs(spark)
     messy = F.concat(
         F.lit("  point( "),
         F.col("lon").cast("string"),
@@ -453,7 +437,6 @@ def q50_st_geomfromtext(spark, sf_dir):
 def q51_st_geomfromgeojson(spark, sf_dir):
     """F8: GeoJSON geometry ingestion (reference: json_extension.ts:131-158)
     — JVM-built Feature JSON parsed back to WKT by the UDF."""
-    _ensure_udfs(spark)
     gj = F.concat(
         F.lit('{"type":"Feature","properties":{},"geometry":{"type":"Point","coordinates":['),
         F.col("lon").cast("string"),
@@ -483,7 +466,6 @@ def q52_centroid_perimeter(spark, sf_dir):
     """F12: ST_Centroid + ST_Perimeter over polygon rings (PG-side in the
     reference; st_length is line-only for PostGIS parity since r7). Box
     coords are integer-valued doubles → exact."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir).withColumn(
         "box_geom", F.expr("st_makeenvelope(minx, miny, maxx, maxy)")
     )
@@ -510,7 +492,6 @@ def q53_buffer_contains(spark, sf_dir):
     PostGIS's quad_segs=8 uses). The oracle uses the closed-form n-gon
     area ½·n·r²·sin(2π/n); shoelace over the generated vertices must
     agree to <1e-12. Lines/polygons/erosion are gated by q155."""
-    _ensure_udfs(spark)
     return (
         customer_points(spark, sf_dir)
         .filter(F.col("c_custkey") < 100)
@@ -539,7 +520,6 @@ def q59_st_geomfromgml_kml(spark, sf_dir):
     ST_GeomFromKML). JVM-concatenated GML 3 <gml:Point><gml:pos> and KML
     <Point><coordinates> fragments are parsed back to WKT by the UDFs;
     both must round-trip to the same point."""
-    _ensure_udfs(spark)
     gml = F.concat(
         F.lit("<gml:Point srsName=\"EPSG:4326\"><gml:pos>"),
         F.col("lon").cast("string"),
@@ -588,7 +568,6 @@ def q85_st_extent_agg(spark, sf_dir):
     of its geometries. A GROUPED_AGG pandas UDF would NOT get this:
     Spark plans those as AggregateInPandas after a full shuffle of every
     group row — the wrong plan at 100 TB."""
-    _ensure_udfs(spark)
     pts = _pts(spark, sf_dir)
     return (
         pts.select(
@@ -660,7 +639,6 @@ def q94_multipart_gml_ingest(spark, sf_dir):
     the closed forms over BOTH boxes, so a first-part-only reader fails.
     The fragment build is JVM concat; only the parse+measure UDFs run
     Python (Arrow-vectorized)."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir)
     gml = _archipelago_gml()
     return (
@@ -695,7 +673,6 @@ def q95_st_collect_agg(spark, sf_dir):
     concat_ws — partial aggregation applies, no Python in the aggregate;
     the built WKT then round-trips st_geomfromtext→st_geometrytype to
     prove the engine parses its own large multi-part output."""
-    _ensure_udfs(spark)
     pts = customer_points(spark, sf_dir)
 
     def fmt_num(c):
@@ -760,7 +737,6 @@ def q97_knn_within_radius(spark, sf_dir):
     The radius filter uses the RAW distance; rounding happens only in the
     output column — same WHERE-then-round order as the oracle, so a true
     distance in (3.0, 3.0000005) is excluded by both engines (ADVICE r2)."""
-    _ensure_udfs(spark)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("custkey1").orderBy(F.col("dist").asc(), F.col("custkey2").asc())
@@ -802,7 +778,6 @@ def q98_hull_envelope(spark, sf_dir):
     D(0,4) in local coords, so its shoelace area has the closed form
     44 + 5h + 4w + wh the oracle computes — a wrong hull (missed part,
     wrong chain) breaks area AND vertex count."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir)
     return (
         boxes.withColumn("gml", _archipelago_gml())

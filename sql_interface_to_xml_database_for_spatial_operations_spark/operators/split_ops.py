@@ -34,16 +34,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.accessors import register_accessor_functions
-    from ..functions.spatial import register_spatial_functions
-    from ..functions.split import register_split_functions
-
-    register_spatial_functions(spark)  # st_area / st_length
-    register_accessor_functions(spark)  # st_numgeometries
-    register_split_functions(spark)
-
-
 def _pt(xe: str, ye: str) -> str:
     return f"{int_str(xe)} || ' ' || {int_str(ye)}"
 
@@ -151,5 +141,4 @@ _Q166_ORACLE = "\nUNION ALL\n".join(
 def q166_st_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12 ST_Split: exact cross-noding line cuts and half-edge face
     splits with conservation oracles (module docstring)."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), _FAMILIES)

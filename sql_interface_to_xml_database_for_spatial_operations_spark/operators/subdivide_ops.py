@@ -29,14 +29,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.spatial import register_spatial_functions
-    from ..functions.subdivide import register_subdivide_functions
-
-    register_spatial_functions(spark)  # st_area / st_npoints over pieces
-    register_subdivide_functions(spark)
-
-
 # dense bottom edge: one vertex every 3 units of x (Spark built-ins
 # only — UDFs are not allowed inside higher-order-function lambdas).
 # Box widths are 30/45/60, all divisible by 3, so the chain ends
@@ -71,7 +63,6 @@ def q162_st_subdivide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.tables import fan_out
 
-    _ensure_udfs(spark)
     # fan_out (r18, guide §2.5): the exact-Fraction subdivide kernel ran
     # all 25 boxes in the single-file fixture's one scan task;
     # interleaved A/B at sf0.1: med 1.01 -> 0.79 s. No-op on inputs

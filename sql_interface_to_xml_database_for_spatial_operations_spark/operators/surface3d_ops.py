@@ -52,20 +52,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.extrude import register_extrude_functions
-    from ..functions.measure_m import register_measure_m_functions
-    from ..functions.surface3d import register_surface3d_functions
-    from ..functions.wkb import register_wkb_functions
-    from ..functions.zcoord import register_zcoord_functions
-
-    register_surface3d_functions(spark)
-    register_wkb_functions(spark)  # the surface WKB round trip (wkb3d)
-    register_extrude_functions(spark)  # st_extrude / st_tesselate
-    register_measure_m_functions(spark)  # st_zmflag (r17 M/ZM families)
-    register_zcoord_functions(spark)  # st_ndims (r17 mwkb family)
-
-
 _K = "n_nationkey"
 _A = f"(1 + {_K} % 4)"  # box is 2a wide, a deep
 _H = f"(1 + {_K} % 3)"  # box height
@@ -274,7 +260,6 @@ def q178_st_surface3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     Newell 3-D area, divergence-theorem volume on the closed box, the
     open-surface fence, and the filtered-exact ST_3DIntersects
     (module docstring fixtures)."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir)
 
     # r17 optimization: each fam() is one branch of a single-analysis

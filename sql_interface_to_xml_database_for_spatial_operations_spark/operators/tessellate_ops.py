@@ -41,16 +41,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.accessors import register_accessor_functions
-    from ..functions.spatial import register_spatial_functions
-    from ..functions.tessellate import register_tessellate_functions
-
-    register_spatial_functions(spark)
-    register_accessor_functions(spark)  # st_numgeometries
-    register_tessellate_functions(spark)
-
-
 def _pt(xe: str, ye: str) -> str:
     return f"{int_str(xe)} || ' ' || {int_str(ye)}"
 
@@ -211,5 +201,4 @@ def q165_st_tessellate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12 tessellation family: exact-predicate Bowyer-Watson Delaunay
     and all-pairs half-plane Voronoi with string-built / closed-form
     oracles (module docstring)."""
-    _ensure_udfs(spark)
     return family_rows(nation_boxes(spark, sf_dir), _FAMILIES)

@@ -58,13 +58,6 @@ from ..functions import bpe as B
 _MAX_TRAIN_MERGES = 64  # driver rounds over the word table — loud budget
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.textnorm import register_textnorm_functions
-
-    B.register_bpe_functions(spark)
-    register_textnorm_functions(spark)  # NFC/strip-accents (r14)
-
-
 def _serialize_merges(merges: list[tuple[str, str]]) -> str:
     # sides %XX-escape format-colliding bytes (commas, latin-1
     # whitespace like 0xA0, '%'): trained merges on real text must
@@ -184,7 +177,6 @@ def q172_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.tables import load_table
 
-    _ensure_udfs(spark)
     ks = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("k"),
         (F.lit(3) + F.col("n_nationkey") % 5).alias("m"),

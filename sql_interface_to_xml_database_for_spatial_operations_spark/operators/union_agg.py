@@ -65,16 +65,6 @@ _BOXES_SQL = f"""
 """
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.cluster_geo import register_cluster_geo_functions
-    from ..functions.spatial import register_spatial_functions
-    from ..functions.union_ops import register_union_functions
-
-    register_spatial_functions(spark)
-    register_union_functions(spark)
-    register_cluster_geo_functions(spark)
-
-
 def _partial_union(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Per-batch per-group partial union (stage 1 of the cascade).
 
@@ -194,7 +184,6 @@ def q124_st_union_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     boxes into one geometry, then measure it. Two-level cascade (module
     docstring): partition-local partial unions via mapInPandas, then one
     final union of partials per group."""
-    _ensure_udfs(spark)
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
     boxes = (
         nation_boxes(spark, sf_dir)

@@ -54,16 +54,6 @@ from .registry import query
 from .spatial_ops import NATION_BOXES_SQL, nation_boxes
 
 
-def _ensure_udfs(spark: SparkSession) -> None:
-    from ..functions.measure_m import register_measure_m_functions
-    from ..functions.wkb import register_wkb_functions
-    from ..functions.zcoord import register_zcoord_functions
-
-    register_zcoord_functions(spark)
-    register_measure_m_functions(spark)  # st_zmflag / st_m / locatebetween
-    register_wkb_functions(spark)  # the Z round trip
-
-
 # closed-form integer parameters
 _K = "n_nationkey"
 _A = f"(1 + {_K} % 4)"  # scales (3,4,12): |v| = 13a
@@ -228,7 +218,6 @@ def q174_st_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z (3-D) coordinates end to end: accessors, force casts, 3-D
     length/distance closed forms, ZM measure carry, the WKB Z round
     trip, and the loud-NULL fence (module docstring)."""
-    _ensure_udfs(spark)
     boxes = nation_boxes(spark, sf_dir)
 
     # r17 optimization: each fam() is one branch of a single-analysis

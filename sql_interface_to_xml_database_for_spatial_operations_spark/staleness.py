@@ -1,22 +1,23 @@
-"""Source fingerprints for the driver-verification rotation.
+"""Source fingerprints for the driver-verified query set.
 
-The rotation rule (operators/registry.py ``_DRIVER_VERIFIED``) is: a
-query may only stay marked verified-green while the code it depends on
-is byte-identical to what the driver verified. Rounds 1-3 enforced this
-by hand, and round 3's diff showed why that fails: helper changes
-(``_parse_series`` memoization, ``load_table`` conf) slipped under
-still-green spatial queries (VERDICT r3 #1 / ADVICE r3).
+A query counts as verified while its name is a key of
+``operators/_verified_fingerprints.json``: that key set IS
+``operators/registry.py``'s ``_DRIVER_VERIFIED``, and verified queries
+are exposed to the driver after the unverified ones. A query may only
+stay verified while the code it depends on is byte-identical to what
+the driver verified.
 
-This module automates it. A query's **fingerprint** is a hash over the
-source of its defining module plus every package module that module
-transitively imports (module granularity — coarser than a call graph,
-so it can only over-flag, never under-flag). Fingerprints recorded at
-verification time live in ``operators/_verified_fingerprints.json``;
-``tests/test_registry.py`` fails whenever a ``_DRIVER_VERIFIED`` entry's
-current fingerprint drifts from its recorded one, forcing the diff
-author to either re-expose the query or deliberately re-record (a
-visible act in the JSON's git diff — e.g. for result-invariant infra
-like the cache-release hook).
+A query's **fingerprint** is a hash over the source of its defining
+module plus every package module that module transitively imports
+(module granularity — coarser than a call graph, so it can only
+over-flag, never under-flag). Every query module imports the registry,
+whose entry hook imports the whole function library, so every closure
+holds all function modules; a query's fingerprint differs from
+another's only through its operator-side modules.
+``tests/test_registry.py`` fails whenever a verified query's current
+fingerprint drifts from its recorded one. The diff author then either
+re-exposes the query (deletes its key) or deliberately re-records (a
+visible act in the JSON's git diff, for result-invariant changes).
 
 Record/refresh:  python -m sql_interface_to_xml_database_for_spatial_operations_spark.staleness
 """
@@ -30,7 +31,6 @@ import os
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _PKG_NAME = os.path.basename(_PKG_DIR)
-FINGERPRINT_PATH = os.path.join(_PKG_DIR, "operators", "_verified_fingerprints.json")
 
 
 def _package_modules() -> dict[str, str]:
@@ -135,28 +135,28 @@ def current_fingerprints() -> dict[str, str]:
 
 
 def recorded_fingerprints() -> dict[str, str]:
-    if not os.path.exists(FINGERPRINT_PATH):
-        return {}
-    with open(FINGERPRINT_PATH, encoding="utf-8") as fh:
+    from .operators import registry
+
+    with open(registry.VERIFIED_JSON, encoding="utf-8") as fh:
         return json.load(fh)
 
 
 def record() -> dict[str, str]:
-    """(Re)record fingerprints for the queries currently marked verified.
-    Run this when updating ``_DRIVER_VERIFIED`` after a driver round, or
-    to deliberately accept a result-invariant infra change."""
+    """Re-record the fingerprint of every query the JSON lists. Run this
+    after adding a newly verified query's key, or to deliberately accept
+    a result-invariant change."""
     from .operators import registry
 
     cur = current_fingerprints()
-    data = {n: cur[n] for n in sorted(registry._DRIVER_VERIFIED)}
-    with open(FINGERPRINT_PATH, "w", encoding="utf-8") as fh:
+    data = {n: cur[n] for n in sorted(recorded_fingerprints())}
+    with open(registry.VERIFIED_JSON, "w", encoding="utf-8") as fh:
         json.dump(data, fh, indent=1, sort_keys=True)
         fh.write("\n")
     return data
 
 
 if __name__ == "__main__":
-    from .operators import load_all
+    from .operators import load_all, registry
 
     load_all()  # registration side effects populate the registry
-    print(f"recorded {len(record())} fingerprints -> {FINGERPRINT_PATH}")
+    print(f"recorded {len(record())} fingerprints -> {registry.VERIFIED_JSON}")

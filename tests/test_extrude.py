@@ -14,6 +14,9 @@ from sql_interface_to_xml_database_for_spatial_operations_spark.functions import
     geometry as G,
 )
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
+    accessors as A,
+)
+from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
     surface3d as S,
 )
 
@@ -26,29 +29,29 @@ def test_extrude_box_exact():
     assert e.startswith("POLYHEDRALSURFACE Z")
     assert S.volume_wkt(e) == 48.0
     assert S.area3d_wkt(e) == 80.0  # 2·16 + 16·3
-    assert S.is_closed_any(e) is True
+    assert A.is_closed(e) is True
 
 
 def test_extrude_holed_exact():
     e = X.extrude_wkt(_HOLED, 0, 0, 2)
     assert S.volume_wkt(e) == 24.0  # (16 − 4)·2
     assert S.area3d_wkt(e) == 72.0  # 2·12 + (16 + 8)·2
-    assert S.is_closed_any(e) is True
+    assert A.is_closed(e) is True
 
 
 def test_extrude_negative_and_oblique():
     assert S.volume_wkt(X.extrude_wkt(_SQ, 0, 0, -3)) == 48.0
-    assert S.is_closed_any(X.extrude_wkt(_SQ, 0, 0, -3)) is True
+    assert A.is_closed(X.extrude_wkt(_SQ, 0, 0, -3)) is True
     # shear does not change the volume (divergence theorem)
     e = X.extrude_wkt(_SQ, 7, -2, 3)
     assert S.volume_wkt(e) == 48.0
-    assert S.is_closed_any(e) is True
+    assert A.is_closed(e) is True
 
 
 def test_extrude_orientation_insensitive_to_input_winding():
     cw = "POLYGON ((0 0, 0 4, 4 4, 4 0, 0 0))"  # clockwise input
     e = X.extrude_wkt(cw, 0, 0, 3)
-    assert S.volume_wkt(e) == 48.0 and S.is_closed_any(e) is True
+    assert S.volume_wkt(e) == 48.0 and A.is_closed(e) is True
 
 
 def test_extrude_gates():
@@ -81,7 +84,7 @@ def test_extrude_fuzz_volume_matches_area():
         h = rng.uniform(0.5, 4) * rng.choice([1, -1])
         e = X.extrude_wkt(G.to_wkt(g), rng.uniform(-2, 2), rng.uniform(-2, 2), h)
         assert e is not None
-        assert S.is_closed_any(e) is True
+        assert A.is_closed(e) is True
         assert abs(S.volume_wkt(e) - area * abs(h)) < 1e-9 * max(
             1.0, area * abs(h)
         )

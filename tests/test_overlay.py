@@ -12,11 +12,11 @@ from hypothesis import strategies as st
 
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import geometry as G
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions.geometry import Geometry
+from sql_interface_to_xml_database_for_spatial_operations_spark.functions.families import register_all
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import union_ops as U
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions.overlay import (
     difference_wkt,
     intersection_wkt,
-    register_overlay_functions,
     symdifference_wkt,
 )
 from sql_interface_to_xml_database_for_spatial_operations_spark.operators import load_all
@@ -545,7 +545,7 @@ def _vertices_of(g):
 
 class TestSqlSurface:
     def test_st_intersection_sql(self, spark):
-        register_overlay_functions(spark)
+        register_all(spark)
         row = spark.sql(
             "SELECT st_area(st_intersection("
             "'POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))', "
@@ -558,7 +558,7 @@ class TestSqlSurface:
         assert row.d == 75.0
 
     def test_null_propagates(self, spark):
-        register_overlay_functions(spark)
+        register_all(spark)
         row = spark.sql(
             "SELECT st_intersection(NULL, 'POINT (0 0)') AS i, "
             "st_difference('POINT (0 0)', NULL) AS d"

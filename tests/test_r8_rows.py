@@ -172,15 +172,11 @@ class TestAffine:
     def test_vanilla_session_registration(self, spark):
         # builtin-shadowing probe (verify-skill gotcha): the names must
         # resolve through spark.sql after registration alone
-        from sql_interface_to_xml_database_for_spatial_operations_spark.functions.affine import (
-            register_affine_functions,
-        )
-        from sql_interface_to_xml_database_for_spatial_operations_spark.functions.overlay import (
-            register_overlay_functions,
+        from sql_interface_to_xml_database_for_spatial_operations_spark.functions.families import (
+            register_all,
         )
 
-        register_affine_functions(spark)
-        register_overlay_functions(spark)
+        register_all(spark)
         row = spark.sql(
             "SELECT st_translate('POINT (1 2)', 1.0D, 1.0D) AS t, "
             "st_symdifference('POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))', "

@@ -10,6 +10,9 @@ import random
 from fractions import Fraction
 
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
+    accessors as A,
+)
+from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
     surface3d as S,
 )
 
@@ -71,12 +74,12 @@ class TestAreaVolume:
     def test_cube(self):
         assert S.area3d_wkt(CUBE) == 6.0
         assert S.volume_wkt(CUBE) == 1.0
-        assert S.is_closed_any(CUBE) is True
+        assert A.is_closed(CUBE) is True
         assert S.num_patches(CUBE) == 6
 
     def test_open_surface(self):
         open_s = "POLYHEDRALSURFACE Z (((0 0 0, 0 1 0, 1 1 0, 1 0 0, 0 0 0)))"
-        assert S.is_closed_any(open_s) is False
+        assert A.is_closed(open_s) is False
         assert S.volume_wkt(open_s) is None
         assert S.area3d_wkt(open_s) == 1.0
 
@@ -103,7 +106,7 @@ class TestAreaVolume:
             "((0 0 0, 0 0 1, 0 1 0, 0 0 0)), "
             "((1 0 0, 0 1 0, 0 0 1, 1 0 0)))"
         )
-        assert S.is_closed_any(tet) is True
+        assert A.is_closed(tet) is True
         assert abs(S.volume_wkt(tet) - 1.0 / 6.0) < 1e-15
 
     def test_volume_translation_invariant(self):
@@ -152,8 +155,8 @@ class TestPatches:
         assert S.num_patches("POLYGON ((0 0, 1 0, 1 1, 0 0))") is None
 
     def test_isclosed_delegates_lineal(self):
-        assert S.is_closed_any("LINESTRING (0 0, 1 0, 1 1, 0 0)") is True
-        assert S.is_closed_any("LINESTRING (0 0, 1 0, 1 1)") is False
+        assert A.is_closed("LINESTRING (0 0, 1 0, 1 1, 0 0)") is True
+        assert A.is_closed("LINESTRING (0 0, 1 0, 1 1)") is False
 
 
 class TestIntersects3D:
@@ -253,7 +256,7 @@ class TestVolumeOrientationFreedom:
         kind, has_z, patches = S.parse_surface_wkt(CUBE)
         patches = [[list(reversed(r)) for r in rings] for rings in patches]
         w = S.to_surface_wkt(kind, has_z, patches)
-        assert S.is_closed_any(w) is True
+        assert A.is_closed(w) is True
         assert S.volume_wkt(w) == 1.0
 
 
@@ -267,7 +270,7 @@ class TestVolumeOrientationGate:
         flipped = [list(map(list, rings)) for rings in patches]
         flipped[1] = [list(reversed(flipped[1][0]))]
         w = S.to_surface_wkt(kind, has_z, flipped)
-        assert S.is_closed_any(w) is True  # undirected edges still pair
+        assert A.is_closed(w) is True  # undirected edges still pair
         assert S.volume_wkt(w) is None  # mixed winding — loud
         assert S.volume_wkt(CUBE) == 1.0  # the consistent mesh still answers
 
@@ -332,7 +335,7 @@ class TestDimsClosureMZm:
         sq = "(0 0 1, 1 0 1, 1 1 1, 0 1 1, 0 0 1)"
         rq = "(0 0 9, 0 1 9, 1 1 9, 1 0 9, 0 0 9)"
         pillow = f"POLYHEDRALSURFACE M (({sq}), ({rq}))"
-        assert S.is_closed_any(pillow) is True
+        assert A.is_closed(pillow) is True
         assert S.volume_wkt(pillow) == 0.0
 
     def test_patchn_keeps_dims(self):

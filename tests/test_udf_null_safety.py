@@ -1,4 +1,4 @@
-"""Every registered st_* UDF must be null-safe: NULL/malformed input
+"""Every registered UDF must be null-safe: NULL/malformed input
 yields NULL (or NaN for numeric outputs), never a raised exception that
 fails the whole query (ADVICE r1: st_makeenvelope was the one outlier).
 """
@@ -9,225 +9,19 @@ import math
 
 import pytest
 
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.bounding import (
-    ALL_BOUNDING_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.bpe import (
-    ALL_BPE_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.collection_fns import (
-    ALL_COLLECTION_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.measures import (
-    ALL_MEASURE_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.relate import (
-    ALL_RELATE_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.relations import (
-    ALL_RELATION_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.validity import (
-    ALL_VALIDITY_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.subdivide import (
-    ALL_SUBDIVIDE_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.noding import (
-    ALL_NODING_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.tessellate import (
-    ALL_TESSELLATE_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.split import (
-    ALL_SPLIT_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.grids import (
-    ALL_GRID_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.cluster_geo import (
-    ALL_CLUSTER_GEO_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.spatial import (
-    ALL_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.projection import (
-    ALL_PROJECTION_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.simplify import (
-    ALL_SIMPLIFY_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.union_ops import (
-    ALL_UNION_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.overlay import (
-    ALL_OVERLAY_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.affine import (
-    ALL_AFFINE_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.linework import (
-    ALL_LINEWORK_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.accessors import (
-    ALL_ACCESSOR_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.linearref import (
-    ALL_LINEARREF_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.editors import (
-    ALL_EDITOR_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.constructors import (
-    ALL_CONSTRUCTOR_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.cells import (
-    ALL_CELL_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.geohash import (
-    ALL_GEOHASH_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.curves import (
-    ALL_CURVE_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.mvt import (
-    ALL_MVT_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.geo_export import (
-    ALL_EXPORT_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.inscribed import (
-    ALL_INSCRIBED_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.spheroid import (
-    ALL_SPHEROID_FUNCTIONS,
+from sql_interface_to_xml_database_for_spatial_operations_spark.functions.families import (
+    FUNCTION_FAMILIES,
 )
 
-# functions/textnorm.py and functions/strsim.py are deliberately NOT
-# swept here: their text_* UDFs take arbitrary TEXT, so "malformed
-# WKT" is a perfectly valid input that scores/normalizes rather than
-# NULLs; their NULL-input behavior is pinned in tests/test_textnorm.py
-# and tests/test_strsim.py instead.
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.measure_m import (
-    ALL_MEASURE_M_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.offsetcurve import (
-    ALL_OFFSET_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.mvt_tile import (
-    ALL_MVT_TILE_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.zcoord import (
-    ALL_ZCOORD_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.surface3d import (
-    ALL_SURFACE3D_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.editors_x import (
-    ALL_EDITORS_X_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.agg_forms import (
-    ALL_AGG_FORM_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.cluster_window import (
-    ALL_CLUSTER_WINDOW_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.misc_fns import (
-    ALL_MISC_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.crossing import (
-    ALL_CROSSING_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.polygon_hull import (
-    ALL_POLYGON_HULL_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.voronoi_lines import (
-    ALL_VORONOI_LINE_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.effective_area import (
-    ALL_EFFECTIVE_AREA_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.ewkt import (
-    ALL_EWKT_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.misc_fns2 import (
-    ALL_MISC2_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.polyline import (
-    ALL_POLYLINE_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.twkb import (
-    ALL_TWKB_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.extrude import (
-    ALL_EXTRUDE_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.svg_export import (
-    ALL_SVG_FUNCTIONS,
-)
-from sql_interface_to_xml_database_for_spatial_operations_spark.functions.minkowski import (
-    ALL_MINKOWSKI_FUNCTIONS,
-)
-
-# Relation predicates (st_touches etc.) are binary WKT→bool like
-# st_within; the default (S, S) / junk-junk argument builders below cover
-# them without per-name entries.
-_SWEPT = {
-    **ALL_FUNCTIONS,
-    **ALL_RELATION_FUNCTIONS,
-    **ALL_RELATE_FUNCTIONS,
-    **ALL_MEASURE_FUNCTIONS,
-    **ALL_BOUNDING_FUNCTIONS,
-    **ALL_COLLECTION_FUNCTIONS,
-    **ALL_VALIDITY_FUNCTIONS,
-    **ALL_SUBDIVIDE_FUNCTIONS,
-    **ALL_NODING_FUNCTIONS,
-    **ALL_TESSELLATE_FUNCTIONS,
-    **ALL_SPLIT_FUNCTIONS,
-    **ALL_GRID_FUNCTIONS,
-    **ALL_CLUSTER_GEO_FUNCTIONS,
-    **ALL_UNION_FUNCTIONS,
-    **ALL_SIMPLIFY_FUNCTIONS,
-    **ALL_PROJECTION_FUNCTIONS,
-    **ALL_OVERLAY_FUNCTIONS,
-    **ALL_AFFINE_FUNCTIONS,
-    **ALL_LINEWORK_FUNCTIONS,
-    **ALL_ACCESSOR_FUNCTIONS,
-    **ALL_LINEARREF_FUNCTIONS,
-    **ALL_EDITOR_FUNCTIONS,
-    **ALL_CONSTRUCTOR_FUNCTIONS,
-    **ALL_BPE_FUNCTIONS,
-    **ALL_GEOHASH_FUNCTIONS,
-    **ALL_OFFSET_FUNCTIONS,
-    **ALL_CELL_FUNCTIONS,
-    **ALL_MEASURE_M_FUNCTIONS,
-    **ALL_INSCRIBED_FUNCTIONS,
-    **ALL_EXPORT_FUNCTIONS,
-    **ALL_SPHEROID_FUNCTIONS,
-    **ALL_CURVE_FUNCTIONS,
-    **ALL_MVT_FUNCTIONS,
-    **ALL_ZCOORD_FUNCTIONS,
-    **ALL_MVT_TILE_FUNCTIONS,
-    **ALL_SURFACE3D_FUNCTIONS,  # after accessors: st_isclosed overload
-    **ALL_EDITORS_X_FUNCTIONS,
-    **ALL_AGG_FORM_FUNCTIONS,
-    **ALL_CLUSTER_WINDOW_FUNCTIONS,
-    **ALL_MISC_FUNCTIONS,
-    **ALL_CROSSING_FUNCTIONS,
-    **ALL_POLYGON_HULL_FUNCTIONS,
-    **ALL_VORONOI_LINE_FUNCTIONS,
-    **ALL_EFFECTIVE_AREA_FUNCTIONS,
-    **ALL_EWKT_FUNCTIONS,
-    **ALL_MISC2_FUNCTIONS,
-    **ALL_POLYLINE_FUNCTIONS,
-    **ALL_TWKB_FUNCTIONS,
-    **ALL_EXTRUDE_FUNCTIONS,
-    **ALL_SVG_FUNCTIONS,
-    **ALL_MINKOWSKI_FUNCTIONS,
-}
+# Every SQL name of every registered family. Relation predicates
+# (st_touches etc.) are binary WKT→bool like st_within; the default
+# (S, S) / junk-junk argument builders below cover them without
+# per-name entries.
+_SWEPT = sorted({name for family in FUNCTION_FAMILIES for name in family})
 
 D = "CAST(NULL AS DOUBLE)"
 S = "CAST(NULL AS STRING)"
+B = "CAST(NULL AS BINARY)"
 
 # name → SQL argument list matching the UDF's arity/types
 _NULL_ARGS = {
@@ -394,20 +188,30 @@ _NULL_ARGS = {
     "st_azimuthspheroid": f"{S}, {S}, {S}",
     # st_force3dm / st_force4d / st_ndims / st_coorddim /
     # st_linefrommultipoint are unary, covered by the (S,) default
+    "st_geomfromwkb": B,
+    "st_geomfromewkb": B,
+    "st_sridfromewkb": B,
+    "text_jaro": f"{S}, {S}",
+    "text_jarowinkler": f"{S}, {S}",
+    "text_damerau": f"{S}, {S}",
+    "text_hamming": f"{S}, {S}",
+    "text_jaccard_chars": f"{S}, {S}",
 }
 
 
-@pytest.mark.parametrize("name", sorted(_SWEPT))
+@pytest.mark.parametrize("name", _SWEPT)
 def test_null_input_yields_null(spark, name):
     args = _NULL_ARGS.get(name, S)
     val = spark.sql(f"SELECT {name}({args}) AS v").collect()[0]["v"]
     assert val is None or (isinstance(val, float) and math.isnan(val)), (name, val)
 
 
-@pytest.mark.parametrize("name", sorted(_SWEPT))
+# Free text has no malformed form: the text_* functions score or
+# normalize any string, so they sit out this case.
+@pytest.mark.parametrize("name", [n for n in _SWEPT if not n.startswith("text_")])
 def test_malformed_wkt_yields_null_not_crash(spark, name):
     junk = "'POLYGON garbage (('"
-    args = _NULL_ARGS.get(name, junk).replace(S, junk)
+    args = _NULL_ARGS.get(name, junk).replace(S, junk).replace(B, "X'DEADBEEF'")
     val = spark.sql(f"SELECT {name}({args}) AS v").collect()[0]["v"]
     assert val is None or (isinstance(val, float) and math.isnan(val)) or val is False, (
         name,
@@ -515,14 +319,6 @@ def test_surface3d_editors_x_mixed_values(spark):
     """r15: valid geometry + NULL/NaN numeric companions through the
     surface3d and editors_x multi-arg surfaces (all-NULL sweeps
     short-circuit on the WKT guard — the st_pointn crash class)."""
-    from sql_interface_to_xml_database_for_spatial_operations_spark.functions.surface3d import (
-        register_surface3d_functions,
-    )
-
-    # earlier parity rows re-register accessors (st_isclosed's lineal
-    # form) through their _ensure_udfs — registration is last-wins, so
-    # pin the surface overload back before asserting on it
-    register_surface3d_functions(spark)
     tri = "TIN Z (((0 0 0, 1 0 0, 0 1 0, 0 0 0)))"
     rows = spark.sql(
         f"SELECT st_patchn(g, n) AS p FROM VALUES "
@@ -549,7 +345,7 @@ def test_surface3d_editors_x_mixed_values(spark):
     ).collect()
     assert rows[0]["q"] == "POINT (123.5 7)"
     assert rows[1]["q"] is None and rows[2]["q"] is None
-    # the st_isclosed overload keeps the lineal contract intact
+    # one st_isclosed serves both the lineal and the surface contract
     rows = spark.sql(
         "SELECT st_isclosed(g) AS c FROM VALUES "
         "('LINESTRING (0 0, 1 0, 1 1, 0 0)'), "

@@ -45,7 +45,7 @@ assert e.entry(spark).count() >= 0
 # One events-family query (the r2 failure class: TIMESTAMP(NANOS) load).
 assert qs["q75_tumbling_window"](spark, sf).count() > 0
 
-# One spatial UDF query (exercises register_spatial_functions on a bare
+# One spatial UDF query (exercises the query hook's register_all on a bare
 # session).
 assert qs["q44_spatial_join_within"](spark, sf).count() > 0
 

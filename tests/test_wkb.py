@@ -10,10 +10,10 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import geometry as G
+from sql_interface_to_xml_database_for_spatial_operations_spark.functions.families import register_all
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import wkb as W
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions.wkb import (
     geom_to_wkb,
-    register_wkb_functions,
     wkb_to_geom,
     wkb_to_wkt,
     wkt_to_wkb,
@@ -157,7 +157,7 @@ class TestMalformed:
 
 class TestSqlSurface:
     def test_roundtrip_in_sql(self, spark):
-        register_wkb_functions(spark)
+        register_all(spark)
         row = spark.sql(
             "SELECT st_geomfromwkb(st_asbinary('POINT (3 4)')) AS w, "
             "hex(st_asbinary('POINT (3 4)')) AS h, "
