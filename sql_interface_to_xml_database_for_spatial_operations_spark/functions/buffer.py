@@ -15,7 +15,7 @@ point lies on some edge, ``∂P ⊕ K = ⋃ᵢ (edgeᵢ ⊕ K)``, and each
 ``edgeᵢ ⊕ K`` is the convex hull of the two endpoint disks (a
 "stadium"). So the buffer is a finite union of convex pieces plus the
 input's areal parts — which union_ops.union_geoms dissolves EXACTLY
-(convex-pair merge or seamed disjoint decomposition on Fraction
+(the arrangement-face kernel of functions/dissolve.py, on Fraction
 coordinates). Holes shrink: a hole's surviving interior is
 ``hole − ⋃ (hole-edge stadiums)`` (every in-hole point's nearest input
 point lies on that hole's ring), subtracted from the assembled union.
@@ -43,16 +43,15 @@ round-off. Outside the exact class — self-intersecting rings, or an
 FP-degenerate union (detected loudly via the st_union stacked-parts
 warning) — the result is NULL, never a silently wrong geometry.
 
-Output shape divergence from PostGIS (documented): non-convex inputs
-return a SEAMED MultiPolygon of disjoint pieces (exact point set and
-area) rather than one re-noded POLYGON; a closed line's buffer covers
-the annulus as seamed pieces rather than a polygon with an interior
-ring.
+Output shape: PostGIS's dissolved one — one POLYGON per connected
+region, no seams (a closed line's buffer is a polygon with an
+interior ring). Erosions and shrunk holes subtract through the same
+face kernel (overlay.difference_geoms), so they dissolve too.
 
 Scale: per-row pandas UDF (Arrow-batched, map-only) — no shuffle, no
-driver participation; the per-row cost is O(k²) convex-piece
-subtractions for a k-segment input, which is a property of the row,
-not the table.
+driver participation; the per-row cost is the exact noding of a
+k-segment input's k stadiums, quadratic in the row's own vertex
+count, which is a property of the row, not the table.
 """
 
 from __future__ import annotations

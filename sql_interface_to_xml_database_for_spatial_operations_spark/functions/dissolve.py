@@ -1,61 +1,71 @@
-"""Boundary-dissolved polygon union — the exact kernel behind
-``st_union``'s PostGIS-shaped output (VERDICT r11 item 3).
+"""Exact polygon overlay on the noded arrangement — the one kernel
+behind ``st_union``'s dissolve and the areal parts of
+``st_intersection``, ``st_difference`` and ``st_symdifference``.
 
-The reference forwards ``ST_Union`` to PostGIS verbatim (reference
-src/index.ts:44-63), whose GEOS union re-nodes overlapping boundaries
-and returns ONE dissolved polygon per connected region. Until r11 the
-engine's non-rectilinear union resolved overlap components into
-point-set-exact but SEAMED pieces (disjoint decomposition parts whose
-internal boundaries survive in the WKT). This module rebuilds the
-dissolved shape exactly, on the same machinery ST_Polygonize proved
-(functions/noding.py — exact rational noding, half-edge face walks):
+The reference forwards all four names to PostGIS (reference
+src/index.ts:44-63), whose GEOS OverlayNG re-nodes both operands and
+returns ONE dissolved polygon per connected region of the result.
+This module rebuilds that shape exactly, on the same machinery
+ST_Polygonize uses (functions/noding.py — exact rational noding,
+half-edge face walks):
 
-1. **Arrangement faces.** All member rings (shells AND holes) go
-   through ``noding.faces_frac``: the fully-noded arrangement's faces
-   as Fraction rings, each walked interior-left (shell CCW, holes CW).
-2. **Keep faces inside the union.** Each face takes one exact interior
-   point (horizontal scanline strictly between vertex ordinates — no
-   vertex or horizontal edge can sit on it, so every crossing is
-   proper) and keeps the face iff the point is inside ≥1 member by the
-   exact even-odd rule. A face interior never meets a member boundary
-   (member boundaries are arrangement edges), so the test is never a
-   boundary tie.
+1. **Arrangement faces.** Every ring of both operands (shells AND
+   holes) goes through ``noding.faces_frac``: the fully-noded
+   arrangement's faces as Fraction rings, each walked interior-left
+   (shell CCW, holes CW).
+2. **Keep faces by the operation's rule.** Each face takes one exact
+   interior point (horizontal scanline strictly between vertex
+   ordinates — no vertex or horizontal edge can sit on it, so every
+   crossing is proper) and locates it in operand A and operand B by
+   the exact even-odd rule. A face interior never meets an operand
+   boundary (operand boundaries are arrangement edges), so the test is
+   never a boundary tie. ``KEEP`` holds the four rules: union keeps
+   faces in A or B, intersection in both, difference in A and not B,
+   symmetric difference in exactly one.
 3. **Cancel interior seams.** Kept faces emit their rings as DIRECTED
    edges (interior-left). An arrangement edge between two kept faces
    appears once per direction and cancels; what survives is exactly
-   the union's boundary, still oriented interior-left.
+   the result's boundary, still oriented interior-left.
 4. **Stitch rings.** The surviving directed edges are walked with the
    same CW-most-turn rule as the polygonize face walk (exact angle
-   comparator, no atan2), so pinch points (regions touching at a
-   single vertex) split into separate rings exactly as GEOS does.
-   Positive rings are shells, negative rings attach as holes to the
-   smallest strictly-containing shell.
+   comparator, no atan2), so regions touching at a single vertex come
+   out as separate rings; a ring that still revisits a vertex (a hole
+   touching its shell) splits there into its simple loops, the valid
+   form GEOS emits. Positive rings are shells, negative rings attach
+   as holes to the smallest strictly-containing shell.
 
-The result: overlapping / edge-sharing simple polygons (holed members
-included) dissolve into PostGIS's boundary shape — one polygon per
-connected region, holes preserved, no internal seams — with every
-coordinate an exact rational function of the inputs (float only at
-serialization). Members with a self-intersecting ring are outside the
-class and raise ``overlay._Unsupported``; ``union_ops`` keeps its
-documented stacked-parts-with-RuntimeWarning fallback for those.
+Output convention: shells CCW, holes CW, each ring starting at its
+lexicographically smallest directed edge; arrangement nodes on a
+result edge stay as vertices (GEOS keeps its noding too). Every
+coordinate is an exact rational function of the inputs. Operands with
+a self-intersecting ring are outside the class and raise
+``overlay._Unsupported`` (NULL at the overlay surface; ``union_ops``
+keeps its documented stacked-parts-with-RuntimeWarning fallback).
 
-Scale shape: pure per-row kernel (called from the ``st_union`` pandas
-UDFs); cost is quadratic in the component's own vertex count, a
-property of the row set being unioned, not of the table.
+Scale shape: pure per-row kernel (called from the overlay and union
+pandas UDFs); cost is quadratic in the operands' own vertex count, a
+property of the row, not of the table.
 """
 
 from __future__ import annotations
 
-import math
 from fractions import Fraction
 from functools import cmp_to_key
 
 from . import geometry as G
+from . import noding as _nod
 from . import overlay as _ov
 from .geometry import Geometry
-from .noding import _angle_cmp, assemble_shells_and_holes, faces_frac
 
 FPt = tuple[Fraction, Fraction]
+
+# Face-keep rules over (inside A, inside B).
+KEEP = {
+    "union": lambda in_a, in_b: in_a or in_b,
+    "intersection": lambda in_a, in_b: in_a and in_b,
+    "difference": lambda in_a, in_b: in_a and not in_b,
+    "symdifference": lambda in_a, in_b: in_a != in_b,
+}
 
 
 def _frac_rings(member: Geometry) -> list[list[FPt]]:
@@ -67,9 +77,10 @@ def _frac_rings(member: Geometry) -> list[list[FPt]]:
     (code-review r12)."""
     out = []
     for ring in member.coords:
-        if not all(math.isfinite(x) and math.isfinite(y) for x, y in ring):
-            raise _ov._Unsupported("dissolve: non-finite coordinate")
-        c = [(Fraction(x), Fraction(y)) for x, y in ring]
+        try:
+            c = [(Fraction(x), Fraction(y)) for x, y in ring]
+        except (ValueError, OverflowError) as ex:  # NaN / inf coordinate
+            raise _ov._Unsupported("overlay: non-finite coordinate") from ex
         if c[0] != c[-1]:
             c.append(c[0])
         out.append(c)
@@ -117,22 +128,24 @@ def _interior_point(face: list[list[FPt]]) -> FPt:
         xs.sort()
         if len(xs) >= 2:
             return ((xs[0] + xs[1]) / 2, ystar)
-    raise _ov._Unsupported("dissolve: face admits no interior scanline")
+    raise _ov._Unsupported("overlay: face admits no interior scanline")
 
 
 def _stitch_rings(dir_edges: set[tuple[FPt, FPt]]) -> list[list[FPt]]:
     """Closed interior-left rings from the surviving directed boundary
     edges: from edge (u, v), the next edge leaves v toward the CW-most
     direction from the reverse (v -> u) — the same tightest-left-turn
-    rule as the polygonize face walk, so pinch points split rings the
-    way GEOS does. Every directed edge is consumed exactly once."""
+    rule as the polygonize face walk, so regions touching at a single
+    vertex come out as separate rings. Every directed edge is consumed
+    exactly once; walks start at the smallest remaining directed edge,
+    so each ring starts at its lexicographically smallest one."""
     out_map: dict[FPt, list[FPt]] = {}
     for a, b in dir_edges:
         out_map.setdefault(a, []).append(b)
     for v, outs in out_map.items():
         outs.sort(
             key=cmp_to_key(
-                lambda p, q, v=v: _angle_cmp(
+                lambda p, q, v=v: _nod._angle_cmp(
                     (p[0] - v[0], p[1] - v[1]), (q[0] - v[0], q[1] - v[1])
                 )
             )
@@ -150,21 +163,119 @@ def _stitch_rings(dir_edges: set[tuple[FPt, FPt]]) -> list[list[FPt]]:
             ring.append(v)
             outs = [w for w in out_map[v] if (v, w) in remaining or (v, w) == start]
             if not outs:
-                raise _ov._Unsupported("dissolve: boundary walk dead-ended")
+                raise _ov._Unsupported("overlay: boundary walk dead-ended")
             rev = (u[0] - v[0], u[1] - v[1])
             # first available direction strictly CW of rev: in the
             # CCW-sorted candidate list, the predecessor of rev's
             # angular slot
             idx = 0
-            while idx < len(outs) and _angle_cmp(
+            while idx < len(outs) and _nod._angle_cmp(
                 (outs[idx][0] - v[0], outs[idx][1] - v[1]), rev
             ) < 0:
                 idx += 1
             cur = (v, outs[(idx - 1) % len(outs)])
             if cur == start:
                 break
-        rings.append(ring)
+        rings.extend(_split_pinches(ring))
     return rings
+
+
+def _split_pinches(ring: list[FPt]) -> list[list[FPt]]:
+    """Split a closed ring that revisits a vertex into simple closed
+    loops, each rotated to start at its smallest directed edge. The
+    left-turn walk joins a hole touching its shell (or two touching
+    holes) into one self-touching ring; GEOS's valid form is the
+    separate loops, which the sign test then files as shell or hole."""
+    loops: list[list[FPt]] = []
+    stack: list[FPt] = []
+    pos: dict[FPt, int] = {}
+    for v in ring[:-1]:
+        k = pos.get(v)
+        if k is None:
+            pos[v] = len(stack)
+            stack.append(v)
+            continue
+        loops.append(stack[k:])
+        for w in stack[k + 1 :]:
+            del pos[w]
+        del stack[k + 1 :]
+    loops.append(stack)
+    if len(loops) == 1:
+        return [ring]
+    out = []
+    for loop in loops:
+        n = len(loop)
+        i = min(range(n), key=lambda i: (loop[i], loop[(i + 1) % n]))
+        out.append(loop[i:] + loop[:i] + [loop[i]])
+    return out
+
+
+def _operand_rings(members: list[Geometry]) -> list[list[list[FPt]]]:
+    """Each Polygon member's rings as closed Fraction rings, after the
+    simplicity gate: a non-simple ring (or a non-polygon member) raises
+    ``overlay._Unsupported``."""
+    out = []
+    for m in members:
+        if m.kind != "Polygon":
+            raise _ov._Unsupported("overlay: polygon members only")
+        for ring in m.coords:
+            closed = list(ring)
+            if closed and closed[0] != closed[-1]:
+                closed.append(closed[0])
+            if len(closed) < 4 or not _ov._is_simple_ring(closed):
+                raise _ov._Unsupported("overlay: non-simple member ring")
+        out.append(_frac_rings(m))
+    return out
+
+
+def _kept_faces(a: list[Geometry], b: list[Geometry], keep):
+    """Arrangement faces of operands A (Polygon members ``a``) and B
+    (``b``) that ``keep`` (one of ``KEEP``) retains (module docstring,
+    steps 1-2). A point is inside an operand when it is inside any of
+    its members, so overlapping members act as their union."""
+    ra, rb = _operand_rings(a), _operand_rings(b)
+    for face in _nod.faces_frac([ring for m in ra + rb for ring in m]):
+        pt = _interior_point(face)  # once per face, not per member
+        in_a = any(_point_in_rings(pt, m) for m in ra)
+        in_b = any(_point_in_rings(pt, m) for m in rb)
+        if keep(in_a, in_b):
+            yield face
+
+
+def overlay_rings(
+    a: list[Geometry], b: list[Geometry], keep
+) -> list[list[list[FPt]]]:
+    """Exact areal overlay of operand A (Polygon members ``a``) and
+    operand B (``b``) under ``keep`` (one of ``KEEP``): the result's
+    polygons as Fraction ring lists ``[shell, *holes]`` (module
+    docstring, steps 1-4). ``[]`` is the empty result."""
+    dir_edges: set[tuple[FPt, FPt]] = set()
+    for face in _kept_faces(a, b, keep):
+        for ring in face:
+            for p, q in zip(ring, ring[1:]):
+                if p == q:
+                    continue
+                if (q, p) in dir_edges:
+                    dir_edges.remove((q, p))  # interior seam: cancels
+                else:
+                    dir_edges.add((p, q))
+    # shell/hole split + smallest-containing-shell attachment shared
+    # with the polygonize assembly; strict: an unattachable hole is an
+    # exact-or-NULL failure here, not an unbounded-ring artifact
+    return _nod.assemble_shells_and_holes(_stitch_rings(dir_edges), strict=True)
+
+
+def interiors_overlap(a: Geometry, b: Geometry) -> bool:
+    """True iff the interiors of Polygons ``a`` and ``b`` share a point:
+    some arrangement face lies inside both. Strictly overlapping bboxes
+    prescreen (disjoint parts rarely share one, and the arrangement is
+    the expensive path). Raises ``overlay._Unsupported`` for a
+    non-simple ring."""
+    (ax0, ay0, ax1, ay1) = G.bbox(a)
+    (bx0, by0, bx1, by1) = G.bbox(b)
+    if not (ax0 < bx1 and bx0 < ax1 and ay0 < by1 and by0 < ay1):
+        return False
+    return next(_kept_faces([a], [b], KEEP["intersection"]), None) is not None
 
 
 def dissolve_polygons(members: list[Geometry]) -> list[Geometry]:
@@ -174,45 +285,9 @@ def dissolve_polygons(members: list[Geometry]) -> list[Geometry]:
     ``overlay._Unsupported`` for members outside the class (any
     non-simple ring) — callers fall back to their documented stacked
     path."""
-    member_rings: list[list[list[FPt]]] = []
-    chains: list[list[FPt]] = []
-    for m in members:
-        if m.kind != "Polygon":
-            raise _ov._Unsupported("dissolve: polygon members only")
-        for ring in m.coords:
-            closed = list(ring)
-            if closed and closed[0] != closed[-1]:
-                closed.append(closed[0])
-            if len(closed) < 4 or not _ov._is_simple_ring(closed):
-                raise _ov._Unsupported("dissolve: non-simple member ring")
-        fr = _frac_rings(m)
-        member_rings.append(fr)
-        chains.extend(fr)
-
-    faces = faces_frac(chains)
-    kept = []
-    for f in faces:
-        pt = _interior_point(f)  # once per face, not per member
-        if any(_point_in_rings(pt, mr) for mr in member_rings):
-            kept.append(f)
-    if not kept:
+    polys = overlay_rings(members, [], KEEP["union"])
+    if not polys:
         raise _ov._Unsupported("dissolve: no face inside any member")
-
-    dir_edges: set[tuple[FPt, FPt]] = set()
-    for face in kept:
-        for ring in face:
-            for a, b in zip(ring, ring[1:]):
-                if a == b:
-                    continue
-                if (b, a) in dir_edges:
-                    dir_edges.remove((b, a))  # interior seam: cancels
-                else:
-                    dir_edges.add((a, b))
-    rings = _stitch_rings(dir_edges)
-    # shell/hole split + smallest-containing-shell attachment shared
-    # with the polygonize assembly; strict: an unattachable hole is an
-    # exact-or-NULL failure here, not an unbounded-ring artifact
-    polys = assemble_shells_and_holes(rings, strict=True)
     return [
         Geometry(
             "Polygon", [[(float(x), float(y)) for x, y in r] for r in rings_]

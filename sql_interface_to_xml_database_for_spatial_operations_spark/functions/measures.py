@@ -35,10 +35,9 @@ verbatim (F12, src/index.ts:44-63). Semantics follow GEOS/JTS:
   vector p3→p4 in [0, 2π): ``(azimuth(p3, p4) − azimuth(p1, p2)) mod
   2π``, the same azimuth convention as ``projection.st_azimuth``.
 - ``st_triangulatepolygon`` — ear-clipping triangulation
-  (overlay._triangulate, the exact kernel the polygon-area overlay
-  uses) returned as a GEOMETRYCOLLECTION of triangles. Hole-free
-  simple polygons only; anything else is a loud NULL, never a wrong
-  tessellation.
+  (``_triangulate``, the standard published O(n²) algorithm) returned
+  as a GEOMETRYCOLLECTION of triangles. Hole-free simple polygons
+  only; anything else is a loud NULL, never a wrong tessellation.
 
 Scale shape: all map-only Arrow-batched pandas UDFs; per-row cost is
 quadratic in the row's own vertex count.
@@ -56,6 +55,7 @@ from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry, Point
 from .relations import _line_components, _on_segment, _segs_collinear_overlap
+from .union_ops import _signed_area_ring
 
 # ---------------------------------------------------------------------------
 # st_issimple
@@ -411,6 +411,61 @@ def geometric_median(g: Geometry) -> Point | None:
 # ---------------------------------------------------------------------------
 
 
+def _triangulate(ring_closed: list[Point]) -> list[list[Point]] | None:
+    """Ear-clipping triangulation of a SIMPLE hole-free polygon ring →
+    list of closed CCW triangle rings with disjoint interiors, or None
+    if clipping stalls (self-intersecting / degenerate input). The
+    standard published O(n²) algorithm: repeatedly cut a convex vertex
+    whose triangle contains no other reflex vertex."""
+    # Simplicity check FIRST: naive ear clipping can still find "ears"
+    # on a self-intersecting ring (e.g. a bowtie) and return triangles
+    # covering the hull — silently wrong.
+    if not _ov._is_simple_ring(ring_closed):
+        return None
+    pts = list(ring_closed[:-1])
+    if _signed_area_ring(pts + [pts[0]]) < 0:
+        pts = pts[::-1]
+
+    def cross(o: Point, a: Point, b: Point) -> float:
+        return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
+
+    def in_tri(p: Point, a: Point, b: Point, c: Point) -> bool:
+        # strict interior-or-edge containment for the ear test
+        return cross(a, b, p) >= 0 and cross(b, c, p) >= 0 and cross(c, a, p) >= 0
+
+    tris: list[list[Point]] = []
+    while len(pts) > 3:
+        n = len(pts)
+        for i in range(n):
+            a, b, c = pts[(i - 1) % n], pts[i], pts[(i + 1) % n]
+            if cross(a, b, c) <= 0:
+                continue  # reflex or collinear: not an ear tip
+            if any(
+                in_tri(p, a, b, c)
+                for j, p in enumerate(pts)
+                if j not in ((i - 1) % n, i, (i + 1) % n)
+            ):
+                continue
+            tris.append([a, b, c, a])
+            del pts[i]
+            break
+        else:
+            return None  # no ear found: not a simple polygon
+    if len(pts) == 3 and abs(cross(*pts)) > 0.0:
+        tris.append(pts + [pts[0]])
+    # Consistency guard: FP orientation tests on NEARLY-degenerate
+    # irrational rings (found by the holed-star fuzz) can cut slightly
+    # overlapping ears; the triangle areas then stop summing to the
+    # ring's shoelace area. Loud NULL beats a silently-wrong
+    # decomposition — bit-exact inputs (integer/dyadic coords) are
+    # unaffected, their sums match exactly.
+    total = sum(abs(_signed_area_ring(t)) for t in tris)
+    ring_area = abs(_signed_area_ring(ring_closed))
+    if abs(total - ring_area) > 1e-9 * max(1.0, ring_area):
+        return None
+    return tris
+
+
 def triangulate_polygon(g: Geometry) -> Geometry | None:
     """GEOMETRYCOLLECTION of ear-clipped triangles; raises _Unsupported
     for holed / non-simple / non-areal inputs."""
@@ -421,7 +476,7 @@ def triangulate_polygon(g: Geometry) -> Geometry | None:
     for rings in polys:
         if len(rings) > 1:
             raise _ov._Unsupported("holed polygon triangulation")
-        t = _ov._triangulate([tuple(p) for p in rings[0]])
+        t = _triangulate([tuple(p) for p in rings[0]])
         if t is None:
             raise _ov._Unsupported("non-simple ring")
         tris.extend(Geometry("Polygon", [tri]) for tri in t)

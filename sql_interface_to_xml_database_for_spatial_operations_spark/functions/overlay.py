@@ -1,65 +1,52 @@
-"""ST_Intersection / ST_Difference — exact boolean overlay within a
-documented geometry-class boundary.
+"""ST_Intersection / ST_Difference / ST_SymDifference — exact boolean
+overlay on one kernel.
 
-The reference forwards both PostGIS names to PostGIS itself alongside
+The reference forwards these names to PostGIS itself alongside
 ST_Union (reference src/index.ts:44-63 routes any PostGIS-accepted
-function through the rebuilt PostgreSQL query); this module computes
-them natively so the Spark engine's SQL surface answers the same
-queries without a PostGIS round-trip.
+function through the rebuilt PostgreSQL query), so its answers are
+GEOS OverlayNG's; this module computes them natively so the Spark
+engine's SQL surface answers the same queries without a PostGIS
+round-trip.
 
 Exactness matrix (same design stance as union_ops.py: EXACT inside a
 machine-checkable class, NULL — never a silently wrong geometry —
-outside it):
+outside it). Every kernel runs on exact rational (Fraction)
+coordinates; results convert to float only at serialization.
 
-- **point × anything** — membership tests (closure semantics: a point
-  on a polygon boundary intersects it, matching PostGIS
-  ``ST_Intersection``/``ST_Difference`` which operate on closures).
-  Dimensionally-collapsed results between 2-D inputs match PostGIS
-  as of r8: polygon pairs sharing only a boundary return the shared
-  edges as LINESTRING spans (ring×ring collinear intersection) and
-  corner contacts as POINTs, and a tangent polygon∩line touch returns
-  the touch POINT. Remaining divergence: when the intersection has
-  BOTH a 2-D part and extra boundary contact outside it, only the 2-D
-  part is returned (PostGIS emits a mixed collection in that exotic
-  case).
+- **polygon × polygon** (holes and Multi* allowed) — the
+  arrangement-face overlay of functions/dissolve.py, the kernel that
+  also dissolves ST_Union: all rings of both operands are noded
+  exactly, each arrangement face is kept by the operation's rule
+  (intersection: in A and in B; difference: in A and not in B;
+  symdifference: in exactly one), interior seams cancel, and the
+  surviving edges stitch into the shape PostGIS returns — one
+  dissolved POLYGON per connected region, holes preserved, no seams.
+  Polygon pairs whose interiors do not overlap intersect in their
+  boundary contact, as PostGIS does: shared edges as maximal
+  LINESTRING chains (ring × ring collinear intersection) and corner
+  contacts as POINTs. Remaining divergence: a part pair whose
+  interiors DO overlap contributes only its 2-D part, even where it
+  also touches outside it (PostGIS emits a mixed collection in that
+  exotic case).
+- **line × polygon** — the line is noded on the polygon's rings
+  (``noding.pairwise_splits`` in cross-only mode) and each sub-segment
+  is classified by its exact midpoint: inside or on the boundary goes
+  to the intersection, outside to the difference. A boundary touch
+  with no kept neighbouring sub-segment is a POINT in the
+  intersection (a tangent line touches a polygon in PostGIS's touch
+  point, not EMPTY).
 - **line × line** — exact: crossing/touch points plus the collinear
   shared spans (1-D interval intersection per collinear segment pair,
   dissolved into maximal spans at assembly; points covered by a span
   are dropped, so mixed results match PostGIS's collection shape).
   Difference subtracts the shared spans with closure semantics and
   drops zero-length leftovers (identical lines → EMPTY, as PostGIS).
-- **rectilinear polygon × rectilinear polygon** (holes allowed, Multi*
-  allowed) — cell decomposition (union_ops._rectilinear_cells); the
-  pairwise rect∩rect / rect−rect pieces are closed-form, and the
-  result is re-dissolved through union_ops._rect_union_polys, so
-  output polygons are clean (no seams, no stacked parts).
-- **convex polygon × convex polygon** — Sutherland–Hodgman clipping
-  (successive _clip_halfplane passes) for the intersection: exact,
-  convex output.
-  Difference uses the standard half-plane decomposition (piece_i = a
-  right of b's edge i, left of edges 0..i−1): exact, a MultiPolygon of
-  disjoint convex pieces — area and point set exact; internal seams
-  between pieces are a representation artifact (st_perimeter over such
-  a result counts seam edges, like any seamed MultiPolygon).
-- **rectilinear × convex** — intersection clips each covered cell by
-  the convex ring; the pieces have disjoint interiors by construction
-  (cells partition the rectilinear polygon), so the MultiPolygon
-  result is exact as a point set and in area. Difference runs the same
-  half-plane decomposition per cell (cells are convex), exact with the
-  same seam caveat.
-- **LineString × convex/rectilinear polygon** — parametric (Cyrus–Beck
-  style) clipping of each segment to the convex interior (intersection)
-  or its complement spans (difference): exact.
-- **any SIMPLE polygon** — ear-clipping triangulation (_triangulate,
-  the standard published O(n²) algorithm) reduces a hole-free simple
-  ring to disjoint convex triangles, and a polygon WITH holes is its
-  outer ring's decomposition minus each hole (the same subtraction
-  machinery, applied recursively) — so every simple-ring polygon pair,
-  convex or not, holed or not, resolves through the convex kernels
-  above: exact in area and point set, output a seamed MultiPolygon of
-  disjoint pieces.
-- anything else — self-intersecting rings, which a non-adjacent-edge
-  crossing check detects explicitly → NULL (documented here, in
+- **point × anything** — membership tests (closure semantics: a point
+  on a polygon boundary intersects it, matching PostGIS, whose
+  overlays operate on closures).
+- **anything else** — a polygon with a self-intersecting ring, which
+  the same non-adjacent-edge crossing check the union dissolve uses
+  (``_is_simple_ring``) detects explicitly → NULL (documented here, in
   COVERAGE.md §2.6, and in the registered function docstrings — the
   ADVICE r6 "loud, not silently wrong" contract).
 
@@ -76,10 +63,10 @@ module deliberately does NOT extend geometry.py's parser — staleness
 fingerprints are module-granular and geometry.py underpins every
 verified spatial query (same isolation rationale as relations_ops.py).
 
-Scale: both functions are per-row pandas UDFs (Arrow-batched, map-only)
-— no shuffle, no driver participation; candidate pair generation for
-overlay joins belongs to the caller (bbox/grid blocking, see
-operators/overlay_ops.py).
+Scale: all three functions are per-row pandas UDFs (Arrow-batched,
+map-only) — no shuffle, no driver participation; candidate pair
+generation for overlay joins belongs to the caller (bbox/grid
+blocking, see operators/overlay_ops.py).
 """
 
 from __future__ import annotations
@@ -91,17 +78,11 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
+from . import dissolve as _dis
 from . import geometry as G
+from . import noding as _nod
 from .geometry import Geometry
-from .union_ops import (
-    _as_rect,
-    _flatten,
-    _is_convex_ring,
-    _rect_union_polys,
-    _rectilinear_cells,
-    _seg_intersections,
-    _signed_area_ring,
-)
+from .union_ops import _flatten, _seg_intersections
 
 Pt = tuple[float, float]
 Rect = tuple[float, float, float, float]
@@ -122,13 +103,13 @@ class _Unsupported(Exception):
 # exact rational arithmetic
 #
 # Every input coordinate is a float — an exact binary rational — so the
-# polygon kernels run on Fraction coordinates: orientation tests,
-# clipping parameters, ear tests and areas are then EXACT for every
-# input, not just integer/dyadic fixtures (the same stance as
-# relations.py's exact-arithmetic DE-9IM predicates). The star-polygon
-# fuzz demonstrated why: float kernels mis-triangulated and drifted
-# piece subtractions on nearly-degenerate irrational rings. Results
-# convert back to float only at assembly (round-to-nearest per vertex).
+# kernels run on Fraction coordinates: noding, orientation tests, point
+# location and areas are then EXACT for every input, not just
+# integer/dyadic fixtures (the same stance as relations.py's
+# exact-arithmetic DE-9IM predicates). The star-polygon fuzz
+# demonstrated why: float kernels drifted on nearly-degenerate
+# irrational rings. Results convert back to float only at assembly
+# (round-to-nearest per vertex).
 # ---------------------------------------------------------------------------
 
 
@@ -184,12 +165,11 @@ def _float_geom(g: Geometry) -> Geometry:
 
 def _drop_degenerate_float(g: Geometry | None) -> Geometry | None:
     """Remove polygon parts whose FLOAT-converted ring collapses to
-    zero area. Exact-arithmetic piecework can emit artifact slivers of
-    area ~1e-33 (a degenerate micro-ring passes the local-convexity
-    test, so its own half-plane self-subtraction cannot eliminate it);
-    such a piece has no representable area in the float output domain
-    — its vertices round to collinear points — so it does not exist in
-    the result. Genuine pieces keep their float area and survive."""
+    zero area. An exact result can hold a genuine sliver face of area
+    ~1e-33 (two nearly-coincident input edges bound it); such a part
+    has no representable area in the float output domain — its
+    vertices round to collinear points — so it does not exist in the
+    result. Genuine parts keep their float area and survive."""
     if g is None:
         return None
 
@@ -253,150 +233,8 @@ def _is_empty(x) -> bool:
     return isinstance(x, tuple)
 
 
-def _rects_of(poly_rings: list[list[Pt]]) -> list[Rect] | None:
-    """Cell rectangles of a rectilinear polygon (fast path: a plain
-    rectangle is its own single cell). A SELF-INTERSECTING axis-parallel
-    ring would pass the cell decomposition (even-odd reinterpretation)
-    and come back silently rewritten, so simplicity gates this path too
-    (code-review r7) — raising, not returning None, because None means
-    'not rectilinear, try the other decompositions' and those must not
-    see the ring either."""
-    r = _as_rect(Geometry("Polygon", poly_rings))
-    if r is not None:
-        return [r]
-    cells = _rectilinear_cells(poly_rings)
-    if cells is None:
-        return None
-    if not all(_is_simple_ring(ring) for ring in poly_rings):
-        raise _Unsupported("self-intersecting rectilinear ring")
-    return cells
-
-
-def _rect_clip(a: Rect, b: Rect) -> Rect | None:
-    x0, y0 = max(a[0], b[0]), max(a[1], b[1])
-    x1, y1 = min(a[2], b[2]), min(a[3], b[3])
-    if x0 < x1 and y0 < y1:
-        return (x0, y0, x1, y1)
-    return None
-
-
-def _rect_sub(r: Rect, c: Rect) -> list[Rect]:
-    """Pieces of rectangle ``r`` not covered by rectangle ``c`` — the
-    standard ≤4-piece guillotine split (bottom, top, left, right)."""
-    inter = _rect_clip(r, c)
-    if inter is None:
-        return [r]
-    x0, y0, x1, y1 = r
-    ix0, iy0, ix1, iy1 = inter
-    out: list[Rect] = []
-    if y0 < iy0:
-        out.append((x0, y0, x1, iy0))
-    if iy1 < y1:
-        out.append((x0, iy1, x1, y1))
-    if x0 < ix0:
-        out.append((x0, iy0, ix0, iy1))
-    if ix1 < x1:
-        out.append((ix1, iy0, x1, iy1))
-    return out
-
-
-def _convex_ring_of(poly_rings: list[list[Pt]]) -> list[Pt] | None:
-    """The (closed) outer ring iff the polygon is hole-free, convex AND
-    simple. The simplicity check is not redundant: a multiply-wound
-    ring (e.g. a pentagram, vertices at angles 4πk/5) turns the same
-    way at every vertex, so the turn-sign test alone would accept a
-    self-intersecting ring and the overlay would return it as a
-    'convex' piece (code-review r7)."""
-    if len(poly_rings) != 1:
-        return None
-    ring = poly_rings[0]
-    if len(ring) < 4 or ring[0] != ring[-1]:
-        return None
-    if not _is_convex_ring(ring):
-        return None
-    if not _is_simple_ring(ring):
-        return None
-    return ring
-
-
-def _ring_area(ring_open: list[Pt]) -> float:
-    return abs(_signed_area_ring(ring_open + [ring_open[0]]))
-
-
-# With Fraction coordinates a degenerate sliver has EXACTLY zero area,
-# so piece filters compare against literal 0 — no epsilon floors.
-
-
-def _clip_to_poly(subject: list[Pt], clip: list[Pt]) -> list[Pt] | None:
-    """Closed output ring of subject ∩ convex clip, or None if empty /
-    degenerate (sliver below the relative FP floor).
-
-    Implemented as successive _clip_halfplane passes rather than
-    union_ops._clip_convex: the half-plane form derives its segment
-    parameter from SIDE-VALUE differences, which cannot be zero when
-    the endpoint signs straddle — union_ops' cross-product denominator
-    can round to exactly 0 on a near-parallel straddling edge
-    (observed under the star-polygon fuzz) and divide by zero."""
-    clip = _dedupe_closed(clip)
-    if len(clip) < 4:
-        return None  # degenerate clip ring
-    if _signed_area_ring(clip) < 0:
-        clip = clip[::-1]
-    out = list(subject[:-1] if subject[0] == subject[-1] else subject)
-    for i in range(len(clip) - 1):
-        if not out:
-            break
-        out = _clip_halfplane(out, clip[i], clip[i + 1], keep_left=True)
-    if len(out) < 3 or _ring_area(out) == 0:
-        return None
-    return _dedupe_closed(out + [out[0]])
-
-
 def _point_in_closure(p: Pt, g: Geometry) -> bool:
     return G.intersects(Geometry("Point", p), g)
-
-
-def _clip_segment_convex(
-    p: Pt, q: Pt, ring: list[Pt], keep_touch: bool = False
-) -> tuple[Pt, Pt] | None:
-    """Portion of segment p→q inside the closed convex ring (closure
-    semantics), or None. Parametric half-plane clipping: every convex
-    ring edge constrains t ∈ [t0, t1]. ``keep_touch`` returns a
-    degenerate (pt, pt) pair for a single-point tangent touch instead
-    of None — the INTERSECTION path wants the touch point (PostGIS
-    parity), while the difference path must keep treating it as
-    nothing-to-subtract (a degenerate cut would resegment the minuend
-    at every tangency)."""
-    if _signed_area_ring(ring) < 0:
-        ring = ring[::-1]
-    # Fraction bounds: a float 0.0/1.0 would drag the clip parameters
-    # (and the hit coordinates) back to float via Fraction.__rmul__
-    t0, t1 = Fraction(0), Fraction(1)
-    dx, dy = q[0] - p[0], q[1] - p[1]
-    for (ax, ay), (bx, by) in zip(ring, ring[1:]):
-        ex, ey = bx - ax, by - ay
-        # inside == left of the directed edge: side(v) >= 0
-        sp = ex * (p[1] - ay) - ey * (p[0] - ax)
-        den = ex * dy - ey * dx  # d(side)/dt
-        if den == 0.0:
-            if sp < 0.0:
-                return None  # parallel and fully outside this half-plane
-            continue
-        t_hit = -sp / den
-        if den > 0.0:
-            t0 = max(t0, t_hit)
-        else:
-            t1 = min(t1, t_hit)
-        if t0 > t1:
-            return None
-    if t0 >= t1:
-        if keep_touch and t0 == t1:
-            a = (p[0] + t0 * dx, p[1] + t0 * dy)
-            return (a, a)
-        return None  # touch at a single point: no 1-D piece
-    a = (p[0] + t0 * dx, p[1] + t0 * dy)
-    b = (p[0] + t1 * dx, p[1] + t1 * dy)
-    return (a, b)
 
 
 # ---------------------------------------------------------------------------
@@ -405,8 +243,9 @@ def _clip_segment_convex(
 
 
 def _pair_intersection(a: Geometry, b: Geometry) -> list:
-    """Pieces of a ∩ b for SIMPLE parts. Returns a list of
-    ``Geometry`` / ``Rect`` pieces (rects are dissolved by the caller)."""
+    """Pieces of a ∩ b for SIMPLE exact-rational parts, at least one of
+    them a Point or LineString (areal pairs go through the face
+    overlay). Returns a list of ``Geometry`` pieces."""
     if a.kind == "Point":
         return [a] if _point_in_closure(a.coords, b) else []
     if b.kind == "Point":
@@ -465,63 +304,20 @@ def _pair_intersection(a: Geometry, b: Geometry) -> list:
                     pts.extend(_seg_intersections(p1, q1, p2, q2))
             return [Geometry("Point", p) for p in sorted(set(pts))] + spans
         line, poly = (a, b) if a.kind == "LineString" else (b, a)
-        if poly.kind != "Polygon":
-            raise _Unsupported(f"line x {poly.kind}")
-        rings = _convex_pieces_of(poly.coords)
-        if rings is None:
-            raise _Unsupported("line x undecomposable polygon")
-        pieces = []
-        for p, q in zip(line.coords, line.coords[1:]):
-            # pieces are interior-disjoint, so per-piece clips of one
-            # segment are disjoint sub-segments
-            for ring in rings:
-                seg = _clip_segment_convex(p, q, ring, keep_touch=True)
-                if seg is None:
-                    continue
-                if seg[0] == seg[1]:
-                    # zero-length clip = tangent touch: PostGIS returns
-                    # the touch POINT, not EMPTY (r8 — the old path
-                    # dropped it as a degenerate line). Seam touches at
-                    # interior piece boundaries are subsumed by the
-                    # adjacent pieces' spans at assembly.
-                    pieces.append(Geometry("Point", seg[0]))
-                else:
-                    pieces.append(Geometry("LineString", [seg[0], seg[1]]))
-        return pieces
+        return _clip_lines([line], [poly], inside=True)
 
-    if a.kind != "Polygon" or b.kind != "Polygon":
-        raise _Unsupported(f"{a.kind} x {b.kind}")
-
-    ra, rb = _rects_of(a.coords), _rects_of(b.coords)
-    if ra is not None and rb is not None:
-        out: list[Rect] = []
-        for car in ra:
-            for cbr in rb:
-                c = _rect_clip(car, cbr)
-                if c is not None:
-                    out.append(c)
-        return out if out else _polygon_boundary_contact(a, b)
-
-    pa, pb = _convex_pieces_of(a.coords), _convex_pieces_of(b.coords)
-    if pa is None or pb is None:
-        raise _Unsupported("polygon pair outside the decomposable class")
-    pieces = []
-    for car in pa:
-        for cbr in pb:
-            ring = _clip_to_poly(car, cbr)
-            if ring:
-                pieces.append(Geometry("Polygon", [ring]))
-    return pieces if pieces else _polygon_boundary_contact(a, b)
+    # polygon pairs are areal: the face overlay handles them at the
+    # geometry level (intersection_geoms)
+    raise _Unsupported(f"{a.kind} x {b.kind}")
 
 
 def _polygon_boundary_contact(a: Geometry, b: Geometry) -> list:
     """0-/1-D contact of two polygons whose INTERIORS do not overlap
-    (both clip kernels return pieces iff the intersection has positive
-    area, so an empty piece set routes here): the pairwise ring×ring
-    line intersection — shared edges come back as collinear spans,
-    corner touches as points, and disjoint pairs as nothing. This is
-    the PostGIS result shape for touching polygons (r8 — previously a
-    documented EMPTY divergence)."""
+    (``intersection_geoms`` routes exactly those pairs here): the
+    pairwise ring×ring line intersection — shared edges come back as
+    collinear spans, corner touches as points, and disjoint pairs as
+    nothing. This is the PostGIS result shape for touching polygons
+    (r8 — previously a documented EMPTY divergence)."""
     pieces: list = []
     for ra in a.coords:
         (ax0, ay0, ax1, ay1) = _ring_bbox(ra)
@@ -579,120 +375,11 @@ def _is_simple_ring(ring_closed: list[Pt]) -> bool:
     return True
 
 
-def _triangulate(ring_closed: list[Pt]) -> list[list[Pt]] | None:
-    """Ear-clipping triangulation of a SIMPLE hole-free polygon ring →
-    list of closed CCW triangle rings with disjoint interiors, or None
-    if clipping stalls (self-intersecting / degenerate input). The
-    standard published O(n²) algorithm: repeatedly cut a convex vertex
-    whose triangle contains no other reflex vertex."""
-    # Simplicity check FIRST: naive ear clipping can still find "ears"
-    # on a self-intersecting ring (e.g. a bowtie) and return triangles
-    # covering the hull — silently wrong.
-    if not _is_simple_ring(ring_closed):
-        return None
-    pts = list(ring_closed[:-1])
-    if _signed_area_ring(pts + [pts[0]]) < 0:
-        pts = pts[::-1]
-
-    def cross(o: Pt, a: Pt, b: Pt) -> float:
-        return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
-
-    def in_tri(p: Pt, a: Pt, b: Pt, c: Pt) -> bool:
-        # strict interior-or-edge containment for the ear test
-        return cross(a, b, p) >= 0 and cross(b, c, p) >= 0 and cross(c, a, p) >= 0
-
-    tris: list[list[Pt]] = []
-    while len(pts) > 3:
-        n = len(pts)
-        for i in range(n):
-            a, b, c = pts[(i - 1) % n], pts[i], pts[(i + 1) % n]
-            if cross(a, b, c) <= 0:
-                continue  # reflex or collinear: not an ear tip
-            if any(
-                in_tri(p, a, b, c)
-                for j, p in enumerate(pts)
-                if j not in ((i - 1) % n, i, (i + 1) % n)
-            ):
-                continue
-            tris.append([a, b, c, a])
-            del pts[i]
-            break
-        else:
-            return None  # no ear found: not a simple polygon
-    if len(pts) == 3 and abs(cross(*pts)) > 0.0:
-        tris.append(pts + [pts[0]])
-    # Consistency guard: FP orientation tests on NEARLY-degenerate
-    # irrational rings (found by the holed-star fuzz) can cut slightly
-    # overlapping ears; the triangle areas then stop summing to the
-    # ring's shoelace area. Loud NULL beats a silently-wrong
-    # decomposition — bit-exact inputs (integer/dyadic coords) are
-    # unaffected, their sums match exactly.
-    total = sum(_ring_area(t[:-1]) for t in tris)
-    ring_area = _ring_area(ring_closed[:-1])
-    if abs(total - ring_area) > 1e-9 * max(1.0, ring_area):
-        return None
-    return tris
-
-
-def _convex_pieces_of(poly_rings: list[list[Pt]]) -> list[list[Pt]] | None:
-    """Decompose a polygon into closed CONVEX rings with disjoint
-    interiors: the ring itself if convex, its cells if rectilinear
-    (holes allowed), an ear-clipping triangulation for hole-free simple
-    rings, and for holed polygons the outer ring's decomposition minus
-    each hole (a polygon with holes IS outer − holes, and the
-    subtraction machinery below is exact for simple rings). None only
-    when some ring is self-intersecting/degenerate. Coordinates are
-    normalized to Fractions here so every caller (including
-    union_ops) gets exact-rational pieces."""
-    try:
-        poly_rings = [_frac_ring(r) for r in poly_rings]
-    except (ValueError, OverflowError):
-        return None  # non-finite coordinate
-    conv = _convex_ring_of(poly_rings)
-    if conv is not None:
-        return [conv]
-    cells = _rects_of(poly_rings)
-    if cells is not None:
-        return [
-            [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
-            for x0, y0, x1, y1 in cells
-        ]
-    if len(poly_rings) != 1:
-        work = _convex_pieces_of([poly_rings[0]])
-        if work is None:
-            return None
-        try:
-            for hole in poly_rings[1:]:
-                work = _rings_minus_part(work, Geometry("Polygon", [hole]))
-                if not work:
-                    break
-        except _Unsupported:
-            return None
-        # Consistency guard (same rationale as _triangulate's): for a
-        # VALID polygon (holes strictly inside the outer ring, pairwise
-        # disjoint) the pieces must sum to outer − Σholes; FP-degenerate
-        # subtractions (e.g. a scaled-copy hole whose edges run parallel
-        # to the outer ring's) can drift, and invalid hole layouts
-        # cannot satisfy it either way → loud NULL for both.
-        outer_area = _ring_area(poly_rings[0][:-1])
-        holes_area = sum(_ring_area(h[:-1]) for h in poly_rings[1:])
-        got = sum(_ring_area(r[:-1]) for r in work)
-        if abs(got - (outer_area - holes_area)) > 1e-9 * max(1.0, outer_area):
-            return None
-        return work
-    return _triangulate(poly_rings[0])
-
-
 def _dedupe_closed(ring: list[Pt]) -> list[Pt]:
     """Normalize a CLOSED ring: drop consecutive duplicate vertices and
     zero-width SPIKES (A→B→A backtracks), iterating to a fixed point.
-    Clip outputs produce both when vertices land exactly on clip lines.
-    Critical for correctness, not just hygiene: a zero-length edge fed
-    to the half-plane machinery has side(p) = 0 for every p (so as a
-    DIFFERENCE constraint it keeps the entire minuend), and a spike's
-    two anti-parallel edges impose contradictory half-plane
-    constraints — the holed-star fuzz caught self-differences
-    returning spurious pieces through both paths."""
+    Float rounding of exact output vertices produces both when
+    exact-distinct neighbours round to one float."""
     pts = list(ring[:-1])
     changed = True
     while changed and len(pts) >= 3:
@@ -717,117 +404,10 @@ def _dedupe_closed(ring: list[Pt]) -> list[Pt]:
     return pts + pts[:1]
 
 
-def _clip_halfplane(pts: list[Pt], a: Pt, b: Pt, keep_left: bool) -> list[Pt]:
-    """Clip an OPEN convex vertex list to one side of the directed line
-    a→b (the Sutherland–Hodgman single-edge step, exposed standalone)."""
-    ex, ey = b[0] - a[0], b[1] - a[1]
-
-    def side(p: Pt) -> float:
-        s = ex * (p[1] - a[1]) - ey * (p[0] - a[0])
-        return s if keep_left else -s
-
-    out: list[Pt] = []
-    for i, p in enumerate(pts):
-        q = pts[(i + 1) % len(pts)]
-        sp, sq = side(p), side(q)
-        if sp >= 0:
-            out.append(p)
-        if (sp >= 0) != (sq >= 0):
-            den = side(q) - side(p)
-            t = -sp / den
-            out.append((p[0] + t * (q[0] - p[0]), p[1] + t * (q[1] - p[1])))
-    return out
-
-
-def _convex_difference(ca: list[Pt], cb: list[Pt]) -> list[list[Pt]]:
-    """EXACT a − b for CLOSED convex rings, as a list of closed convex
-    rings with pairwise-disjoint interiors.
-
-    The standard half-plane decomposition: orient b CCW; piece_i is a
-    clipped to the RIGHT of b's edge i and to the LEFT of edges 0..i−1.
-    Any point of a outside b is right of at least one edge and lands in
-    the piece of the FIRST such edge (left of all earlier ones), points
-    inside b are right of no edge — so the pieces partition a − b.
-
-    ``cb`` MUST be duplicate-free (see _dedupe_closed): a zero-length
-    edge's right-half-plane is everything, which would emit all of
-    ``ca`` as a piece."""
-    cb = _dedupe_closed(cb)
-    if len(cb) < 4:
-        return [ca]  # zero-area subtrahend removes nothing
-    if _signed_area_ring(cb) < 0:
-        cb = cb[::-1]
-    pieces: list[list[Pt]] = []
-    for i in range(len(cb) - 1):
-        work = list(ca[:-1])
-        work = _clip_halfplane(work, cb[i], cb[i + 1], keep_left=False)
-        for j in range(i):
-            if not work:
-                break
-            work = _clip_halfplane(work, cb[j], cb[j + 1], keep_left=True)
-        if len(work) >= 3 and _ring_area(work) > 0:
-            pieces.append(_dedupe_closed(work + [work[0]]))
-    return pieces
-
-
 def _ring_bbox(ring: list[Pt]) -> Rect:
     xs = [p[0] for p in ring]
     ys = [p[1] for p in ring]
     return (min(xs), min(ys), max(xs), max(ys))
-
-
-def _bboxes_overlap(a: Rect, b: Rect) -> bool:
-    return a[0] < b[2] and b[0] < a[2] and a[1] < b[3] and b[1] < a[3]
-
-
-def _rings_minus_sub(
-    rings: list[list[Pt]], sub_rings: list[list[Pt]]
-) -> list[list[Pt]]:
-    """Subtract a PRE-DECOMPOSED list of convex subtrahend rings from a
-    list of closed CONVEX rings. Callers subtracting the same part from
-    many pieces decompose it ONCE and pass the rings here (code-review
-    r7 — the per-piece re-decomposition was O(pieces · n²))."""
-    subs = [(s, _ring_bbox(s)) for s in sub_rings]
-
-    def diff_one(r: list[Pt], s: list[Pt], sb: Rect) -> list[list[Pt]]:
-        # bbox reject, then clip test: disjoint (or 1-D touch) keeps
-        # the ring whole rather than letting the half-plane
-        # decomposition split it along s's extended edge lines
-        if not _bboxes_overlap(_ring_bbox(r), sb) or _clip_to_poly(r, s) is None:
-            return [r]
-        return _convex_difference(r, s)
-
-    work = rings
-    for s, sb in subs:
-        work = [piece for r in work for piece in diff_one(r, s, sb)]
-        if not work:
-            break
-    return work
-
-
-def _rings_minus_part(rings: list[list[Pt]], pb: Geometry) -> list[list[Pt]]:
-    """Subtract polygon part ``pb`` from a list of closed CONVEX rings,
-    staying inside the exact class (pb convex, or rectilinear via its
-    cells — cells are rectangles, hence convex)."""
-    sub_rings = _convex_pieces_of(pb.coords)
-    if sub_rings is None:
-        raise _Unsupported("subtrahend outside the decomposable class")
-    return _rings_minus_sub(rings, sub_rings)
-
-
-def _line_minus_convex(p: Pt, q: Pt, ring: list[Pt]) -> list[tuple[Pt, Pt]]:
-    """Segment p→q minus the (closed) convex ring's interior: the ≤2
-    complement sub-segments of the clipped [t0, t1] span."""
-    seg = _clip_segment_convex(p, q, ring)
-    if seg is None:
-        return [(p, q)]
-    (a, b) = seg
-    out: list[tuple[Pt, Pt]] = []
-    if a != p:
-        out.append((p, a))
-    if b != q:
-        out.append((b, q))
-    return out
 
 
 def _line_minus_line(p: Geometry, pb: Geometry) -> list[Geometry]:
@@ -902,91 +482,66 @@ def _line_minus_line(p: Geometry, pb: Geometry) -> list[Geometry]:
     return [Geometry("LineString", c) for c in chains]
 
 
-def _pair_difference(pieces: list, pb: Geometry) -> list:
-    """Subtract simple part ``pb`` from each piece in ``pieces``
-    (points / segments-as-LineStrings / rects / convex polygons), or
-    raise _Unsupported. Zero-area subtrahends (points, lines) remove
-    nothing from 2-D pieces — PostGIS closure semantics."""
-    if pb.kind == "Point":
-        return [
-            p
-            for p in pieces
-            if isinstance(p, tuple)
-            or p.kind != "Point"
-            or p.coords != pb.coords
-        ]
-    # Decompose the subtrahend ONCE for the whole piece loop
-    # (code-review r7): pb_rects feeds the rect−rect fast path,
-    # pb_rings everything else.
-    pb_rects: list[Rect] | None = None
-    pb_rings: list[list[Pt]] | None = None
-    if pb.kind == "Polygon":
-        pb_rects = _rects_of(pb.coords)
-        pb_rings = (
-            [
-                [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
-                for x0, y0, x1, y1 in pb_rects
-            ]
-            if pb_rects is not None
-            else _convex_pieces_of(pb.coords)
-        )
-        if pb_rings is None:
-            raise _Unsupported("undecomposable subtrahend")
+def _clip_lines(lines: list[Geometry], polys: list[Geometry], inside: bool) -> list:
+    """Pieces of exact-rational LineStrings ``lines`` in the closure of
+    the exact-rational ``polys`` (``inside``) or outside all of them.
+    Each line is noded on every polygon ring (cross-only: its own
+    self-intersections stay), so each sub-segment lies wholly inside,
+    on the boundary or outside and its exact midpoint classifies it.
+    Kept sub-segments come back as 2-point LineStrings (assembly
+    dissolves collinear runs); with ``inside``, a vertex in the
+    closure with no kept neighbour is a touch POINT. Raises
+    _Unsupported for a non-simple ring."""
+    rings = [r for poly in polys for r in poly.coords]
+    if not all(_is_simple_ring(r) for r in rings):
+        raise _Unsupported("line x non-simple polygon")
+    ring_segs = [(p, q) for r in rings for p, q in zip(r, r[1:]) if p != q]
 
-    out: list = []
-    for p in pieces:
-        if isinstance(p, tuple):  # Rect piece
-            if pb.kind == "LineString":
-                out.append(p)  # 1-D subtrahend: area untouched
-            elif pb_rects is not None:
-                work = [p]
-                for c in pb_rects:
-                    work = [piece for r in work for piece in _rect_sub(r, c)]
-                out.extend(work)
-            elif pb.kind == "Polygon":
-                x0, y0, x1, y1 = p
-                cell = [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
-                out.extend(
-                    Geometry("Polygon", [r])
-                    for r in _rings_minus_sub([cell], pb_rings)
-                )
-            else:
-                raise _Unsupported(f"rect - {pb.kind}")
-        elif p.kind == "Point":
-            if not _point_in_closure(p.coords, pb):
-                out.append(p)
-        elif p.kind == "LineString":
-            if pb.kind == "LineString":
-                # line − line: crossing/touch points are measure-zero
-                # (the closure of the difference keeps them), but
-                # collinear SHARED SPANS must be cut out — the r7 code
-                # kept the minuend whole, so identical lines returned
-                # the input where PostGIS returns EMPTY (ADVICE r7 #2).
-                out.extend(_line_minus_line(p, pb))
-                continue
-            if pb.kind != "Polygon":
-                raise _Unsupported(f"line - {pb.kind}")
-            segs = list(zip(p.coords, p.coords[1:]))
-            for s in pb_rings:
-                segs = [piece for (u, v) in segs for piece in _line_minus_convex(u, v, s)]
-                if not segs:
-                    break
-            out.extend(Geometry("LineString", [u, v]) for u, v in segs)
-        elif p.kind == "Polygon":  # convex piece
-            ca = _convex_ring_of(p.coords)
-            if ca is None:
-                raise _Unsupported("non-convex residual")
-            if pb.kind == "LineString":
-                out.append(p)
-                continue
-            if pb.kind != "Polygon":
-                raise _Unsupported(f"polygon - {pb.kind}")
-            out.extend(
-                Geometry("Polygon", [r]) for r in _rings_minus_sub([ca], pb_rings)
+    def covered(pt) -> bool:
+        return any(G._point_in_polygon_frac(*pt, poly.coords) for poly in polys)
+
+    pieces: list = []
+    for line in lines:
+        pts = line.coords[:1] + [
+            q for p, q in zip(line.coords, line.coords[1:]) if q != p
+        ]
+        splits = _nod.pairwise_splits(list(zip(pts, pts[1:])), ring_segs)
+        noded = _nod.insert_split_vertices(pts, lambda si: splits[si])
+        subs = list(zip(noded, noded[1:]))
+        kept = [
+            covered(((u[0] + v[0]) / 2, (u[1] + v[1]) / 2)) == inside
+            for u, v in subs
+        ]
+        pieces.extend(
+            Geometry("LineString", [u, v]) for (u, v), k in zip(subs, kept) if k
+        )
+        if inside:
+            edge_kept = [False] + kept + [False]  # vertex i's: i, i + 1
+            pieces.extend(
+                Geometry("Point", v)
+                for i, v in enumerate(noded)
+                if not (edge_kept[i] or edge_kept[i + 1]) and covered(v)
             )
-        else:
-            raise _Unsupported(f"{p.kind} difference")
-    return out
+    return pieces
+
+
+def _pair_difference(pieces: list, pb: Geometry) -> list:
+    """Subtract simple exact-rational part ``pb`` from point / line
+    pieces. Zero-area subtrahends remove only what they cover in
+    closure: a point removes points, a line removes points on it and
+    its collinear shared spans — PostGIS closure semantics."""
+    pts = [p for p in pieces if p.kind == "Point" and not _point_in_closure(p.coords, pb)]
+    lines = [p for p in pieces if p.kind == "LineString"]
+    if pb.kind == "LineString":
+        # line − line: crossing/touch points are measure-zero (the
+        # closure of the difference keeps them), but collinear SHARED
+        # SPANS must be cut out — the r7 code kept the minuend whole,
+        # so identical lines returned the input where PostGIS returns
+        # EMPTY (ADVICE r7 #2).
+        lines = [q for p in lines for q in _line_minus_line(p, pb)]
+    elif pb.kind == "Polygon" and lines:
+        lines = _clip_lines(lines, [pb], inside=False)
+    return pts + lines
 
 
 # ---------------------------------------------------------------------------
@@ -1116,15 +671,9 @@ def _merge_contiguous_lines(lines: list[Geometry]) -> list[Geometry]:
     return out
 
 
-def _assemble(pieces: list) -> Geometry | None:
-    """Combine disjoint pieces (Geometry parts and cell Rects) into one
-    geometry; None means EMPTY."""
-    rects = [p for p in pieces if isinstance(p, tuple)]
-    geoms = [p for p in pieces if not isinstance(p, tuple)]
-    if rects:
-        for poly_rings in _rect_union_polys(rects):
-            geoms.append(Geometry("Polygon", poly_rings))
-
+def _assemble(geoms: list) -> Geometry | None:
+    """Combine pieces (the face overlay's polygons plus point/line
+    pieces) into one geometry; None means EMPTY."""
     pts = [g for g in geoms if g.kind == "Point"]
     lines = _dissolve_collinear_spans(
         [g for g in geoms if g.kind == "LineString"]
@@ -1181,38 +730,60 @@ def _assemble(pieces: list) -> Geometry | None:
     return Geometry("MultiPolygon", [g.coords for g in polys])
 
 
+def _polygons(g: Geometry) -> list[Geometry]:
+    return [p for p in _flatten(g) if p.kind == "Polygon"]
+
+
+def _areal(a_polys: list[Geometry], b_polys: list[Geometry], op: str) -> list:
+    """``a_polys`` ``op`` ``b_polys`` through the face overlay
+    (functions/dissolve.py), as exact-rational Polygons."""
+    return [
+        Geometry("Polygon", rings)
+        for rings in _dis.overlay_rings(a_polys, b_polys, _dis.KEEP[op])
+    ]
+
+
 def intersection_geoms(a: Geometry, b: Geometry) -> Geometry | None:
-    """a ∩ b over flattened simple parts (parts of a valid Multi* have
-    disjoint interiors, so piecewise intersections are disjoint too).
-    Returns None for EMPTY. Raises _Unsupported outside the class."""
-    a_parts = [_frac_part(p) for p in _flatten(a)]
-    b_parts = [_frac_part(p) for p in _flatten(b)]
-    pieces: list = []
-    for pa in a_parts:
-        for pb in b_parts:
-            pieces.extend(_pair_intersection(pa, pb))
+    """a ∩ b: polygon parts through the face overlay, plus the boundary
+    contact of every polygon part pair whose interiors do not overlap
+    (one pair each: iff the area is empty); every other part pair
+    piecewise. Returns None for EMPTY. Raises _Unsupported outside the
+    class."""
+    fa = [_frac_part(p) for p in _flatten(a)]
+    fb = [_frac_part(p) for p in _flatten(b)]
+    pieces: list = [
+        piece
+        for pa in fa
+        for pb in fb
+        if not (pa.kind == "Polygon" and pb.kind == "Polygon")
+        for piece in _pair_intersection(pa, pb)
+    ]
+    a_polys, b_polys = _polygons(a), _polygons(b)
+    if a_polys and b_polys:
+        area = _areal(a_polys, b_polys, "intersection")
+        single = len(a_polys) == len(b_polys) == 1
+        pieces.extend(area)
+        pieces.extend(
+            piece
+            for pa in a_polys
+            for pb in b_polys
+            if not (area and (single or _dis.interiors_overlap(pa, pb)))
+            for piece in _polygon_boundary_contact(_frac_part(pa), _frac_part(pb))
+        )
     out = _assemble(pieces)
     return None if out is None else _drop_degenerate_float(_float_geom(out))
 
 
 def _difference_pieces(a: Geometry, b: Geometry) -> list:
-    """Pieces of a − b (each part of a successively loses every part of
-    b) — unassembled, so ST_SymDifference can pool both directions'
-    pieces into ONE assembly. Raises _Unsupported outside the class."""
+    """Point and line pieces of a − b (each such part of a successively
+    loses every part of b); the areal part is the face overlay's.
+    Raises _Unsupported outside the class."""
     b_parts = [_frac_part(p) for p in _flatten(b)]
     out: list = []
-    for pa in [_frac_part(p) for p in _flatten(a)]:
+    for pa in _flatten(a):
         if pa.kind == "Polygon":
-            r = _rects_of(pa.coords)
-            if r is not None:
-                pieces: list = list(r)  # rect cells: dissolved output
-            else:
-                rings = _convex_pieces_of(pa.coords)
-                if rings is None:
-                    raise _Unsupported("minuend outside the decomposable class")
-                pieces = [Geometry("Polygon", [ring]) for ring in rings]
-        else:
-            pieces = [pa]
+            continue
+        pieces = [_frac_part(pa)]
         for pb in b_parts:
             pieces = _pair_difference(pieces, pb)
             if not pieces:
@@ -1224,17 +795,22 @@ def _difference_pieces(a: Geometry, b: Geometry) -> list:
 def difference_geoms(a: Geometry, b: Geometry) -> Geometry | None:
     """a − b. Returns None for EMPTY. Raises _Unsupported outside the
     class."""
-    res = _assemble(_difference_pieces(a, b))
+    a_polys = _polygons(a)
+    area = _areal(a_polys, _polygons(b), "difference") if a_polys else []
+    res = _assemble(area + _difference_pieces(a, b))
     return None if res is None else _drop_degenerate_float(_float_geom(res))
 
 
 def symdifference_geoms(a: Geometry, b: Geometry) -> Geometry | None:
-    """(a − b) ∪ (b − a): the two directions' piece sets have disjoint
-    interiors by construction (each is carved out of the other input's
-    complement), so one pooled assembly — the same dissolve the union
-    sink applies — is the exact symmetric difference. Returns None for
-    EMPTY. Raises _Unsupported outside the class."""
-    res = _assemble(_difference_pieces(a, b) + _difference_pieces(b, a))
+    """(a − b) ∪ (b − a): the areal part in ONE face overlay (faces in
+    exactly one operand, so a − b and b − a pieces sharing an edge
+    dissolve), the point/line parts from both directions. Returns None
+    for EMPTY. Raises _Unsupported outside the class."""
+    res = _assemble(
+        _areal(_polygons(a), _polygons(b), "symdifference")
+        + _difference_pieces(a, b)
+        + _difference_pieces(b, a)
+    )
     return None if res is None else _drop_degenerate_float(_float_geom(res))
 
 

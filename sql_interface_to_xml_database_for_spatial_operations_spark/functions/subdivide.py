@@ -17,9 +17,9 @@ Semantics follow PostGIS ST_Subdivide(geom, max_vertices):
   piece to the same L forever (the PostGIS subdivide non-convergence
   class, fixed there the same way), while cutting at the corner
   resolves it into two rectangles. Clips run on the exact overlay
-  kernel (``overlay.intersection_geoms``) — inputs outside its
-  decomposable class raise ``overlay._Unsupported`` (NULL at the SQL
-  surface), never an approximate clip.
+  kernel (``overlay.intersection_geoms``) — inputs outside its class
+  (a self-intersecting ring) raise ``overlay._Unsupported`` (NULL at
+  the SQL surface), never an approximate clip.
 - Every emitted piece honors ``max_vertices`` — a piece still over
   budget at the recursion cap or in a float-collapsed extent raises
   ``overlay._Unsupported`` (loud NULL), never ships (ADVICE r11).

@@ -242,7 +242,7 @@ def delaunay_geom(g: Geometry) -> Geometry | None:
 # ---------------------------------------------------------------------------
 
 
-def _clip_halfplane(
+def _clip_cell_halfplane(
     poly: list[FPoint], a: Fraction, b: Fraction, c: Fraction
 ) -> list[FPoint]:
     """Sutherland-Hodgman: keep the side a·x + b·y <= c of an OPEN
@@ -296,7 +296,7 @@ def voronoi_cells(points: list[Point]) -> list[tuple[FPoint, list[FPoint]]]:
             a = 2 * (o[0] - s[0])
             b = 2 * (o[1] - s[1])
             c = o[0] * o[0] + o[1] * o[1] - s[0] * s[0] - s[1] * s[1]
-            cell = _clip_halfplane(cell, a, b, c)
+            cell = _clip_cell_halfplane(cell, a, b, c)
             if not cell:
                 break
         if len(cell) >= 3:

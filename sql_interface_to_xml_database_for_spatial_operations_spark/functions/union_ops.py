@@ -432,7 +432,7 @@ def union_geoms(
                 _simple_ring(r) for r in p.coords
             ):
                 # L-shapes/holed partials re-dissolve. The simplicity
-                # gate matches overlay._rects_of (ADVICE r7 #4): a
+                # gate matches the overlay's (ADVICE r7 #4): a
                 # SELF-INTERSECTING axis-parallel ring passes the cell
                 # decomposition via even-odd reinterpretation, so
                 # without the gate ST_Union silently rewrote it while
@@ -475,37 +475,19 @@ def union_geoms(
         from . import overlay as _ov
         from . import relations as _rel
 
-        # Each part decomposes into exact-rational convex pieces at
-        # most ONCE (code-review r7): the adjacency test and the
-        # seamed-resolution path below share this cache.
-        decomp: dict[int, list | None] = {}
-
-        def dec(k: int) -> list | None:
-            if k not in decomp:
-                decomp[k] = _ov._convex_pieces_of(kept[k].coords)
-            return decomp[k]
-
         def _interiors_overlap(i: int, j: int) -> bool:
-            # Exact-rational witness first (r7): some pair of convex
-            # pieces clips to positive area iff the interiors truly
-            # overlap — the crossing/vertex-based predicate missed
-            # IDENTICAL polygons whose coincident boundaries admit no
-            # proper crossing (star fuzz: duplicates stacked silently,
-            # doubling the union's area). Fall back to the predicate
-            # only outside the overlay's decomposable class. Strict
-            # bbox overlap prescreens: the dissolve's disjoint parts
-            # almost never share bboxes, and the exact clip is the
-            # expensive path.
-            (ax0, ay0, ax1, ay1) = G.bbox(kept[i])
-            (bx0, by0, bx1, by1) = G.bbox(kept[j])
-            if not (ax0 < bx1 and bx0 < ax1 and ay0 < by1 and by0 < ay1):
-                return False
-            pi, pj = dec(i), dec(j)
-            if pi is None or pj is None:
+            # Exact witness first (r7): some arrangement face lies
+            # inside both parts iff the interiors truly overlap — the
+            # crossing/vertex-based predicate missed IDENTICAL polygons
+            # whose coincident boundaries admit no proper crossing
+            # (star fuzz: duplicates stacked silently, doubling the
+            # union's area). Fall back to the predicate only for
+            # non-simple rings, which the face kernel refuses (their
+            # component is repaired before the dissolve below).
+            try:
+                return _dis.interiors_overlap(kept[i], kept[j])
+            except _ov._Unsupported:
                 return _rel.interiors_intersect(kept[i], kept[j])
-            return any(
-                _ov._clip_to_poly(ra, rb) is not None for ra in pi for rb in pj
-            )
 
         n = len(kept)
         segs_cache: dict[int, list | None] = {}

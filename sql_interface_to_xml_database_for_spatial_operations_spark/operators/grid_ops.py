@@ -1007,7 +1007,9 @@ _ORACLE_VALS = {
         "CAST(CAST(floor((maxy - miny - 5) * 4096 / (maxy - miny) + 0.5) AS BIGINT) AS VARCHAR)",
         "')'",
     ),
-    "mvt_box": "'POLYGON ((0 4096, 4096 4096, 4096 0, 0 0, 0 4096))'",
+    # the clip's face-overlay ring (CCW from its smallest directed
+    # edge), reversed to MVT screen winding
+    "mvt_box": "'POLYGON ((0 0, 0 4096, 4096 4096, 4096 0, 0 0))'",
     "mvt_clip": sql_concat(
         "'LINESTRING ('",
         "CAST(CAST(floor(10 * 4096 / (maxx - minx) + 0.5) AS BIGINT) AS VARCHAR)",

@@ -1,24 +1,29 @@
-"""Driver row for ST_Intersection / ST_Difference (functions/overlay.py).
+"""Driver rows for ST_Intersection / ST_Difference (q139) and
+ST_SymDifference (q146) (functions/overlay.py).
 
-The reference forwards both names to PostGIS (reference
+The reference forwards these names to PostGIS (reference
 src/index.ts:44-63 — any PostGIS-accepted function rides the rebuilt
-PostgreSQL query); here they are native pandas UDFs and this row gates
-them with an exact oracle over two fixture families:
+PostgreSQL query); here they are native pandas UDFs on the
+arrangement-face overlay kernel (functions/dissolve.py), and these
+rows gate them with an exact oracle over two kinds of fixture family:
 
-- **box × box** (rectilinear path): the intersection of two
-  axis-aligned rectangles is the rectangle of coordinate-wise max/min
-  bounds, so DuckDB reconstructs the expected intersection WKT
-  **string** (exact vertex walk of the engine's dissolve serializer:
-  (x0 y1, x0 y0, x1 y0, x1 y1, x0 y1) — pinned by
+- **box × box**: the intersection of two axis-aligned rectangles is
+  the rectangle of coordinate-wise max/min bounds, so DuckDB
+  reconstructs the expected intersection WKT **string** (exact vertex
+  walk of the face overlay's ring convention — shell CCW, starting at
+  its lexicographically smallest directed edge:
+  (x0 y0, x1 y0, x1 y1, x0 y1, x0 y0) — pinned by
   tests/test_overlay.py) and both areas in closed form.
-- **arrowhead × box** (triangulation path): a NON-convex quad overlaps
-  its nation's box, exercising ear clipping + half-plane decomposition.
-  Its clipped shape is not string-buildable in SQL, so the oracle pins
-  the exact INVARIANTS instead (the q58-style bounded-oracle pattern):
-  inclusion-exclusion residual area(a∩b) + area(a−b) − area(a) = 0 in
-  micro-units (coordinates are integers, so genuine errors are ≥ whole
-  units; FP noise is ~1e-10), intersection symmetry in micro-units, and
-  a non-triviality flag proving the overlap isn't vacuous.
+- **arrowhead × box, concave × concave, holed × concave**: a
+  NON-convex quad overlaps its nation's box, and two concave fixtures
+  (one with a hole) overlap each other, through the same face kernel.
+  Their clipped shapes are not string-buildable in SQL, so the oracle
+  pins the exact INVARIANTS instead (the q58-style bounded-oracle
+  pattern): inclusion-exclusion residual area(a∩b) + area(a−b) −
+  area(a) = 0 in micro-units (coordinates are integers, so genuine
+  errors are ≥ whole units; FP noise is ~1e-10), intersection symmetry
+  in micro-units, and a non-triviality flag proving the overlap isn't
+  vacuous.
 
 Scale shape: the pair generator is a broadcast range join on bbox
 bounds (boxes are a dimension table; at 100 TB the same query over a
@@ -70,11 +75,11 @@ _Q139_ORACLE = f"""
        AND a.miny < b.maxy AND b.miny < a.maxy
     )
     SELECT 'box' AS fam, key1, key2,
-           'POLYGON ((' || {_fmt_sql("ix0")} || ' ' || {_fmt_sql("iy1")} || ', '
-                        || {_fmt_sql("ix0")} || ' ' || {_fmt_sql("iy0")} || ', '
+           'POLYGON ((' || {_fmt_sql("ix0")} || ' ' || {_fmt_sql("iy0")} || ', '
                         || {_fmt_sql("ix1")} || ' ' || {_fmt_sql("iy0")} || ', '
                         || {_fmt_sql("ix1")} || ' ' || {_fmt_sql("iy1")} || ', '
-                        || {_fmt_sql("ix0")} || ' ' || {_fmt_sql("iy1")} || '))'
+                        || {_fmt_sql("ix0")} || ' ' || {_fmt_sql("iy1")} || ', '
+                        || {_fmt_sql("ix0")} || ' ' || {_fmt_sql("iy0")} || '))'
              AS inter_wkt,
            (ix1 - ix0) * (iy1 - iy0) AS inter_area,
            area_a - (ix1 - ix0) * (iy1 - iy0) AS diff_area,
@@ -97,8 +102,8 @@ _Q139_ORACLE = f"""
 @query("q139_st_intersection", oracle=_Q139_ORACLE)
 def q139_st_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12: ST_Intersection + ST_Difference. Box pairs check exact
-    values; arrowhead-vs-box rows check exact invariants through the
-    triangulation path (module docstring)."""
+    values; the arrow, concave and holed rows check exact invariants
+    through the general face overlay (module docstring)."""
     boxes = nation_boxes(spark, sf_dir).withColumn(
         "geom", F.expr("st_makeenvelope(minx, miny, maxx, maxy)")
     )
@@ -226,10 +231,11 @@ _Q146_ORACLE = f"""
 
 @query("q146_st_symdifference", oracle=_Q146_ORACLE)
 def q146_st_symdifference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F12: ST_SymDifference — (a − b) ∪ (b − a) pooled into one exact
-    assembly (functions/overlay.py symdifference_geoms). Box pairs pin
-    the exact area closed-form (A + B − 2·A∩B); arrowhead-vs-box rows
-    (triangulation path) pin the inclusion–exclusion residual
+    """F12: ST_SymDifference — the faces inside exactly one operand,
+    dissolved by one face overlay (functions/overlay.py
+    symdifference_geoms). Box pairs pin the exact area closed-form
+    (A + B − 2·A∩B); the arrow, concave and holed rows pin the
+    inclusion–exclusion residual
     area(aΔb) − area(a) − area(b) + 2·area(a∩b) = 0 and commutativity
     in micro-units, plus a non-triviality flag. Same broadcast
     bbox-pair generator and 100 TB shape as q139 (module docstring)."""

@@ -22,6 +22,7 @@ import pytest
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import geometry as G
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions.buffer import buffer_wkt
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions.geometry import Geometry
+from sql_interface_to_xml_database_for_spatial_operations_spark.functions.validity import isvalid_wkt
 
 
 def _area(w: str) -> float:
@@ -102,11 +103,15 @@ class TestClosedFormAreas:
         exp = 400 + 80 * r + _ngon_area(r) - (8 - 2 * r) ** 2
         assert abs(_area(w) - exp) < 1e-9
         assert not G.within(Geometry("Point", (10.0, 10.0)), G.parse_wkt(w))
+        # one dissolved, OGC-valid polygon with its shrunk hole
+        assert G.parse_wkt(w).kind == "Polygon" and len(G.parse_wkt(w).coords) == 2
+        assert isvalid_wkt(w)
 
     def test_negative_buffer_erosion(self):
         r = 2.0
         w = buffer_wkt("POLYGON ((0 0, 10 0, 10 6, 0 6, 0 0))", -r)
         assert abs(_area(w) - (10 - 2 * r) * (6 - 2 * r)) < 1e-9
+        assert w == "POLYGON ((2 2, 8 2, 8 4, 2 4, 2 2))"  # dissolved, no seams
         # erode past the core -> EMPTY
         assert buffer_wkt("POLYGON ((0 0, 10 0, 10 6, 0 6, 0 0))", -3.0) == "POLYGON EMPTY"
         assert buffer_wkt("LINESTRING (0 0, 5 5)", -1.0) == "POLYGON EMPTY"
@@ -264,7 +269,7 @@ class TestStyleParameters:
     def test_mitre_erosion_and_holes(self):
         box = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
         assert self._bs(box, -2.0, "join=mitre") == (
-            "POLYGON ((2 8, 2 2, 8 2, 8 8, 2 8))"
+            "POLYGON ((2 2, 8 2, 8 8, 2 8, 2 2))"
         )
         holed = (
             "POLYGON ((0 0, 20 0, 20 20, 0 20, 0 0),"
