@@ -27,14 +27,14 @@ Scale shape — the 100 TB plan, not a pairwise cross join:
 2. exact distance filter on the candidates (same float formula as the
    oracle: dx² + dy² ≤ eps², bit-identical binary64 on both engines);
 3. degree count → core flag (one aggregate);
-4. core-core edges (deduplicated to one direction — the CC helpers
-   mirror internally) → ``dedup.connected_components_star``
-   (alternating large-star/small-star edge contraction, Kiveris et
-   al. 2014). Rounds are O(log² n) in component size — 6 measured at
-   sf0.1 — NOT component hop diameter, so a chain of points spaced
-   just under eps costs the same handful of shuffle rounds as a blob;
-   min-label propagation (the r10 implementation) needed ~25 rounds
-   here and O(point count) on eps-chains. Isolated cores keep their
+4. core-core edges (deduplicated to one direction —
+   ``connected_components`` orients every edge itself) →
+   ``dedup.connected_components`` (alternating large-star/small-star
+   edge contraction, Kiveris et al. 2014). Rounds are O(log² n) in
+   component size, NOT component hop diameter, so a chain of points
+   spaced just under eps costs the same handful of shuffle rounds as
+   a blob; one-hop-per-round label propagation would need ~25 rounds
+   at sf0.1 and O(point count) on eps-chains. Isolated cores keep their
    own label via the left-join coalesce; (q47/q97's
    ``spatial_ops._grid_candidates`` is the fixture-specialized
    ancestor of step 1's candidate join — this module's ``dbscan``
@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import connected_components_star
+from .dedup import connected_components
 from .registry import query
 from .spatial_ops import CUSTOMER_POINTS_SQL, customer_points
 
@@ -125,15 +125,12 @@ def dbscan(
     cedges = (
         nbr.join(core.select(F.col("id").alias("ia")), "ia")
         .join(core.select(F.col("id").alias("ib")), "ib")
-        .filter(F.col("ia") < F.col("ib"))  # CC mirrors internally
+        .filter(F.col("ia") < F.col("ib"))  # CC orients edges itself
         .select("ia", "ib")
     )
-    # star contraction, not min-label propagation: DBSCAN components at
-    # eps-spacing are chain-shaped, so label propagation needs
-    # O(diameter) shuffle rounds (~25 at sf0.1) where large-star/
-    # small-star needs O(log² n) (measured 6) — and an eps-chain of ANY
-    # depth stays inside the default round budget (r11)
-    labels = connected_components_star(cedges)
+    # DBSCAN components at eps-spacing are chain-shaped; star
+    # contraction's round count does not grow with their hop diameter
+    labels = connected_components(cedges)
     clab = (
         core.join(labels, "id", "left")
         .select("id", F.coalesce(F.col("label"), F.col("id")).alias("label"))
@@ -197,7 +194,8 @@ _Q160_ORACLE = f"""
 def q160_cluster_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed DBSCAN (ST_ClusterDBSCAN analog) over the customer
     point features, partitioned by nation, eps=10, minpts=3 — grid-cell
-    candidate join + min-label connected components (module docstring).
+    candidate join + star-contraction connected components (module
+    docstring).
     Oracle: recursive-CTE transitive closure."""
     pts = customer_points(spark, sf_dir)
     return dbscan(

@@ -535,144 +535,25 @@ def q69_embedding_neardup(spark, sf_dir):
 def q90_dedup_clusters(spark, sf_dir):
     """Dedup cluster assignment: connected components over the near-dup
     pair graph (the step after pair generation — each component keeps one
-    canonical doc, min doc_id). Oracle: DuckDB recursive-CTE transitive
-    closure."""
+    canonical doc, min doc_id), by :func:`connected_components`' star
+    contraction, which runs the pair join once. Oracle: DuckDB
+    recursive-CTE transitive closure."""
     pairs = jaccard_pairs(spark, sf_dir).select("doc1", "doc2")
     return connected_components(pairs).select(
         F.col("id").alias("doc_id"), F.col("label").cast("bigint").alias("cluster_id")
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iters: int = 50,
-    check_every: int = 1,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iters: int = 30) -> DataFrame:
     """Connected components of an undirected pair graph → (id, label) with
-    label = component min id. Iterative min-label propagation: every
-    round is one shuffle-join (neighbor labels) + one aggregate; rounds ≈
-    component diameter, tiny for dup clusters. State lives in cached
-    DataFrames, never on the driver (the loop only reads the convergence
-    counter) — the standard Spark shape for iterative graph algorithms.
-
-    Three loop-cost controls:
-
-    - min-label propagation is monotone (labels only ever decrease), so
-      convergence is detected by comparing ``sum(label)`` across checks —
-      one map-side-combinable aggregate, no join against the previous
-      state (decimal(38,0) so corpus-scale id sums can't overflow);
-    - the check runs every ``check_every`` rounds. Default 1: near-dup
-      graphs are near-cliques (diameter 1-2), and the first conclusive
-      sum comparison needs two checks, so per-round checking detects a
-      round-1 convergence at round 2 where check_every=2 runs four
-      propagation rounds to conclude at its second check (measured
-      -24 % on the q91 pipeline at sf0.1). Raise it for long-chain
-      graphs where extra checkpoints outweigh saved rounds;
-    - each check localCheckpoints the labels, truncating lineage so the
-      plan doesn't grow with iteration count (20+ chained joins would
-      stall the optimizer long before the data is the problem).
-
-    For long-diameter graphs (chains of near-dup documents, DBSCAN
-    eps-chains) use :func:`connected_components_star` instead: its
-    round count is O(log² n) in the component size rather than
-    O(diameter). This plain loop stays the default because near-dup
-    graphs are near-cliques (diameter 1-2) where its single join per
-    round is cheaper than star-contraction's two. A per-round
-    pointer-doubling relabel (L(v) ← L(L(v))) was tried first and
-    measured useless here — with ids random relative to the graph
-    structure it cut q160's round count only 25 → 23, because the
-    labels being chased are other local minima whose own labels still
-    improve one hop per round; see connected_components_star for the
-    algorithm that contracts the EDGE set instead.
-
-    Exceeding ``max_iters`` without converging raises: silently returning
-    half-propagated labels would yield wrong cluster ids (ADVICE r1).
-
-    The sum-convergence check requires numeric ids (a decimal cast of a
-    string label is NULL, so every check would see None == None and
-    "converge" with half-propagated labels — ADVICE r2). Non-numeric ids
-    fall back to a changed-row-count check: min-label propagation is a
-    fixpoint iteration, so one round with zero changed labels proves
-    global convergence. That check is a join+count per check instead of
-    one map-side-combinable aggregate, so numeric ids stay the fast path."""
-    from pyspark.sql.types import NumericType
-
-    c1, c2 = pairs.columns[0], pairs.columns[1]
-    # materialize the pair list ONCE before mirroring it: the union's two
-    # branches would otherwise each recompute the (potentially expensive)
-    # pair-generation plan — for q91 that is the whole shingle self-join.
-    # localCheckpoint also truncates the lineage the loop plans grow from.
-    # The pair graph is ≪ corpus (near-dup pairs only), so this is small.
-    pairs = pairs.select(c1, c2).localCheckpoint(eager=True)
-    edges = (
-        pairs.union(pairs.select(F.col(c2), F.col(c1))).toDF("src", "dst").cache()
-    )
-    id_is_numeric = isinstance(edges.schema["src"].dataType, NumericType)
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id")).cache()
-    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    prev_sum = None  # first check can't conclude; saves materializing round 0
-    converged = False
-    for i in range(1, max_iters + 1):
-        neigh = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = labels.join(neigh, labels.id == neigh.src, "left").select(
-            "id",
-            F.least(F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))).alias("label"),
-        )
-        if i % check_every == 0 or i == max_iters:
-            # LAZY checkpoint (r18, guide §1.2 fewer jobs): the agg /
-            # count action right below materializes the checkpoint AND
-            # computes the convergence check in ONE job, where
-            # eager=True paid a separate materialization job per round.
-            # Safe here because exactly one consumer branch touches
-            # new_labels before it is (checkpointed) reused next round.
-            new_labels = new_labels.localCheckpoint(eager=False)
-            if id_is_numeric:
-                row = new_labels.agg(label_sum, F.count(F.lit(1)).alias("n")).collect()[0]
-                cur_sum = row["s"]
-                # n == 0 → empty graph, trivially converged; a NULL sum on a
-                # non-empty graph must never count as convergence.
-                converged = row["n"] == 0 or (cur_sum is not None and cur_sum == prev_sum)
-                prev_sum = cur_sum
-            else:
-                prev = labels.select("id", F.col("label").alias("plabel"))
-                converged = (
-                    new_labels.join(prev, "id")
-                    .filter(F.col("label") != F.col("plabel"))
-                    .limit(1)
-                    .count()
-                    == 0
-                )
-            labels.unpersist()
-            labels = new_labels
-            if converged:
-                break
-        else:
-            labels = new_labels  # lazy: folded into the next check's plan
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iters} iterations; "
-            "raise max_iters (component diameter exceeds the bound)"
-        )
-    return labels
-
-
-def connected_components_star(
-    pairs: DataFrame, max_iters: int = 30
-) -> DataFrame:
-    """Connected components by alternating LARGE-STAR / SMALL-STAR edge
+    label = component min id, by alternating LARGE-STAR / SMALL-STAR edge
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) → (id, label) with label = component min id —
-    identical output contract to :func:`connected_components`.
+    Beyond", SoCC 2014).
 
-    Unlike min-label propagation, which moves the component minimum ONE
-    HOP per round (rounds = component diameter), these operators rewrite
-    the EDGE SET so the graph itself flattens toward a star centered at
-    the minimum:
+    Min-label propagation moves the component minimum ONE HOP per round
+    (rounds = component diameter). These operators rewrite the EDGE SET
+    instead, so the graph itself flattens toward a star centered at the
+    minimum:
 
     - large-star: every node connects its strictly-LARGER neighbors to
       the smallest node it can see (min of neighborhood ∪ self);
@@ -683,69 +564,65 @@ def connected_components_star(
     per-node collect, so a 10⁶-degree hub costs a sort, not memory) +
     one dedup, and the alternation provably converges to stars in
     O(log² n) rounds — in practice a handful regardless of diameter
-    (measured on q160's sf0.1 DBSCAN graph: 6 rounds where min-label
-    took ~25; a 100-hop chain: 5). At 100 TB the round count IS the
-    wall-clock (each round = full shuffles of the edge set), so this is
-    the path for long-diameter graphs; the plain loop wins on
-    near-clique dup graphs by doing one join per round instead of two.
+    (q160's sf0.1 DBSCAN graph: 5 rounds where min-label propagation
+    took ~25; a 100-hop chain: 7). At 100 TB the round count IS the
+    wall-clock (each round = full shuffles of the edge set). The edge
+    set shrinks monotonically toward n - #components rows (large-star
+    detaches non-min edges; dedup collapses them), so later rounds
+    shuffle LESS data.
 
-    The edge set shrinks monotonically toward n - #components rows
-    (large-star detaches non-min edges; dedup collapses them), so later
-    rounds shuffle LESS data — the opposite of label propagation whose
-    per-round cost is constant.
+    The pair list is read ONCE: it is localCheckpointed eagerly, and the
+    node list and the initial edge set both derive from that checkpoint.
+    Without it each of their three scans would re-run the caller's pair
+    plan — for q90/q91 the whole shingle self-join. The pair graph is
+    ≪ corpus (near-dup pairs only), so the checkpoint is small.
 
-    Convergence = exact edge-set fixpoint: both operators leave the
-    (deduplicated) edge set unchanged. Checked as |E'| == |E| plus an
-    empty exceptAll — set equality, not a sum heuristic, so no id-type
-    restriction: string ids work identically (min/least order
-    lexicographically). Exceeding ``max_iters`` raises, same policy as
-    the plain loop (half-contracted edges would yield wrong labels).
-    Default 30 ≈ log²(2³²) rounds — beyond any real graph.
+    Convergence is exact: the alternation ends in a star forest — every
+    child u (edges are oriented u → v with v < u) has one parent and no
+    parent is itself a child — which both operators leave unchanged and
+    which labels every child with its component min. The loop tests that
+    condition on each edge set (one aggregate), so it stops on the round
+    that reaches it instead of running one more round to see the edge
+    set repeat. A near-clique dup cluster is a star after its first
+    round, and q90/q91's pair graphs at sf0.01 and sf0.1 are star
+    forests as read, so no round runs there. No id-type restriction:
+    min/least order strings lexicographically. Exceeding ``max_iters``
+    raises (half-contracted edges would yield wrong cluster ids); the
+    default 30 ≈ log²(2³²) rounds is beyond any real graph.
 
     Cites: reference has no distributed CC (single PostGIS instance,
-    src/index.ts:44-63); this backs the ST_ClusterDBSCAN analog (q160).
+    src/index.ts:44-63); this backs the ST_ClusterDBSCAN analog (q160)
+    and the near-dup clusters (q90/q91).
     """
     from pyspark.sql.window import Window
 
     c1, c2 = pairs.columns[0], pairs.columns[1]
-    raw = pairs.select(F.col(c1).alias("a"), F.col(c2).alias("b"))
+    raw = pairs.select(F.col(c1).alias("a"), F.col(c2).alias("b")).localCheckpoint(eager=True)
     # every id mentioned in ANY pair gets an output row — including ids
-    # seen only in self-loop pairs, matching connected_components (which
-    # mirrors the unfiltered pair list into its label table)
-    # LAZY checkpoints (r18, guide §1.2 fewer jobs): nodes has exactly
-    # one consumer (the final anti-join) and E's first consumer is the
-    # count right below, so each materializes inside the job that
-    # already needs it instead of paying a separate eager job. The
-    # expensive `raw` plan is still evaluated once per checkpoint.
-    nodes = (
-        raw.select(F.col("a").alias("id"))
-        .union(raw.select(F.col("b").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # canonical child→parent orientation: (u, v) with v < u
+    # seen only in self-loop pairs; one consumer (the final anti-join)
+    nodes = raw.select(F.col("a").alias("id")).union(raw.select(F.col("b").alias("id"))).distinct()
+    # canonical child→parent orientation: (u, v) with v < u. LAZY
+    # checkpoints here and per round: the star-forest check right after
+    # each one materializes it inside the job that already needs it.
     E = (
         raw.filter(F.col("a") != F.col("b"))
         .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n_edges = E.count()
-    if n_edges == 0:
-        return nodes.select("id", F.col("id").alias("label"))
     w = Window.partitionBy("u")
-    converged = False
-    for _ in range(1, max_iters + 1):
+    converged = _is_star_forest(E)
+    for _ in range(max_iters):
+        if converged:
+            break
         # LARGE-STAR: symmetrize so every node sees its full
         # neighborhood; m = min(neighborhood ∪ self); re-hang every
         # strictly-larger neighbor v on m. Keeps (x, y<x) orientation.
         sym = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # NO dedup here (r17 optimization): duplicate (u, m) rows cannot
-        # change the small-star window MIN below, and new_E's distinct
-        # collapses them before the fixpoint check — dropping the
-        # intermediate .distinct() removes one full shuffle of the edge
-        # set per round (guide §2.4). Row growth is bounded: |ls| ≤
-        # |sym| = 2|E| with or without the dedup.
+        # no dedup here: duplicate (u, m) rows cannot change the
+        # small-star window MIN below, and the distinct after it
+        # collapses them — one full shuffle of the edge set saved per
+        # round. |ls| ≤ |sym| = 2|E| either way.
         ls = (
             sym.withColumn("m", F.least(F.min("v").over(w), F.col("u")))
             .filter(F.col("v") > F.col("u"))
@@ -756,7 +633,7 @@ def connected_components_star(
         # so each u's rows list exactly its smaller neighbors; connect
         # them AND u itself to m = min(those ∪ u). m ≤ every emitted
         # left endpoint, so orientation is preserved.
-        new_E = (
+        E = (
             ls.withColumn("m", F.least(F.min("v").over(w), F.col("u")))
             .select(
                 F.explode(
@@ -769,32 +646,33 @@ def connected_components_star(
             .select(F.col("e.x").alias("u"), F.col("e.y").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            # lazy: the count below materializes the checkpoint in the
-            # same job (r18) — one job per round, not two
             .localCheckpoint(eager=False)
         )
-        # exact fixpoint: same row count and no row of E' outside E
-        # (both deduplicated, so set equality); the previous count is
-        # carried in n_edges — one count job per round, not two
-        new_n = new_E.count()
-        if new_n == n_edges and new_E.exceptAll(E).isEmpty():
-            E = new_E
-            converged = True
-            break
-        E, n_edges = new_E, new_n
+        converged = _is_star_forest(E)
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not converge within {max_iters} "
+            f"connected_components did not converge within {max_iters} "
             "iterations; the alternation is O(log² n) rounds, so this "
             "indicates a bug, not an undersized bound"
         )
-    # fixpoint edges form stars: every non-root points at its component
-    # min; every other mentioned id (star roots, self-loop-only and
-    # otherwise isolated nodes) labels itself
-    lbl = E.groupBy("u").agg(F.min("v").alias("label")).select(
-        F.col("u").alias("id"), "label"
-    )
-    selfs = nodes.join(lbl, "id", "left_anti").select(
-        "id", F.col("id").alias("label")
-    )
+    # a star forest labels every child with its one parent, the
+    # component min; every other mentioned id (star roots, self-loop-only
+    # and otherwise isolated nodes) labels itself
+    lbl = E.select(F.col("u").alias("id"), F.col("v").alias("label"))
+    selfs = nodes.join(lbl, "id", "left_anti").select("id", F.col("id").alias("label"))
     return lbl.union(selfs)
+
+
+def _is_star_forest(E: DataFrame) -> bool:
+    """True iff the deduplicated child→parent edge set E(u, v) is a star
+    forest: no child has two parents and no parent is itself a child.
+    One aggregate over both endpoints of every edge, one job."""
+    ends = E.select(
+        F.col("u").alias("x"), F.lit(1).alias("child"), F.lit(0).alias("parent")
+    ).union(E.select("v", F.lit(0), F.lit(1)))
+    bad = (
+        ends.groupBy("x")
+        .agg(F.sum("child").alias("c"), F.max("parent").alias("p"))
+        .filter((F.col("c") > 1) | ((F.col("c") == 1) & (F.col("p") == 1)))
+    )
+    return bad.count() == 0

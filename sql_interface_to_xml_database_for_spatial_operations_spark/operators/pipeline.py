@@ -7,9 +7,10 @@ quality filter → exact dedup → near-dup pair generation (blocked) →
 cluster components → keep canonical doc per cluster → corpus stats.
 
 Scale shape: stages 1-2 are map + one hash shuffle; pair generation is
-the blocked shingle join (never O(n²)); clustering shuffles only the
-pair graph (≪ corpus); the final stats are one partial-aggregated
-groupBy. Nothing materializes on the driver.
+the blocked shingle join (never O(n²)); clustering checkpoints the pair
+list once and runs star contraction over it (``dedup.connected_components``),
+shuffling only the pair graph (≪ corpus); the final stats are one
+partial-aggregated groupBy. Nothing materializes on the driver.
 """
 
 from __future__ import annotations
