@@ -56,6 +56,15 @@ from .spatial_ops import CUSTOMER_POINTS_SQL, customer_points
 
 EPS = 10.0
 MINPTS = 3
+# A point's 3x3 neighbourhood cells (ncx, ncy) as one SQL expression over
+# its home cell (cx, cy), so building the probe side is one py4j call.
+_PROBE_CELLS_SQL = "array({})".format(
+    ", ".join(
+        f"named_struct('ncx', cx + {dx}, 'ncy', cy + {dy})"
+        for dx in (-1, 0, 1)
+        for dy in (-1, 0, 1)
+    )
+)
 
 
 def dbscan(
@@ -83,15 +92,7 @@ def dbscan(
         F.col("part").alias("pa"),
         F.col("x").alias("xa"),
         F.col("y").alias("ya"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    (F.col("cx") + dx).alias("ncx"), (F.col("cy") + dy).alias("ncy")
-                )
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
-            ])
-        ).alias("nc"),
+        F.expr(f"explode({_PROBE_CELLS_SQL})").alias("nc"),
     )
     build = cells.select(
         F.col("id").alias("ib"),

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, shared_relation
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -29,6 +29,7 @@ from .registry import query
 # ---------------------------------------------------------------------------
 
 
+@shared_relation("customer")
 def customer_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point features from customer keys (analog of the reference's
     puskesmas/masjid point tables, SURVEY.md §5)."""
@@ -49,6 +50,7 @@ CUSTOMER_POINTS_SQL = """
 """
 
 
+@shared_relation("nation")
 def nation_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Axis-aligned polygon features from nation keys (analog of the
     reference's kecamatan/province polygon tables)."""
@@ -75,6 +77,7 @@ NATION_BOXES_SQL = """
 """
 
 
+@shared_relation("region")
 def region_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region")
     minx = (F.col("r_regionkey") % 5) * 72.0 - 180.0
@@ -304,6 +307,13 @@ def q47_dwithin_pairs(spark, sf_dir):
     )
 
 
+# The 3×3 cell offsets as one SQL expression (INT dx, dy): nine
+# F.struct(F.lit…) trees cost a py4j round trip per node on every call.
+_NEIGHBORHOOD_SQL = "array({})".format(
+    ", ".join(f"named_struct('dx', {dx}, 'dy', {dy})" for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+)
+
+
 def _grid_candidates(spark, sf_dir, dist: float) -> DataFrame:
     """Grid-cell candidate pairs within ``dist``: side A keyed on its
     home cell, side B replicated into its 3×3 neighborhood, equi-join on
@@ -320,13 +330,6 @@ def _grid_candidates(spark, sf_dir, dist: float) -> DataFrame:
         cell(F.col("lon")).alias("cx"),
         cell(F.col("lat")).alias("cy"),
     )
-    neighborhood = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
     b = (
         _pts(spark, sf_dir)
         .select(
@@ -335,7 +338,7 @@ def _grid_candidates(spark, sf_dir, dist: float) -> DataFrame:
             F.col("lon").alias("lon2"),
             F.col("lat").alias("lat2"),
             F.col("geom").alias("geom2"),
-            F.explode(neighborhood).alias("o"),
+            F.expr(f"explode({_NEIGHBORHOOD_SQL})").alias("o"),
         )
         .select(
             "custkey2",

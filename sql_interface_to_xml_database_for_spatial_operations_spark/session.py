@@ -24,6 +24,21 @@ a reused worker it is NOT start-up. The daemon calls the worker's
 ``main()`` as soon as the previous task ends, and ``main()`` stamps its
 boot time before it blocks waiting for the next task, so the metric is
 the worker's idle time between tasks plus the per-task set-up.
+
+DataFrame call sites: a session built here sets
+``spark.python.sql.dataFrameDebugging.enabled=false``. With it on (the
+PySpark default), every ``Column``/``functions``/``DataFrame`` call is
+wrapped to record its Python ``file:line`` on the JVM: it walks the
+Python stack and costs about 8 py4j round trips (active-session lookup,
+JVM class lookup, a conf read, origin set and clear). Building a
+registry row makes hundreds of such calls, so with the flag on they
+are most of its driver time. The one loss is that DataFrame-API errors no longer carry
+the Python "DataFrame context"; errors in SQL text keep their SQL
+position context. PySpark reads the flag once per process, at the first
+wrapped call (``pyspark.errors.utils.is_debugging_enabled``), and
+caches it. A caller-supplied session keeps its own setting; a user who
+wants the DataFrame context must set the flag to true on their own
+session before the process makes any DataFrame call.
 """
 
 from __future__ import annotations
@@ -81,6 +96,8 @@ def get_spark(app_name: str = "spatial-sql-engine", cpus: str | None = None) -> 
             "spark.executorEnv.PYTHONPATH",
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
+        # --- No per-call call-site capture: see the module docstring ------
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Quieter local runs; harmless on a cluster.
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

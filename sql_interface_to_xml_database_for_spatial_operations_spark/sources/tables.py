@@ -9,6 +9,7 @@ parquet row-group layout replaces client-side pagination.
 
 from __future__ import annotations
 
+import functools
 import os
 import stat
 
@@ -29,9 +30,9 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Memo of inferred Parquet schemas, kept on the session object the way
-# functions/_register_once.py keeps its registration memo.
-_SCHEMAS_ATTR = "_graft_parquet_schemas"
+# Per-session memos keyed by a source file, kept on the session object
+# the way functions/_register_once.py keeps its registration memo.
+_MEMO_ATTR = "_graft_file_memo"
 # Confs that change the schema Spark infers from the same Parquet footer.
 _INFERENCE_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",
@@ -41,36 +42,77 @@ _INFERENCE_CONFS = (
 )
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` without re-inferring the schema.
+def _file_memo(spark: SparkSession, name: str, path: str, build):
+    """``build()`` memoized on ``spark`` for the regular file at ``path``.
 
-    Inference reads the file footer in a Spark job (about 0.13 s a load,
-    against 0.03 s with the schema given). The first load of a regular
-    file memoizes its schema on the session, keyed by the file's
-    identity, size and mtime and by the inference confs, so a rewritten
-    file or a changed conf infers afresh. Every call still builds a new
-    relation: self-joins keep distinct attribute ids. Directories and
-    anything else that is not a regular file are inferred every time."""
+    The key is ``name``, the file's realpath, inode, size and mtime and
+    the inference confs, so a rewritten file or a changed conf builds
+    afresh. Returns None, without building, when ``path`` is not a
+    regular file; the caller then builds unmemoized."""
     try:
         st = os.stat(path)
     except OSError:
-        st = None
-    if st is None or not stat.S_ISREG(st.st_mode):
-        return spark.read.parquet(path)
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
     key = (
+        name,
         os.path.realpath(path),
         st.st_ino,
         st.st_size,
         st.st_mtime_ns,
         tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
     )
-    schemas = spark.__dict__.setdefault(_SCHEMAS_ATTR, {})
-    schema = schemas.get(key)
+    memo = spark.__dict__.setdefault(_MEMO_ATTR, {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without re-inferring the schema.
+
+    Inference reads the file footer in a Spark job (about 0.13 s a load,
+    against 0.03 s with the schema given). The first load of a regular
+    file memoizes its schema on the session (``_file_memo``), so a
+    rewritten file or a changed conf infers afresh. Every call builds a
+    new relation with fresh attribute ids; the only relations shared
+    across calls are the derived base relations of ``shared_relation``.
+    Directories and anything else that is not a regular file are
+    inferred every time."""
+    schema = _file_memo(spark, "schema", path, lambda: spark.read.parquet(path).schema)
     if schema is None:
-        df = spark.read.parquet(path)
-        schemas[key] = df.schema
-        return df
+        return spark.read.parquet(path)
     return spark.read.schema(schema).parquet(path)
+
+
+def shared_relation(table: str):
+    """Memoize ``build(spark, sf_dir)``, a plan derived from fixture
+    table ``table`` alone, per session and per file (``_file_memo``).
+
+    A repeat call returns the same DataFrame: the analyzed plan, never
+    data. Building it costs tens of py4j round trips and a Parquet
+    read, and many rows build the same few base relations. Sharing is
+    safe because a DataFrame is immutable, and a row that uses one on
+    both sides of a join gets distinct attribute ids from Spark's
+    relation de-duplication when it names columns with ``F.col``; a
+    bound ``df["c"]`` from each side fails with Spark's ambiguous-column
+    error rather than joining wrongly. Confs other than the inference
+    confs that the analyzer reads are frozen into the plan by its first
+    build, so ``build`` must not depend on them."""
+
+    def deco(build):
+        name = f"{build.__module__}.{build.__qualname__}"
+
+        @functools.wraps(build)
+        def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
+            path = os.path.join(sf_dir, f"{table}.parquet")
+            df = _file_memo(spark, name, path, lambda: build(spark, sf_dir))
+            return build(spark, sf_dir) if df is None else df
+
+        return wrapper
+
+    return deco
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -89,3 +89,28 @@ def jobs_in_group(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def py4j_round_trips(fn):
+    """(result of ``fn()``, py4j call commands it sent to the JVM).
+
+    Counts commands sent through ``ClientServerConnection.send_command``;
+    the garbage-collection detach messages py4j sends when a Python proxy
+    dies are not calls and are skipped."""
+    from py4j import clientserver, protocol
+
+    detach = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    send = clientserver.ClientServerConnection.send_command
+    sent = [0]
+
+    def counting(self, command):
+        if not command.startswith(detach):
+            sent[0] += 1
+        return send(self, command)
+
+    clientserver.ClientServerConnection.send_command = counting
+    try:
+        out = fn()
+    finally:
+        clientserver.ClientServerConnection.send_command = send
+    return out, sent[0]
