@@ -42,7 +42,6 @@ parser accepts.
 from __future__ import annotations
 
 import math
-import re
 from collections import Counter
 
 import pandas as pd
@@ -51,11 +50,8 @@ from pyspark.sql.types import BooleanType, IntegerType, StringType
 
 from . import geometry as G
 from .geometry import Geometry
+from .wkt import _EMPTY_RE
 
-_EMPTY_RE = re.compile(
-    r"^(POINT|LINESTRING|POLYGON|MULTIPOINT|MULTILINESTRING|MULTIPOLYGON|"
-    r"GEOMETRYCOLLECTION)\s+EMPTY$"
-)
 
 
 def _int_arg(n) -> int | None:

@@ -38,7 +38,6 @@ projection.py).
 from __future__ import annotations
 
 import math
-import re
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
@@ -49,16 +48,13 @@ from . import geometry as G
 # — reusing it instead of a near-verbatim copy (code-review r8: an
 # earlier copy here had silently dropped the unknown-kind guard)
 from .projection import _map_coords
+from .wkt import _EMPTY_RE
 
 # The overlay functions emit typed EMPTY ('POLYGON EMPTY' etc.) and any
 # affine image of an empty set is that same empty set — accept the
 # extension so st_translate(st_symdifference(a, b), ...) composes
 # instead of collapsing EMPTY to NULL (code-review r8). Same pattern as
 # overlay._parse: the suffix alone on garbage stays NULL.
-_EMPTY_RE = re.compile(
-    r"^(POINT|LINESTRING|POLYGON|MULTIPOINT|MULTILINESTRING|MULTIPOLYGON|"
-    r"GEOMETRYCOLLECTION)\s+EMPTY$"
-)
 
 
 def _null_num(*vals) -> bool:

@@ -47,6 +47,7 @@ from .collection_fns import _operand
 from .constructors import _vertices
 from .geometry import Geometry
 from .noding import _chains_of, _frac_chain, polygonize_geoms
+from .wkt import _safe
 
 _MULTI_OF = {
     "Point": "MultiPoint",
@@ -131,26 +132,23 @@ def polygonize_all_wkt(wkts) -> str | None:
     return G.to_wkt(Geometry("GeometryCollection", polys))
 
 
-def _safe(fn, arr):
-    try:
-        return fn(None if arr is None else list(arr))
-    except Exception:
-        return None
+def _safe_list(fn, arr):
+    return _safe(lambda: fn(None if arr is None else list(arr)))
 
 
 @pandas_udf(StringType())
 def st_collect_all(arr: pd.Series) -> pd.Series:
-    return pd.Series([_safe(collect_all_wkt, a) for a in arr], dtype="object")
+    return pd.Series([_safe_list(collect_all_wkt, a) for a in arr], dtype="object")
 
 
 @pandas_udf(StringType())
 def st_makeline_all(arr: pd.Series) -> pd.Series:
-    return pd.Series([_safe(make_line_all_wkt, a) for a in arr], dtype="object")
+    return pd.Series([_safe_list(make_line_all_wkt, a) for a in arr], dtype="object")
 
 
 @pandas_udf(StringType())
 def st_polygonize_all(arr: pd.Series) -> pd.Series:
-    return pd.Series([_safe(polygonize_all_wkt, a) for a in arr], dtype="object")
+    return pd.Series([_safe_list(polygonize_all_wkt, a) for a in arr], dtype="object")
 
 
 ALL_AGG_FORM_FUNCTIONS = {

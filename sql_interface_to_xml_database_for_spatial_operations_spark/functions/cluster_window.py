@@ -36,6 +36,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType
 
 from . import geometry as G
+from .wkt import _num, _safe
 
 _MAX_MEMBERS = 2048  # n² pair budget ≈ 4.2M — the linearref idiom
 
@@ -57,18 +58,6 @@ def _points(wkts):
     if not pts or len(pts) > _MAX_MEMBERS:
         return None
     return pts
-
-
-def _num(v) -> float | None:
-    if v is None:
-        return None
-    try:
-        f = float(v)
-    except (TypeError, ValueError):
-        return None
-    if math.isnan(f) or not math.isfinite(f):
-        return None
-    return f
 
 
 def cluster_kmeans_ids(wkts, k) -> list | None:
@@ -160,13 +149,6 @@ def cluster_dbscan_ids(wkts, eps, minpts) -> list | None:
         if adj:
             labels[i] = min(adj)  # border → min adjacent cluster label
     return labels
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
 
 
 @pandas_udf(ArrayType(IntegerType()))

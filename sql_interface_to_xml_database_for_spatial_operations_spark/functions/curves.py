@@ -50,6 +50,7 @@ from . import geometry as G
 from .buffer import _MAX_QUAD_SEGS
 from .cells import _int_arg
 from .geometry import Geometry
+from .wkt import _split_top
 
 _CS_RE = re.compile(r"^\s*CIRCULARSTRING\s*(EMPTY|\(.*\))\s*$", re.IGNORECASE | re.DOTALL)
 _EMPTY_LINEAL_RE = re.compile(
@@ -163,25 +164,6 @@ def _cs_chain(pts, qs) -> list | None:
     return dedup
 
 
-def _split_top(body: str) -> list | None:
-    """Top-level comma split of a parenthesized-list body."""
-    out, depth, cur = [], 0, []
-    for ch in body:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return [t.strip() for t in out]
-
-
 def _bare_chain(tok: str) -> list | None:
     """A bare '(x y, x y, …)' straight-segment member."""
     if not (tok.startswith("(") and tok.endswith(")")):
@@ -229,8 +211,6 @@ def _compound_chain(body: str, qs) -> list | None:
     """Spliced chain of a COMPOUNDCURVE body '(member, member, …)' —
     None unless every junction vertex matches EXACTLY."""
     toks = _split_top(body[1:-1])
-    if toks is None or not toks:
-        return None
     chain = None
     for tok in toks:
         part = _member_chain(tok, qs)
@@ -293,8 +273,6 @@ def curvetoline_wkt(wkt, quad_segs) -> str | None:
         if m.group(1).upper() == "EMPTY":
             return "POLYGON EMPTY"
         toks = _split_top(m.group(1)[1:-1])
-        if toks is None or not toks:
-            return None
         rings = []
         for tok in toks:
             ring = _ring_chain(tok, qs)
@@ -309,8 +287,6 @@ def curvetoline_wkt(wkt, quad_segs) -> str | None:
         if m.group(1).upper() == "EMPTY":
             return "MULTILINESTRING EMPTY"
         toks = _split_top(m.group(1)[1:-1])
-        if toks is None or not toks:
-            return None
         chains: list = []
         total = 0
         for tok in toks:
@@ -334,8 +310,6 @@ def curvetoline_wkt(wkt, quad_segs) -> str | None:
         if m.group(1).upper() == "EMPTY":
             return "MULTIPOLYGON EMPTY"
         toks = _split_top(m.group(1)[1:-1])
-        if toks is None or not toks:
-            return None
         polys: list = []
         total = 0
         for tok in toks:
@@ -345,8 +319,6 @@ def curvetoline_wkt(wkt, quad_segs) -> str | None:
                 if not mm or mm.group(1).upper() == "EMPTY":
                     return None
                 ring_toks = _split_top(mm.group(1)[1:-1])
-                if ring_toks is None or not ring_toks:
-                    return None
                 rings = []
                 for rt in ring_toks:
                     ring = _ring_chain(rt, qs)
@@ -420,8 +392,6 @@ def _node_of(tok: str):
         if not m or m.group(1).upper() == "EMPTY":
             return None
         toks = _split_top(m.group(1)[1:-1])
-        if toks is None or not toks:
-            return None
         comps = []
         for t in toks:
             if t.upper().startswith("CIRCULARSTRING"):
@@ -464,8 +434,6 @@ def parse_curved(wkt):
         if body.upper() == "EMPTY":
             return ("CurvePolygon", [])
         toks = _split_top(body[1:-1])
-        if toks is None or not toks:
-            return None
         rings = [_node_of(t) for t in toks]
         if any(r is None for r in rings):
             return None
@@ -475,8 +443,6 @@ def parse_curved(wkt):
         if body.upper() == "EMPTY":
             return ("MultiCurve", [])
         toks = _split_top(body[1:-1])
-        if toks is None or not toks:
-            return None
         members = [_node_of(t) for t in toks]
         if any(m is None for m in members):
             return None
@@ -486,8 +452,6 @@ def parse_curved(wkt):
         if body.upper() == "EMPTY":
             return ("MultiSurface", [])
         toks = _split_top(body[1:-1])
-        if toks is None or not toks:
-            return None
         members = []
         for t in toks:
             tu = t.upper()

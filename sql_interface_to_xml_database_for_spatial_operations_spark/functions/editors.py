@@ -44,7 +44,6 @@ Scale shape: map-only Arrow-vectorized pandas UDFs, O(vertices)
 from __future__ import annotations
 
 import math
-import re
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
@@ -52,11 +51,8 @@ from pyspark.sql.types import StringType
 
 from . import geometry as G
 from .geometry import Geometry
+from .wkt import _EMPTY_RE
 
-_EMPTY_RE = re.compile(
-    r"^(POINT|LINESTRING|POLYGON|MULTIPOINT|MULTILINESTRING|MULTIPOLYGON|"
-    r"GEOMETRYCOLLECTION)\s+EMPTY$"
-)
 
 
 def _empty_kind(wkt) -> str | None:

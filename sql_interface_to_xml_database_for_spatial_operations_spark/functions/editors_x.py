@@ -57,6 +57,7 @@ from .geometry import Geometry
 from .noding import _chains_of, _frac_chain, polygonize_geoms
 from .split import split_geoms
 from .union_ops import _flatten, union_geoms, union_wkts
+from .wkt import _num, _safe
 
 # ---------------------------------------------------------------------------
 # ST_ForceCollection
@@ -195,18 +196,6 @@ def _collect_parts(parts: list[Geometry]) -> Geometry:
     return Geometry("GeometryCollection", parts)
 
 
-def _num(v) -> float | None:
-    if v is None:
-        return None
-    try:
-        f = float(v)
-    except (TypeError, ValueError):
-        return None
-    if isinstance(f, float) and math.isnan(f):
-        return None
-    return f if math.isfinite(f) else None
-
-
 def wrapx_wkt(w, wrap, move) -> str | None:
     wv, mv = _num(wrap), _num(move)
     if w is None or wv is None or mv is None:
@@ -316,13 +305,6 @@ def quantize_wkt(w, digits) -> str | None:
 # ---------------------------------------------------------------------------
 # pandas UDFs + registration
 # ---------------------------------------------------------------------------
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
 
 
 @pandas_udf(StringType())

@@ -34,7 +34,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from . import geometry as G
-from . import measure_m as _mm
+from . import wkt as W
 from .simplify import _tri_area2
 
 _FLT_MAX = 3.4028234663852886e38  # C float max — the PostGIS endpoint pin
@@ -97,8 +97,8 @@ def set_effective_area_wkt(wkt) -> str | None:
             return None
         out_chains.append([(p[0], p[1], m) for p, m in zip(ch, eff)])
     if g.kind == "LineString":
-        return _mm.to_m_wkt("LineString", out_chains[0])
-    return _mm.to_m_wkt("MultiLineString", out_chains)
+        return W.write("LineString", "M", out_chains[0])
+    return W.write("MultiLineString", "M", out_chains)
 
 
 @pandas_udf(StringType())

@@ -62,10 +62,10 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import IntegerType, StringType
 
 from . import geometry as G
-from . import measure_m as _mm
 from . import surface3d as _s3
 from . import wkb as _wkb
-from . import zcoord as _zc
+from . import wkt as W
+from .wkt import _safe
 
 _SRID_RE = re.compile(r"^\s*SRID\s*=\s*(-?\d+)\s*;", re.IGNORECASE)
 
@@ -189,24 +189,17 @@ def make_point(x, y) -> str | None:
 
 def point_z(x, y, z) -> str | None:
     c = _coords(x, y, z)
-    return None if c is None else _zc.to_z_wkt("Point", False, c)
+    return None if c is None else W.write("Point", "Z", c)
 
 
 def point_m(x, y, m) -> str | None:
     c = _coords(x, y, m)
-    return None if c is None else _mm.to_m_wkt("Point", c)
+    return None if c is None else W.write("Point", "M", c)
 
 
 def point_zm(x, y, z, m) -> str | None:
     c = _coords(x, y, z, m)
-    return None if c is None else _zc.to_z_wkt("Point", True, c)
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
+    return None if c is None else W.write("Point", "ZM", c)
 
 
 @pandas_udf(StringType())

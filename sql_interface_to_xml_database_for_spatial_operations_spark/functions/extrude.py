@@ -41,21 +41,15 @@ from . import geometry as G
 from . import surface3d as _s3
 from .geometry import Geometry
 from .measures import triangulate_polygon
-
-
-def _ring_area2(ring) -> float:
-    """Twice the signed area of a closed ring."""
-    s = 0.0
-    for (x0, y0), (x1, y1) in zip(ring, ring[1:]):
-        s += x0 * y1 - x1 * y0
-    return s
+from .noding import signed_area2
+from .wkt import _safe
 
 
 def _normalize_rings(rings):
     """Shell CCW, holes CW; returns closed rings (first == last)."""
     out = []
     for i, ring in enumerate(rings):
-        a2 = _ring_area2(ring)
+        a2 = signed_area2(ring)
         if a2 == 0.0:
             return None  # degenerate ring
         want_ccw = i == 0
@@ -135,13 +129,6 @@ def tesselate_wkt(wkt) -> str | None:
     if not patches:
         return None
     return _s3.to_surface_wkt("Tin", False, patches)
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
 
 
 @pandas_udf(StringType())

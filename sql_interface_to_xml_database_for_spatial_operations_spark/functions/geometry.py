@@ -23,6 +23,9 @@ from fractions import Fraction
 import re
 from typing import Sequence
 
+from . import wkt as W
+from .wkt import _fmt  # noqa: F401  (the library formats ordinates via G._fmt)
+
 Point = tuple[float, float]
 Ring = list[Point]
 
@@ -54,27 +57,16 @@ class Geometry:
         return Geometry("Polygon", [ring])
 
 
-def _parse_coord_seq(body: str) -> Ring:
-    pts = []
-    for pair in body.split(","):
-        xy = pair.split()
-        pts.append((float(xy[0]), float(xy[1])))
-    return pts
-
-
-def _split_rings(body: str) -> list[str]:
-    """Split '(...),(...)' at depth-0 commas."""
-    parts, depth, start = [], 0, 0
-    for i, ch in enumerate(body):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(body[start:i])
-            start = i + 1
-    parts.append(body[start:])
-    return [p.strip() for p in parts]
+def _xy(g) -> Geometry | None:
+    """The planar view of a codec triple: XY only, and no EMPTY at any
+    level (the planar kernels have no empty geometry)."""
+    kind, dims, coords = g
+    if dims or not coords:
+        return None
+    if kind == "GeometryCollection":
+        subs = [_xy(m) for m in coords]
+        return None if None in subs else Geometry(kind, subs)
+    return Geometry(kind, coords)
 
 
 def parse_wkt(wkt: str) -> Geometry | None:
@@ -88,73 +80,14 @@ def parse_wkt(wkt: str) -> Geometry | None:
     m = _POINT_RE.match(s)
     if m:  # fast path: points dominate the fixtures
         return Geometry("Point", (float(m.group(1)), float(m.group(2))))
-    try:
-        head, _, tail = s.partition("(")
-        kind = head.strip().upper()
-        body = tail.rsplit(")", 1)[0]
-        if kind == "LINESTRING":
-            return Geometry("LineString", _parse_coord_seq(body))
-        if kind == "MULTIPOINT":
-            pts = []
-            for part in _split_rings(body):
-                part = part.strip().strip("()")
-                xy = part.split()
-                pts.append((float(xy[0]), float(xy[1])))
-            return Geometry("MultiPoint", pts)
-        if kind == "MULTILINESTRING":
-            lines = [_parse_coord_seq(r.strip().strip("()")) for r in _split_rings(body)]
-            return Geometry("MultiLineString", lines)
-        if kind == "POLYGON":
-            rings = [_parse_coord_seq(r.strip().strip("()")) for r in _split_rings(body)]
-            return Geometry("Polygon", rings)
-        if kind == "GEOMETRYCOLLECTION":
-            geoms = [parse_wkt(part) for part in _split_rings(body)]
-            if any(g is None for g in geoms):
-                return None
-            return Geometry("GeometryCollection", geoms)
-        if kind == "MULTIPOLYGON":
-            polys = []
-            for poly in _split_rings(body):
-                poly = poly.strip()
-                poly_body = poly[1:-1] if poly.startswith("(") else poly
-                polys.append([_parse_coord_seq(r.strip().strip("()")) for r in _split_rings(poly_body)])
-            return Geometry("MultiPolygon", polys)
-        if kind == "POINT":
-            xy = body.split()
-            return Geometry("Point", (float(xy[0]), float(xy[1])))
-    except (ValueError, IndexError):
-        return None
-    return None
-
-
-def _fmt(v: float) -> str:
-    return repr(int(v)) if float(v).is_integer() else repr(v)
-
-
-def _ring_wkt(ring: Sequence[Point]) -> str:
-    return "(" + ", ".join(f"{_fmt(x)} {_fmt(y)}" for x, y in ring) + ")"
+    g = W.read(s)
+    return None if g is None else _xy(g)
 
 
 def to_wkt(g: Geometry) -> str:
-    if g.kind == "Point":
-        return f"POINT ({_fmt(g.coords[0])} {_fmt(g.coords[1])})"
-    if g.kind == "LineString":
-        return "LINESTRING " + _ring_wkt(g.coords)
-    if g.kind == "MultiPoint":
-        return "MULTIPOINT " + _ring_wkt(g.coords)
-    if g.kind == "MultiLineString":
-        return "MULTILINESTRING (" + ", ".join(_ring_wkt(line) for line in g.coords) + ")"
-    if g.kind == "Polygon":
-        return "POLYGON (" + ", ".join(_ring_wkt(r) for r in g.coords) + ")"
-    if g.kind == "MultiPolygon":
-        return (
-            "MULTIPOLYGON ("
-            + ", ".join("(" + ", ".join(_ring_wkt(r) for r in poly) + ")" for poly in g.coords)
-            + ")"
-        )
     if g.kind == "GeometryCollection":
         return "GEOMETRYCOLLECTION (" + ", ".join(to_wkt(sub) for sub in g.coords) + ")"
-    raise ValueError(g.kind)
+    return W.write(g.kind, "", g.coords)
 
 
 def to_geojson(g: Geometry) -> str:

@@ -22,7 +22,6 @@ New module so overlay.py's surface stays a pure overlay concern.
 
 from __future__ import annotations
 
-import re
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
@@ -32,11 +31,8 @@ from . import geometry as G
 from .geometry import Geometry
 from .overlay import _merge_contiguous_lines
 from .union_ops import _flatten
+from .wkt import _EMPTY_RE
 
-_EMPTY_RE = re.compile(
-    r"^(POINT|LINESTRING|POLYGON|MULTIPOINT|MULTILINESTRING|MULTIPOLYGON|"
-    r"GEOMETRYCOLLECTION)\s+EMPTY$"
-)
 
 
 def linemerge_wkt(wkt) -> str | None:

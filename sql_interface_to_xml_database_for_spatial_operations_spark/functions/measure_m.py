@@ -5,10 +5,10 @@ ST_LineInterpolatePoints. The reference forwards PostGIS names
 verbatim (src/index.ts:44-63); measures are the mile-post/timestamp
 axis of every linear-referencing pipeline.
 
-The M dimension lives in THIS module: a self-contained ``…M (x y m)``
-WKT codec (POINT/MULTIPOINT/LINESTRING/MULTILINESTRING, the kinds
-PostGIS measure functions accept) so the core 2-D geometry kernel
-stays untouched. Output formats mirror PostGIS ST_AsText:
+M text reads and writes through the one WKT codec (``wkt``); the
+linear-referencing functions take the kinds PostGIS measure functions
+accept (POINT/MULTIPOINT/LINESTRING/MULTILINESTRING). Output formats
+mirror PostGIS ST_AsText:
 ``LINESTRING M (x y m, …)``, ``MULTIPOINT M ((x y m), …)``,
 ``MULTILINESTRING M ((…), (…))``.
 
@@ -23,7 +23,7 @@ Semantics:
 - ``st_mmin(g)`` / ``st_mmax(g)`` — min/max measure over all
   vertices; 2-D or EMPTY input → loud NULL.
 - ``st_zmflag(g)`` — PostGIS ST_Zmflag: 0 for 2-D, 1 for M, 2 for Z,
-  3 for ZM (Z/ZM via the r15 zcoord codec).
+  3 for ZM.
 - ``st_interpolatepoint(line_m, point)`` — the measure at the 2-D
   closest point on the line, linearly interpolated within its
   segment.
@@ -60,149 +60,27 @@ pass per row (no shuffle).
 from __future__ import annotations
 
 import math
-import re
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StringType
 
 from . import geometry as G
-from . import overlay as _ov
+from . import wkt as W
+from . import zcoord as _z
 from .geometry import Geometry
+from .wkt import _num, _safe
 
-_M_KINDS = ("POINT", "MULTIPOINT", "LINESTRING", "MULTILINESTRING")
-_HEAD_RE = re.compile(
-    r"^\s*(POINT|MULTIPOINT|LINESTRING|MULTILINESTRING)\s*(M\b)?\s*(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
+_M_KINDS = ("Point", "MultiPoint", "LineString", "MultiLineString")
 
 
-def _fmt(v: float) -> str:
-    return G._fmt(v)
-
-
-def _triplet(tok: str) -> tuple | None:
-    parts = tok.split()
-    if len(parts) != 3:
+def _read_m(wkt):
+    """(kind, coords) of XYM text of a measure kind (the kinds PostGIS
+    measure functions accept), or None."""
+    g = W.read(wkt)
+    if g is None or g[1] != "M" or g[0] not in _M_KINDS:
         return None
-    try:
-        x, y, m = (float(p) for p in parts)
-    except ValueError:
-        return None
-    if not all(math.isfinite(v) for v in (x, y, m)):
-        return None
-    return (x, y, m)
-
-
-def _split_top(body: str) -> list[str] | None:
-    """Split a parenthesized list on top-level commas."""
-    out, depth, cur = [], 0, []
-    for ch in body:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return [s.strip() for s in out]
-
-
-def parse_m_wkt(wkt):
-    """('Point'|'MultiPoint'|'LineString'|'MultiLineString', payload)
-    for an M-typed WKT; None for anything else (incl. 2-D WKT).
-    Payload: Point → (x,y,m); MultiPoint/LineString → [(x,y,m)];
-    MultiLineString → [[(x,y,m)]]. '<KIND> M EMPTY' → empty payload."""
-    if wkt is None:
-        return None
-    mt = _HEAD_RE.match(str(wkt))
-    if not mt or not mt.group(2):
-        return None
-    kind = mt.group(1).upper()
-    rest = mt.group(3).strip()
-    canon = {
-        "POINT": "Point",
-        "MULTIPOINT": "MultiPoint",
-        "LINESTRING": "LineString",
-        "MULTILINESTRING": "MultiLineString",
-    }[kind]
-    if rest.upper() == "EMPTY":
-        return (canon, () if canon == "Point" else [])
-    if not (rest.startswith("(") and rest.endswith(")")):
-        return None
-    body = rest[1:-1].strip()
-    if canon == "Point":
-        t = _triplet(body)
-        return None if t is None else (canon, t)
-    toks = _split_top(body)
-    if toks is None:
-        return None
-    if canon in ("MultiPoint", "LineString"):
-        pts = []
-        for tok in toks:
-            tok = tok.strip()
-            if canon == "MultiPoint" and tok.startswith("(") and tok.endswith(")"):
-                tok = tok[1:-1].strip()
-            t = _triplet(tok)
-            if t is None:
-                return None
-            pts.append(t)
-        if canon == "LineString" and len(pts) < 2:
-            return None
-        return (canon, pts)
-    # MultiLineString
-    chains = []
-    for tok in toks:
-        tok = tok.strip()
-        if not (tok.startswith("(") and tok.endswith(")")):
-            return None
-        inner = _split_top(tok[1:-1])
-        if inner is None:
-            return None
-        pts = [_triplet(t) for t in inner]
-        if any(p is None for p in pts) or len(pts) < 2:
-            return None
-        chains.append(pts)
-    return (canon, chains)
-
-
-def _pt_m(p) -> str:
-    return f"{_fmt(p[0])} {_fmt(p[1])} {_fmt(p[2])}"
-
-
-def to_m_wkt(kind: str, payload) -> str:
-    if kind == "Point":
-        if not payload:
-            return "POINT M EMPTY"
-        return f"POINT M ({_pt_m(payload)})"
-    if kind == "MultiPoint":
-        if not payload:
-            return "MULTIPOINT M EMPTY"
-        return "MULTIPOINT M (" + ", ".join(f"({_pt_m(p)})" for p in payload) + ")"
-    if kind == "LineString":
-        if not payload:
-            return "LINESTRING M EMPTY"
-        return "LINESTRING M (" + ", ".join(_pt_m(p) for p in payload) + ")"
-    if not payload:
-        return "MULTILINESTRING M EMPTY"
-    return "MULTILINESTRING M (" + ", ".join(
-        "(" + ", ".join(_pt_m(p) for p in ch) + ")" for ch in payload
-    ) + ")"
-
-
-def _num(v) -> float | None:
-    if v is None:
-        return None
-    try:
-        f = float(v)
-    except (TypeError, ValueError):
-        return None
-    return f if math.isfinite(f) else None
+    return g[0], g[2]
 
 
 def _line_chains_2d(wkt):
@@ -210,28 +88,13 @@ def _line_chains_2d(wkt):
     dropped), or None. is_multi preserves the INPUT kind (code-review
     r14: PostGIS keeps a single-part MULTILINESTRING a multi and an
     empty LINESTRING a linestring)."""
-    pm = parse_m_wkt(wkt)
-    if pm is not None:
-        kind, payload = pm
-        if kind == "LineString":
-            return (False, [[(x, y) for x, y, _ in payload]] if payload else [])
-        if kind == "MultiLineString":
-            return (True, [[(x, y) for x, y, _ in ch] for ch in payload])
+    g = W.read(wkt)
+    if g is None or g[1] not in ("", "M") or g[0] not in ("LineString", "MultiLineString"):
         return None
-    s = str(wkt).strip()
-    m = _ov._EMPTY_RE.match(s.upper())
-    if m:
-        if m.group(1) in ("LINESTRING", "MULTILINESTRING"):
-            return (m.group(1) == "MULTILINESTRING", [])
-        return None
-    g = G.parse_wkt(s)
-    if g is None:
-        return None
-    if g.kind == "LineString":
-        return (False, [list(g.coords)])
-    if g.kind == "MultiLineString":
-        return (True, [list(ch) for ch in g.coords])
-    return None
+    kind, _, coords = W.redim(g, "")
+    if kind == "LineString":
+        return (False, [coords] if coords else [])
+    return (True, coords)
 
 
 def addmeasure_wkt(wkt, m0, m1) -> str | None:
@@ -264,36 +127,24 @@ def addmeasure_wkt(wkt, m0, m1) -> str | None:
             mch.append((q[0], q[1], m))
         out.append(mch)
     if len(out) == 1 and not is_multi:
-        return to_m_wkt("LineString", out[0])
-    return to_m_wkt("MultiLineString", out)
+        return W.write("LineString", "M", out[0])
+    return W.write("MultiLineString", "M", out)
 
 
 def m_of_point(wkt) -> float | None:
-    pm = parse_m_wkt(wkt)
-    if pm is not None:
-        kind, payload = pm
-        if kind == "Point" and payload:
-            return payload[2]
+    """The M of a POINT M or POINT ZM; NULL for a point without M
+    (PostGIS returns NULL when the coordinate is absent)."""
+    g = W.read(wkt)
+    if g is None or g[0] != "Point" or "M" not in g[1] or not g[2]:
         return None
-    from . import zcoord as _z
-
-    zm = _z.m_of_zm_point(wkt)  # POINT ZM carries its M too (r15)
-    if zm is not None:
-        return zm
-    # a 2-D or Z-only point exists but has no M — PostGIS returns NULL
-    return None
+    return g[2][-1]
 
 
 def _all_m(wkt) -> list | None:
-    pm = parse_m_wkt(wkt)
-    if pm is None:
+    g = W.read(wkt)
+    if g is None or g[1] != "M" or g[0] == "GeometryCollection":
         return None
-    kind, payload = pm
-    if kind == "Point":
-        return [payload[2]] if payload else []
-    if kind in ("MultiPoint", "LineString"):
-        return [p[2] for p in payload]
-    return [p[2] for ch in payload for p in ch]
+    return [p[2] for p in W.points(g[0], g[2])]
 
 
 def mmin_of(wkt) -> float | None:
@@ -306,81 +157,19 @@ def mmax_of(wkt) -> float | None:
     return max(ms) if ms else None
 
 
-def force2d_wkt(wkt, _depth: int = 0) -> str | None:
-    """PostGIS ST_Force2D: drop the M, Z, or ZM coordinates (Z via the
-    r15 zcoord codec; collections member-recursive since r16, capped at
-    _GC_MAX_DEPTH like the force3d* siblings — ADVICE r16); plain 2-D
-    input echoes in canonical form."""
-    if wkt is None:
-        return None
-    from . import zcoord as _z
-
-    if _depth > _z._GC_MAX_DEPTH:
-        return None
-    if _z.gc_parts(wkt) is not None:
-        return _z._gc_map(wkt, lambda t: force2d_wkt(t, _depth + 1), "")
-    z2 = _z.force2d_z_wkt(wkt)
-    if z2 is not None:
-        return z2
-    pm = parse_m_wkt(wkt)
-    if pm is not None:
-        kind, payload = pm
-        if kind == "Point":
-            if not payload:
-                return "POINT EMPTY"
-            return G.to_wkt(Geometry("Point", (payload[0], payload[1])))
-        if not payload:
-            return f"{kind.upper()} EMPTY"
-        if kind == "MultiPoint":
-            return G.to_wkt(
-                Geometry("MultiPoint", [(x, y) for x, y, _ in payload])
-            )
-        if kind == "LineString":
-            return G.to_wkt(
-                Geometry("LineString", [(x, y) for x, y, _ in payload])
-            )
-        return G.to_wkt(
-            Geometry(
-                "MultiLineString",
-                [[(x, y) for x, y, _ in ch] for ch in payload],
-            )
-        )
-    s = str(wkt).strip()
-    m = _ov._EMPTY_RE.match(s.upper())
-    if m:
-        return f"{m.group(1)} EMPTY"
-    g = G.parse_wkt(s)
-    return None if g is None else G.to_wkt(g)
+def force2d_wkt(wkt) -> str | None:
+    """PostGIS ST_Force2D: drop the Z and M coordinates."""
+    return _z.force_wkt(wkt, "")
 
 
 def zmflag_of(wkt) -> int | None:
-    """PostGIS ST_Zmflag: 0 = 2-D, 1 = M, 2 = Z, 3 = ZM (Z/ZM via the
-    r15 zcoord codec)."""
-    if wkt is None:
-        return None
-    from . import zcoord as _z
-
-    dims = _z.dims_of(wkt)
-    if dims is not None:
-        return 3 if dims == "ZM" else 2
-    if parse_m_wkt(wkt) is not None:
-        return 1
-    gd = _z.gc_dims(wkt)
-    if gd is not None:  # collections report their members' union (r16)
-        return {"": 0, "M": 1, "Z": 2, "ZM": 3}[gd]
-    from . import surface3d as _s3
-
-    ps = _s3.parse_surface_wkt(wkt)
-    if ps is not None:  # surfaces carry the dims tag directly (r17)
-        return {"": 0, "M": 1, "Z": 2, "ZM": 3}[ps[1]]
-    s = str(wkt).strip()
-    if _ov._EMPTY_RE.match(s.upper()):
-        return 0
-    return 0 if G.parse_wkt(s) is not None else None
+    """PostGIS ST_Zmflag: 0 = 2-D, 1 = M, 2 = Z, 3 = ZM."""
+    d = _z.dims_of(wkt)
+    return None if d is None else {"": 0, "M": 1, "Z": 2, "ZM": 3}[d]
 
 
 def _m_chains(wkt):
-    pm = parse_m_wkt(wkt)
+    pm = _read_m(wkt)
     if pm is None:
         return None
     kind, payload = pm
@@ -423,7 +212,7 @@ def locatealong_wkt(wkt, measure) -> str | None:
     m = _num(measure)
     if wkt is None or m is None:
         return None
-    pm = parse_m_wkt(wkt)
+    pm = _read_m(wkt)
     if pm is None:
         return None
     kind, payload = pm
@@ -450,7 +239,7 @@ def locatealong_wkt(wkt, measure) -> str | None:
     for h in hits:
         if not dedup or h != dedup[-1]:
             dedup.append(h)
-    return to_m_wkt("MultiPoint", dedup)
+    return W.write("MultiPoint", "M", dedup)
 
 
 def locatebetween_wkt(wkt, m_lo, m_hi) -> str | None:
@@ -464,15 +253,15 @@ def locatebetween_wkt(wkt, m_lo, m_hi) -> str | None:
     lo, hi = _num(m_lo), _num(m_hi)
     if wkt is None or lo is None or hi is None or hi < lo:
         return None
-    pm = parse_m_wkt(wkt)
+    pm = _read_m(wkt)
     if pm is None:
         return None
     kind, payload = pm
     if kind == "Point":
         hits = [payload] if payload and lo <= payload[2] <= hi else []
-        return to_m_wkt("MultiPoint", hits)
+        return W.write("MultiPoint", "M", hits)
     if kind == "MultiPoint":
-        return to_m_wkt("MultiPoint", [p for p in payload if lo <= p[2] <= hi])
+        return W.write("MultiPoint", "M", [p for p in payload if lo <= p[2] <= hi])
     chains = [payload] if kind == "LineString" else payload
     spans, cur, contacts = [], [], []
     for ch in chains:
@@ -539,12 +328,14 @@ def locatebetween_wkt(wkt, m_lo, m_hi) -> str | None:
         if c not in span_pts and c not in pts:
             pts.append(c)
     if not pts:
-        return to_m_wkt("MultiLineString", spans)
+        return W.write("MultiLineString", "M", spans)
     if not spans:
-        return to_m_wkt("MultiPoint", pts)
-    parts = ["LINESTRING M (" + ", ".join(_pt_m(p) for p in s) + ")" for s in spans]
-    parts += [f"POINT M ({_pt_m(p)})" for p in pts]
-    return "GEOMETRYCOLLECTION M (" + ", ".join(parts) + ")"
+        return W.write("MultiPoint", "M", pts)
+    return W.write(
+        "GeometryCollection",
+        "M",
+        [("LineString", "M", s) for s in spans] + [("Point", "M", p) for p in pts],
+    )
 
 
 def lineinterpolatepoints_wkt(wkt, fraction, repeat) -> str | None:
@@ -605,7 +396,7 @@ def lineinterpolatepoints_wkt(wkt, fraction, repeat) -> str | None:
 
 
 def _trajectory(wkt):
-    pm = parse_m_wkt(wkt)
+    pm = _read_m(wkt)
     if pm is None:
         return None
     kind, payload = pm
@@ -618,7 +409,7 @@ def _trajectory(wkt):
 
 
 def isvalidtrajectory_of(wkt) -> bool | None:
-    pm = parse_m_wkt(wkt)
+    pm = _read_m(wkt)
     if pm is None:
         return None
     kind, payload = pm
@@ -733,13 +524,6 @@ def st_mmin(wkt: pd.Series) -> pd.Series:
 @pandas_udf(DoubleType())
 def st_mmax(wkt: pd.Series) -> pd.Series:
     return pd.Series([_safe(mmax_of, w) for w in wkt], dtype="float64")
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
 
 
 @pandas_udf(StringType())

@@ -47,6 +47,7 @@ from . import overlay as _ov
 from .geometry import Geometry
 from .measures import triangulate_polygon
 from .union_ops import union_geoms
+from .wkt import _safe
 
 _MAX_PAIRS = 20_000
 
@@ -125,13 +126,6 @@ def minkowski_wkt(wa, wb) -> str | None:
         return None
     out = union_geoms(hulls)
     return None if out is None else G.to_wkt(out)
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
 
 
 @pandas_udf(StringType())

@@ -49,10 +49,11 @@ from pyspark.sql.types import BooleanType, LongType, StringType
 
 from . import geometry as G
 from . import overlay as _ov
-from . import zcoord as Z
+from . import wkt as W
 from .geometry import Geometry
 from .grids import st_forcepolygoncw
 from .spatial import st_area, st_length, st_perimeter
+from .wkt import _safe
 
 _ARC_RE = re.compile(
     r"^\s*(CIRCULARSTRING|COMPOUNDCURVE|CURVEPOLYGON|MULTICURVE|MULTISURFACE)\b",
@@ -166,15 +167,7 @@ def has_arc(wkt) -> bool | None:
         from .curves import curvetoline_wkt
 
         return True if curvetoline_wkt(s, 1) is not None else None
-    if _ov._EMPTY_RE.match(s.upper()) or G.parse_wkt(s) is not None:
-        return False
-    if Z.parse_z_wkt(s) is not None:
-        return False
-    from . import measure_m as _mm
-
-    if _mm.parse_m_wkt(s) is not None:
-        return False
-    return None  # junk — loud
+    return False if W.read(s) is not None else None  # junk — loud
 
 
 def extent3d_all(wkts) -> str | None:
@@ -186,19 +179,16 @@ def extent3d_all(wkts) -> str | None:
     for w in wkts:
         if w is None:
             continue  # PostGIS aggregates skip NULL rows (union_all)
-        s = str(w).strip()
-        if _ov._EMPTY_RE.match(s.upper()):
-            continue  # typed EMPTY bounds nothing (code-review r15:
-            # 2-D and Z empties now behave identically)
-        pz = Z.parse_z_wkt(s)
-        if pz is not None:
-            kind, _, payload = pz
-            pts = [(p[0], p[1], p[2]) for p in Z._iter_pts(kind, payload)]
-        else:
-            g = G.parse_wkt(s)
-            if g is None:
-                return None  # junk member — loud
-            pts = [(x, y, 0.0) for x, y in G._points(g)]
+        g = W.read(w)
+        if g is None or g[1] == "M":
+            return None  # junk or measure-only member — loud
+        kind, dims, coords = g
+        if kind == "GeometryCollection" and (dims or coords and G._xy(g) is None):
+            return None  # a collection the planar reader rejects
+        # typed EMPTY bounds nothing (code-review r15: 2-D and Z
+        # empties behave identically)
+        has_z = "Z" in dims
+        pts = [(p[0], p[1], p[2] if has_z else 0.0) for p in W.points(kind, coords)]
         for p in pts:
             saw = True
             for i in range(3):
@@ -211,13 +201,6 @@ def extent3d_all(wkts) -> str | None:
         f"BOX3D({f(lo[0])} {f(lo[1])} {f(lo[2])}, "
         f"{f(hi[0])} {f(hi[1])} {f(hi[2])})"
     )
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
 
 
 @pandas_udf(StringType())

@@ -50,14 +50,13 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, IntegerType, StringType
 
 from . import geometry as G
-from . import measure_m as _mm
 from . import overlay as _ov
 from . import surface3d as _s3
 from . import wkb as _wkb
-from . import zcoord as _zc
+from . import wkt as W
 from .affine import _affine_wkt
 from .geometry import Geometry
-from .zcoord import _map_pts
+from .wkt import _safe
 
 # -- ST_OrderingEquals ------------------------------------------------------
 
@@ -109,7 +108,8 @@ def iscollection_of(wkt) -> bool | None:
     if wkt is not None:
         # dimensional GEOMETRYCOLLECTION (Z/M/ZM — the gc codec's
         # kinds sit outside _parse_any)
-        if _zc.gc_parts(wkt) is not None and _zc.gc_dims(wkt) is not None:
+        g = W.read(wkt)
+        if g is not None and g[0] == "GeometryCollection":
             return True
         cv = _wkb._curved_parse(wkt)
         if cv is not None:
@@ -179,18 +179,11 @@ def filter_by_m(wkt, m1, m2) -> str | None:
     if wkt is None:
         return None
     s = str(wkt).strip()
-    pz = _zc.parse_z_wkt(s)
-    if pz is not None:
-        kind, has_m, payload = pz
-        if not has_m:
-            return None  # Z-only input carries no M (PostGIS raises)
-        keep_z = True
-    else:
-        pm = _mm.parse_m_wkt(s)
-        if pm is None:
-            return None  # plain 2-D / junk: no M to filter — loud
-        kind, payload = pm
-        keep_z = False
+    g = W.read(s)
+    if g is None or "M" not in g[1]:
+        return None  # 2-D / Z-only / junk: no M to filter — loud
+    kind, dims, payload = g
+    keep_z = "Z" in dims
     if kind not in _FILTER_KINDS:
         return None  # areal input errors in PostGIS
 
@@ -198,18 +191,7 @@ def filter_by_m(wkt, m1, m2) -> str | None:
         return (p[0], p[1], p[2]) if keep_z else (p[0], p[1])
 
     def emit(kind2: str, shaped) -> str:
-        if keep_z:
-            if (kind2 == "Point" and not shaped) or (
-                kind2 != "Point" and not shaped
-            ):
-                return f"{kind2.upper()} Z EMPTY"
-            return _zc.to_z_wkt(kind2, False, shaped)
-        g = Geometry(kind2, shaped)
-        if kind2 == "Point" and not shaped:
-            return "POINT EMPTY"
-        if kind2 != "Point" and not shaped:
-            return f"{kind2.upper()} EMPTY"
-        return G.to_wkt(g)
+        return W.write(kind2, "Z" if keep_z else "", shaped)
 
     m_at = 3 if keep_z else 2
     if kind == "Point":
@@ -295,29 +277,17 @@ def _affine_dims(wkt, fn2, fn3) -> str | None:
     if wkt is None:
         return None
     s = str(wkt).strip()
-    pz = _zc.parse_z_wkt(s)
-    if pz is not None:
-        kind, has_m, payload = pz
-        if kind == "Point" and not payload or kind != "Point" and not payload:
-            return _zc.to_z_wkt(kind, has_m, payload)  # typed EMPTY echo
+    g = W.read(s)
+    if g is None or not g[1] or g[0] == "GeometryCollection":
+        return _affine_wkt(s, fn2)
+    kind, dims, payload = g
 
-        def f(p):
-            x, y, z = fn3(p[0], p[1], p[2])
-            return (x, y, z, p[3]) if has_m else (x, y, z)
+    def f(p):
+        if "Z" in dims:
+            return (*fn3(p[0], p[1], p[2]), *p[3:])
+        return (*fn2(p[0], p[1]), p[2])
 
-        return _zc.to_z_wkt(kind, has_m, _map_pts(kind, payload, f))
-    pm = _mm.parse_m_wkt(s)
-    if pm is not None:
-        kind, payload = pm
-        if kind == "Point" and not payload or kind != "Point" and not payload:
-            return _mm.to_m_wkt(kind, payload)
-
-        def fm(p):
-            x, y = fn2(p[0], p[1])
-            return (x, y, p[2])
-
-        return _mm.to_m_wkt(kind, _map_pts(kind, payload, fm))
-    return _affine_wkt(s, fn2)
+    return W.write(kind, dims, W.map_points(kind, payload, f))
 
 
 def rotate_x_wkt(wkt, theta) -> str | None:
@@ -365,13 +335,6 @@ def transscale_wkt(wkt, dx, dy, xf, yf) -> str | None:
 
 
 # -- UDFs -------------------------------------------------------------------
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
 
 
 @pandas_udf(BooleanType())

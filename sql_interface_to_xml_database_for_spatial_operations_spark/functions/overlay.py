@@ -71,7 +71,6 @@ blocking, see operators/overlay_ops.py).
 
 from __future__ import annotations
 
-import re
 from fractions import Fraction
 
 import pandas as pd
@@ -83,6 +82,7 @@ from . import geometry as G
 from . import noding as _nod
 from .geometry import Geometry
 from .union_ops import _flatten, _seg_intersections
+from .wkt import _EMPTY_RE
 
 Pt = tuple[float, float]
 Rect = tuple[float, float, float, float]
@@ -208,10 +208,6 @@ def _drop_degenerate_float(g: Geometry | None) -> Geometry | None:
     return g
 
 
-_EMPTY_RE = re.compile(
-    r"^(POINT|LINESTRING|POLYGON|MULTIPOINT|MULTILINESTRING"
-    r"|MULTIPOLYGON|GEOMETRYCOLLECTION)\s+EMPTY$"
-)
 
 
 def _parse(wkt) -> "Geometry | None | tuple":

@@ -44,6 +44,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from . import geometry as G
+from .wkt import _safe
 
 _MAX_PRECISION = 8
 _I32 = 2**31 - 1
@@ -135,13 +136,6 @@ def decode_polyline(text, precision) -> str | None:
         lng += vals[i + 1]
         pts.append((lng / scale, lat / scale))
     return G.to_wkt(G.Geometry("LineString", pts))
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
 
 
 @pandas_udf(StringType())

@@ -68,7 +68,9 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, DoubleType, LongType, StringType
 
+from . import wkt as W
 from . import zcoord as Z
+from .wkt import _safe
 
 _HEAD_RE = re.compile(
     r"^\s*(POLYHEDRALSURFACE|TIN|TRIANGLE)\s*(ZM|Z|M)?\b\s*(.*)$",
@@ -85,22 +87,9 @@ _GUARD = 1e-7
 
 def _parse_patch_rings(tok: str, width: int, triangle: bool):
     """One patch body ``((ring), (ring)…)`` → [rings] or None."""
-    body = Z._strip_parens(tok)
-    if body is None:
-        return None
-    ring_toks = Z._split_top(body)
-    if ring_toks is None:
-        return None
-    rings = []
-    for rt in ring_toks:
-        inner = Z._strip_parens(rt)
-        if inner is None:
-            return None
-        pts = Z._parse_ring(inner, width)
-        if pts is None or len(pts) < 4 or pts[0] != pts[-1]:
-            return None
-        rings.append(pts)
-    if not rings:
+    try:
+        rings = W._polygon(tok, width, lax=False)
+    except (ValueError, IndexError):
         return None
     if triangle and (len(rings) != 1 or len(rings[0]) != 4):
         return None  # TIN / TRIANGLE patches are single 4-vertex rings
@@ -140,15 +129,13 @@ def parse_surface_wkt(wkt):
     rest = mt.group(3).strip()
     if rest.upper() == "EMPTY":
         return (kind, dims, [])
-    body = Z._strip_parens(rest)
+    body = W._strip_parens(rest)
     if body is None:
         return None
     if kind == "Triangle":
         rings = _parse_patch_rings("(" + body + ")", width, triangle=True)
         return None if rings is None else (kind, dims, [rings])
-    toks = Z._split_top(body)
-    if toks is None:
-        return None
+    toks = W._split_top(body)
     patches = []
     for tok in toks:
         rings = _parse_patch_rings(tok, width, triangle=(kind == "Tin"))
@@ -159,7 +146,7 @@ def parse_surface_wkt(wkt):
 
 
 def _ring_txt(ring) -> str:
-    return "(" + ", ".join(" ".join(Z._fmt(v) for v in p) for p in ring) + ")"
+    return "(" + ", ".join(" ".join(W._fmt(v) for v in p) for p in ring) + ")"
 
 
 def to_surface_wkt(kind: str, dims, patches) -> str:
@@ -218,24 +205,12 @@ def area3d_wkt(wkt) -> float | None:
         _, dims, patches = ps
         use_z = "Z" in dims
         return float(sum(_patch_area(rings, use_z) for rings in patches))
-    pz = Z.parse_z_wkt(wkt)
-    if pz is not None:
-        kind, _, payload = pz
-        if kind == "Polygon":
-            return float(_patch_area(payload)) if payload else 0.0
-        if kind == "MultiPolygon":
-            return float(sum(_patch_area(rings) for rings in payload))
-        return None
-    from . import geometry as G
-
-    g = G.parse_wkt(wkt) if wkt is not None else None
-    if g is None:
-        return None
-    if g.kind == "Polygon":
-        return float(_patch_area(g.coords)) if g.coords else 0.0
-    if g.kind == "MultiPolygon":
-        return float(sum(_patch_area(rings) for rings in g.coords))
-    return None
+    g = W.read(wkt)
+    if g is None or g[0] not in ("Polygon", "MultiPolygon") or not (g[1] or g[2]):
+        return None  # the planar reader has no EMPTY
+    kind, dims, coords = g
+    polys = [coords] if kind == "Polygon" else coords
+    return float(sum(_patch_area(rings, "Z" in dims) for rings in polys if rings))
 
 
 def num_patches(wkt) -> int | None:
@@ -434,13 +409,6 @@ def intersects3d_wkt(a_wkt, b_wkt) -> bool | None:
 # ---------------------------------------------------------------------------
 # pandas UDFs + registration
 # ---------------------------------------------------------------------------
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
 
 
 @pandas_udf(LongType())

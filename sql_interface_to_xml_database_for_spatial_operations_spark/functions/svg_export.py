@@ -51,6 +51,7 @@ from pyspark.sql.types import StringType
 from . import geometry as G
 from . import overlay as _ov
 from .geometry import Geometry
+from .wkt import _safe
 
 
 def _fmt_digits(v: float, digits: int) -> str:
@@ -256,13 +257,6 @@ def as_latlon_text(wkt, fmt) -> str | None:
     lon -= 180.0
     lat = max(-90.0, min(90.0, y))
     return _render_llt(f, lat, True) + " " + _render_llt(f, lon, False)
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
 
 
 @pandas_udf(StringType())

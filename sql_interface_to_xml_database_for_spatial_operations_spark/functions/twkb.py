@@ -53,6 +53,7 @@ from pyspark.sql.types import BinaryType, StringType
 from . import geometry as G
 from . import wkb as _wkb
 from .geometry import Geometry
+from .wkt import _safe
 
 _TYPE_CODE = {
     "Point": 1,
@@ -365,13 +366,6 @@ def twkb_to_wkt(buf) -> str | None:
         return f"{kind.upper()}{tag} EMPTY"
     try:
         return _wkb._dims_to_wkt(kind, z, m, payload)
-    except Exception:
-        return None
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
     except Exception:
         return None
 

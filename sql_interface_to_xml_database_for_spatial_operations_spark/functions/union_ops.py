@@ -281,15 +281,12 @@ def _simple_ring(ring: list[Pt]) -> bool:
 
 
 def _signed_area_ring(ring: list[Pt]) -> float:
-    # int seed, NOT 0.0: int + Fraction stays Fraction, so the overlay's
-    # exact-rational rings get an EXACT shoelace sum (float += Fraction
-    # would round every term — ADVICE r7 #3: a large-coordinate ring's
-    # exact area −648 came back 0.0, breaking the ==0 sliver filters and
-    # the _interiors_overlap witness). Float callers stay float.
-    s = 0
-    for (ax, ay), (bx, by) in zip(ring, ring[1:]):
-        s += ax * by - bx * ay
-    return s / 2
+    # signed_area2's int seed keeps Fraction rings exact (float +=
+    # Fraction would round every term — ADVICE r7 #3: a large-coordinate
+    # ring's exact area −648 came back 0.0, breaking the ==0 sliver
+    # filters and the _interiors_overlap witness). Float callers stay
+    # float.
+    return _nod.signed_area2(ring) / 2
 
 
 def _is_convex_ring(ring: list[Pt]) -> bool:
@@ -663,3 +660,6 @@ ALL_UNION_FUNCTIONS = {
     "st_union": st_union,
     "st_union_all": st_union_all,
 }
+
+# Last: noding imports overlay, which imports this module's kernels.
+from . import noding as _nod  # noqa: E402

@@ -46,9 +46,8 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType, IntegerType, StringType
 
 from . import geometry as G
-from . import measure_m as _mm
 from . import surface3d as _s3
-from . import zcoord as _zc
+from . import wkt as W
 from .geometry import Geometry
 
 _KIND_CODE = {
@@ -498,46 +497,43 @@ def wkt_to_wkb(wkt) -> bytes | None:
             if code == 1:
                 return struct.pack("<BI2d", 1, 1, float("nan"), float("nan"))
             return struct.pack("<BII", 1, code, 0)
-    pz = _zc.parse_z_wkt(s)
-    if pz is not None:
-        kind, has_m, payload = pz
-        return _zm_to_wkb(kind, True, has_m, payload)
-    pm = _mm.parse_m_wkt(s)
-    if pm is not None:
-        kind, payload = pm
-        return _zm_to_wkb(kind, False, True, payload)
-    ps = _s3.parse_surface_wkt(s)
-    if ps is not None:
-        kind, dims, patches = ps
-        return _surface_to_wkb(kind, dims, patches)
-    cv = _curved_parse(s)
-    if cv is not None:
-        return _curved_to_wkb(*cv)
-    gp = _zc.gc_parts(s)
-    if gp is not None:
-        declared, toks = gp
-        derived = _zc.gc_dims(s)
-        if derived is None:
-            return None
-        tag = declared or derived
-        if toks and declared and derived != declared:
-            return None  # tag/member disagreement must not round-trip
-        if tag:
-            # dimensional GEOMETRYCOLLECTION (r16): ISO offset code,
-            # full member WKBs; member dims must all equal the tag so
-            # the decoder's uniformity rule round-trips
-            if any(_wkt_dims_tag(t) != tag for t in toks):
-                return None
-            members = [wkt_to_wkb(t) for t in toks]
-            if any(mb is None for mb in members):
-                return None
-            off = {"Z": 1000, "M": 2000, "ZM": 3000}[tag]
-            return struct.pack("<BII", 1, 7 + off, len(members)) + b"".join(
-                members
-            )
-        # plain 2-D collection: the Geometry path below
-    g = G.parse_wkt(s)
-    return None if g is None else geom_to_wkb(g)
+    g = W.read(s)
+    if g is None:
+        ps = _s3.parse_surface_wkt(s)
+        if ps is not None:
+            kind, dims, patches = ps
+            return _surface_to_wkb(kind, dims, patches)
+        cv = _curved_parse(s)
+        return None if cv is None else _curved_to_wkb(*cv)
+    return _triple_to_wkb(g)
+
+
+def _triple_to_wkb(g) -> bytes | None:
+    kind, dims, coords = g
+    if kind != "GeometryCollection":
+        if dims:
+            return _zm_to_wkb(kind, "Z" in dims, "M" in dims, coords)
+        if not coords:
+            return wkt_to_wkb(f"{kind.upper()} EMPTY")
+        return geom_to_wkb(Geometry(kind, coords))
+    derived = W.member_dims(g)
+    tag = dims or derived
+    if coords and dims and derived != dims:
+        return None  # tag/member disagreement must not round-trip
+    if not tag:
+        # plain 2-D collection: the Geometry path
+        xy = G._xy(g)
+        return None if xy is None else geom_to_wkb(xy)
+    # dimensional GEOMETRYCOLLECTION (r16): ISO offset code, full
+    # member WKBs; member dims must all equal the tag so the decoder's
+    # uniformity rule round-trips
+    if any(W.member_dims(m) != tag for m in coords):
+        return None
+    members = [_triple_to_wkb(m) for m in coords]
+    if any(mb is None for mb in members):
+        return None
+    off = {"Z": 1000, "M": 2000, "ZM": 3000}[tag]
+    return struct.pack("<BII", 1, 7 + off, len(members)) + b"".join(members)
 
 
 _CURVED_CODE = {
@@ -586,22 +582,6 @@ def _curved_to_wkb(kind: str, payload) -> bytes:
     )
 
 
-def _wkt_dims_tag(s) -> str | None:
-    """'', 'Z', 'M', 'ZM' for one member WKT; None when unparsable."""
-    pz = _zc.parse_z_wkt(s)
-    if pz is not None:
-        return "ZM" if pz[1] else "Z"
-    if _mm.parse_m_wkt(s) is not None:
-        return "M"
-    gd = _zc.gc_dims(s)
-    if gd is not None:
-        return gd
-    up = str(s).strip().upper()
-    if _EMPTY_KINDS.get(up.split(" ")[0]) and up.endswith("EMPTY"):
-        return ""
-    return "" if G.parse_wkt(str(s)) is not None else None
-
-
 def _nan_pt(p) -> bool:
     return any(v != v for v in p)
 
@@ -636,24 +616,18 @@ def _finite_payload(kind: str, payload) -> bool:
 
 def _parse_any(s: str):
     """(kind, z, m, payload) of a 2-D / Z / ZM / M WKT (typed EMPTY
-    included), or None."""
-    up = s.upper()
-    for kind, code in _EMPTY_KINDS.items():
-        if up == f"{kind} EMPTY":
-            canon = _CODE_KIND[code]
-            return (canon, False, False, () if canon == "Point" else [])
-    pz = _zc.parse_z_wkt(s)
-    if pz is not None:
-        kind, has_m, payload = pz
-        return (kind, True, has_m, payload)
-    pm = _mm.parse_m_wkt(s)
-    if pm is not None:
-        kind, payload = pm
-        return (kind, False, True, payload)
-    g = G.parse_wkt(s)
+    included), or None. A collection must be plain 2-D; its payload
+    holds ``Geometry`` members."""
+    g = W.read(s)
     if g is None:
         return None
-    return (g.kind, False, False, g.coords)
+    kind, dims, coords = g
+    if kind == "GeometryCollection" and coords:
+        xy = G._xy(g)
+        return None if xy is None else (kind, False, False, xy.coords)
+    if kind == "GeometryCollection" and dims:
+        return None
+    return (kind, "Z" in dims, "M" in dims, coords)
 
 
 def _to_ewkb(kind: str, z: bool, m: bool, payload, srid) -> bytes:
@@ -738,8 +712,8 @@ def wkt_to_ewkb(wkt, srid) -> bytes | None:
             return body
         code = struct.unpack_from("<I", body, 1)[0]
         return struct.pack("<BIi", 1, code | _EWKB_SRID, srid) + body[5:]
-    gp = _zc.gc_parts(s)
-    if gp is not None and (gp[0] or _zc.gc_dims(s)):
+    g = W.read(s)
+    if g is not None and g[0] == "GeometryCollection" and (g[1] or W.member_dims(g)):
         # dimensional collection: SRID flag over the ISO body, the
         # surface stance above
         body = wkt_to_wkb(s)
@@ -810,9 +784,7 @@ def _dims_to_wkt(kind, z, m, payload) -> str | None:
             payload = ()
         elif not _finite_payload(kind, payload):
             return None
-        if z:
-            return _zc.to_z_wkt(kind, m, payload)
-        return _mm.to_m_wkt(kind, payload)
+        return W.write(kind, ("Z" if z else "") + ("M" if m else ""), payload)
     g = Geometry(kind, payload)
     if g.kind == "Point" and g.coords[0] != g.coords[0]:
         return "POINT EMPTY"

@@ -5,12 +5,8 @@ verbatim (src/index.ts:44-63), and elevation / LiDAR / GPS-altitude
 datasets carry Z on day one — previously the engine's
 highest-frequency loud-NULL refusal.
 
-The Z dimension lives in THIS module: a self-contained
-``… Z (x y z)`` / ``… ZM (x y z m)`` WKT codec over the six
-simple-feature kinds (POINT / MULTIPOINT / LINESTRING /
-MULTILINESTRING / POLYGON / MULTIPOLYGON) so the core 2-D geometry
-kernel stays untouched — the proven measure_m.py template (r14).
-Output mirrors PostGIS ST_AsText: ``POINT Z (1 2 3)``,
+Z and ZM text reads and writes through the one WKT codec (``wkt``),
+whose output mirrors PostGIS ST_AsText: ``POINT Z (1 2 3)``,
 ``POLYGON Z ((x y z, …))``, ``MULTIPOINT ZM ((x y z m), …)``.
 
 Semantics (PostGIS-matching unless noted):
@@ -22,8 +18,8 @@ Semantics (PostGIS-matching unless noted):
 - ``st_force3d(g)`` / ``st_force3dz(g, z)`` — force XYZ mode: 2-D
   input gains Z = z (default 0), Z input echoes canonically, ZM and
   M-only input drop M and keep/gain Z (liblwgeom ``force_dims(hasz=1,
-  hasm=0)`` — PostGIS ST_Force3DZ discards M). GEOMETRYCOLLECTION is
-  outside the Z codec's kinds → documented loud NULL.
+  hasm=0)`` — PostGIS ST_Force3DZ discards M); collections re-dim
+  member by member.
 - ``st_3dlength(line)`` — cumulative 3-D arc length of a lineal
   geometry; 2-D / M-only lineal input computes with Z = 0 (PostGIS
   behavior: missing Z contributes nothing). Non-lineal → loud NULL.
@@ -52,37 +48,14 @@ many-vertex rows degrade to a loud NULL, never a hot loop.
 from __future__ import annotations
 
 import math
-import re
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StringType
 
 from . import geometry as G
-from . import overlay as _ov
-from .geometry import Geometry
-
-_Z_KINDS = (
-    "POINT",
-    "MULTIPOINT",
-    "LINESTRING",
-    "MULTILINESTRING",
-    "POLYGON",
-    "MULTIPOLYGON",
-)
-_CANON = {
-    "POINT": "Point",
-    "MULTIPOINT": "MultiPoint",
-    "LINESTRING": "LineString",
-    "MULTILINESTRING": "MultiLineString",
-    "POLYGON": "Polygon",
-    "MULTIPOLYGON": "MultiPolygon",
-}
-_HEAD_RE = re.compile(
-    r"^\s*(POINT|MULTIPOINT|LINESTRING|MULTILINESTRING|POLYGON|"
-    r"MULTIPOLYGON)\s*(ZM|Z)\b\s*(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
+from . import wkt as W
+from .wkt import _num, _safe
 
 # point-segment-evaluation budget for the pairwise 3-D distance kernel
 # (the linearref.py:209 convention): beyond this the row is a loud
@@ -90,341 +63,30 @@ _HEAD_RE = re.compile(
 _MAX_PAIR_WORK = 4_000_000
 
 
-def _fmt(v: float) -> str:
-    return G._fmt(v)
-
-
-# --- GEOMETRYCOLLECTION Z / M / ZM (r16, VERDICT r15 task 4) -------------
-#
-# Collections stay OUTSIDE the per-kind payload codec (every consumer
-# below switches on the six simple-feature kinds); instead the GC
-# layer works on the WKT STRING: split the top-level members, recurse
-# the member operation, reassemble with the collection's dim tag.
-# Members self-describe their dimensionality, so mixed/malformed
-# members fail loudly through the member kernels themselves.
-
-_GC_RE = re.compile(
-    r"^\s*GEOMETRYCOLLECTION(?:\s+(ZM|Z|M))?\s*(.*)$", re.I | re.S
-)
-_GC_MAX_DEPTH = 12  # adversarial nesting cap (the wkb.py stance)
-
-
-def gc_parts(wkt):
-    """(dim_tag, [member WKT strings]) for a GEOMETRYCOLLECTION of any
-    dimensionality ('' tag for plain 2-D; EMPTY → []); None when the
-    input is not a collection or the member list is malformed."""
-    if wkt is None:
-        return None
-    mt = _GC_RE.match(str(wkt))
-    if not mt:
-        return None
-    tag = (mt.group(1) or "").upper()
-    rest = mt.group(2).strip()
-    if rest.upper() == "EMPTY":
-        return tag, []
-    body = _strip_parens(rest)
-    if body is None:
-        return None
-    toks = _split_top(body)
-    if toks is None or any(not t for t in toks):
-        return None
-    return tag, toks
-
-
-def _gc_map(wkt, member_fn, tag: str) -> str | None:
-    """Reassembled 'GEOMETRYCOLLECTION <tag> (…)' with ``member_fn``
-    applied to every member (member_fn handles nested collections via
-    its own GC branch); None if any member refuses."""
-    gp = gc_parts(wkt)
-    if gp is None:
-        return None
-    _, toks = gp
-    head = f"GEOMETRYCOLLECTION {tag}".rstrip()
-    if not toks:
-        return f"{head} EMPTY"
-    out = []
-    for t in toks:
-        r = member_fn(t)
-        if r is None:
-            return None
-        out.append(r)
-    return f"{head} (" + ", ".join(out) + ")"
-
-
-def gc_dims(wkt, _depth: int = 0) -> str | None:
-    """'', 'Z', 'M', or 'ZM' for a GEOMETRYCOLLECTION WKT — from the
-    members' own tags (the collection tag is advisory); None when the
-    input is not a well-formed collection. Mixed members report the
-    union of dimensions present (PostGIS collections are uniform; a
-    hand-built mixed one still answers honestly)."""
-    if _depth > _GC_MAX_DEPTH:
-        return None
-    gp = gc_parts(wkt)
-    if gp is None:
-        return None
-    _, toks = gp
-    has_z = has_m = False
-    for t in toks:
-        sub = gc_dims(t, _depth + 1)
-        if sub is None:
-            pz = parse_z_wkt(t)
-            if pz is not None:
-                sub = "ZM" if pz[1] else "Z"
-            else:
-                from . import measure_m as _mm
-
-                if _mm.parse_m_wkt(t) is not None:
-                    sub = "M"
-                elif (
-                    _ov._EMPTY_RE.match(t.strip().upper())
-                    or G.parse_wkt(t) is not None
-                ):
-                    sub = ""
-                else:
-                    return None
-        has_z = has_z or "Z" in sub
-        has_m = has_m or "M" in sub
-    return ("Z" if has_z else "") + ("M" if has_m else "")
-
-
-def _tuple_of(tok: str, width: int):
-    parts = tok.split()
-    if len(parts) != width:
-        return None
-    try:
-        vals = tuple(float(p) for p in parts)
-    except ValueError:
-        return None
-    if not all(math.isfinite(v) for v in vals):
-        return None
-    return vals
-
-
-def _split_top(body: str) -> list[str] | None:
-    out, depth, cur = [], 0, []
-    for ch in body:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return [s.strip() for s in out]
-
-
-def _strip_parens(tok: str) -> str | None:
-    tok = tok.strip()
-    if not (tok.startswith("(") and tok.endswith(")")):
-        return None
-    return tok[1:-1].strip()
-
-
-def _parse_ring(tok: str, width: int):
-    inner = _split_top(tok)
-    if inner is None:
-        return None
-    pts = [_tuple_of(t, width) for t in inner]
-    if any(p is None for p in pts):
-        return None
-    return pts
-
-
-def _valid_poly_ring(ring) -> bool:
-    # the 2-D parser's ring contract: ≥ 4 vertices, closed in x/y/z(/m)
-    return len(ring) >= 4 and ring[0] == ring[-1]
-
-
-def parse_z_wkt(wkt):
-    """('Point'|…|'MultiPolygon', has_m, payload) for a Z- or ZM-typed
-    WKT; None for anything else (2-D and M-only WKT included).
-    Payload: Point → tuple; MultiPoint/LineString → [tuple];
-    Polygon/MultiLineString → [[tuple]]; MultiPolygon → [[[tuple]]].
-    ``<KIND> Z EMPTY`` → empty payload. Tuples are (x, y, z) or
-    (x, y, z, m)."""
-    if wkt is None:
-        return None
-    mt = _HEAD_RE.match(str(wkt))
-    if not mt:
-        return None
-    canon = _CANON[mt.group(1).upper()]
-    has_m = mt.group(2).upper() == "ZM"
-    width = 4 if has_m else 3
-    rest = mt.group(3).strip()
-    if rest.upper() == "EMPTY":
-        return (canon, has_m, () if canon == "Point" else [])
-    body = _strip_parens(rest)
-    if body is None:
-        return None
-    if canon == "Point":
-        t = _tuple_of(body, width)
-        return None if t is None else (canon, has_m, t)
-    toks = _split_top(body)
-    if toks is None:
-        return None
-    if canon in ("MultiPoint", "LineString"):
-        pts = []
-        for tok in toks:
-            tok = tok.strip()
-            if canon == "MultiPoint":
-                stripped = _strip_parens(tok)
-                if stripped is not None:
-                    tok = stripped
-            t = _tuple_of(tok, width)
-            if t is None:
-                return None
-            pts.append(t)
-        if canon == "LineString" and len(pts) < 2:
-            return None
-        return (canon, has_m, pts)
-    if canon in ("MultiLineString", "Polygon"):
-        chains = []
-        for tok in toks:
-            inner = _strip_parens(tok)
-            if inner is None:
-                return None
-            pts = _parse_ring(inner, width)
-            if pts is None:
-                return None
-            if canon == "Polygon":
-                if not _valid_poly_ring(pts):
-                    return None
-            elif len(pts) < 2:
-                return None
-            chains.append(pts)
-        return (canon, has_m, chains)
-    # MultiPolygon
-    polys = []
-    for tok in toks:
-        poly_body = _strip_parens(tok)
-        if poly_body is None:
-            return None
-        ring_toks = _split_top(poly_body)
-        if ring_toks is None:
-            return None
-        rings = []
-        for rt in ring_toks:
-            inner = _strip_parens(rt)
-            if inner is None:
-                return None
-            pts = _parse_ring(inner, width)
-            if pts is None or not _valid_poly_ring(pts):
-                return None
-            rings.append(pts)
-        if not rings:
-            return None
-        polys.append(rings)
-    return (canon, has_m, polys)
-
-
-def _pt(p) -> str:
-    return " ".join(_fmt(v) for v in p)
-
-
-def to_z_wkt(kind: str, has_m: bool, payload) -> str:
-    tag = "ZM" if has_m else "Z"
-    head = f"{kind.upper()} {tag} "
-    if kind == "Point":
-        if not payload:
-            return f"POINT {tag} EMPTY"
-        return head + f"({_pt(payload)})"
-    if not payload:
-        return f"{kind.upper()} {tag} EMPTY"
-    if kind == "MultiPoint":
-        return head + "(" + ", ".join(f"({_pt(p)})" for p in payload) + ")"
-    if kind == "LineString":
-        return head + "(" + ", ".join(_pt(p) for p in payload) + ")"
-    if kind in ("MultiLineString", "Polygon"):
-        return head + "(" + ", ".join(
-            "(" + ", ".join(_pt(p) for p in ch) + ")" for ch in payload
-        ) + ")"
-    return head + "(" + ", ".join(
-        "(" + ", ".join(
-            "(" + ", ".join(_pt(p) for p in ring) + ")" for ring in rings
-        ) + ")"
-        for rings in payload
-    ) + ")"
-
-
-def _num(v) -> float | None:
-    if v is None:
-        return None
-    try:
-        f = float(v)
-    except (TypeError, ValueError):
-        return None
-    return f if math.isfinite(f) else None
-
-
-def _iter_pts(kind: str, payload):
-    if kind == "Point":
-        if payload:
-            yield payload
-        return
-    if kind in ("MultiPoint", "LineString"):
-        yield from payload
-        return
-    if kind in ("MultiLineString", "Polygon"):
-        for ch in payload:
-            yield from ch
-        return
-    for rings in payload:
-        for ring in rings:
-            yield from ring
-
-
-def dims_of(wkt) -> str | None:
-    """'Z' or 'ZM' when this codec owns the WKT, else None."""
-    pz = parse_z_wkt(wkt)
-    if pz is None:
-        return None
-    return "ZM" if pz[1] else "Z"
-
-
 def z_of_point(wkt) -> float | None:
-    pz = parse_z_wkt(wkt)
-    if pz is None:
+    g = W.read(wkt)
+    if g is None or g[0] != "Point" or "Z" not in g[1] or not g[2]:
         return None
-    kind, _, payload = pz
-    if kind == "Point" and payload:
-        return payload[2]
-    return None
-
-
-def m_of_zm_point(wkt) -> float | None:
-    """The M of a POINT ZM (measure_m.st_m delegates ZM points here)."""
-    pz = parse_z_wkt(wkt)
-    if pz is None:
-        return None
-    kind, has_m, payload = pz
-    if kind == "Point" and has_m and payload:
-        return payload[3]
-    return None
+    return g[2][2]
 
 
 def _all_z(wkt, _depth: int = 0) -> list | None:
-    if _depth > _GC_MAX_DEPTH:
+    if _depth > W.MAX_DEPTH:
         return None
-    pz = parse_z_wkt(wkt)
-    if pz is not None:
-        kind, _, payload = pz
-        return [p[2] for p in _iter_pts(kind, payload)]
-    gp = gc_parts(wkt)
-    if gp is None:
+    parts = W.members(wkt)
+    if parts is not None:
+        # collection: concatenate members' Z values; Z-less members
+        # contribute nothing (PostGIS ST_ZMin over mixed collections)
+        zs: list = []
+        for t in parts:
+            sub = _all_z(t, _depth + 1)
+            if sub is not None:
+                zs.extend(sub)
+        return zs
+    g = W.read(wkt)
+    if g is None or g[0] == "GeometryCollection" or "Z" not in g[1]:
         return None
-    # collection: concatenate members' Z values; Z-less members
-    # contribute nothing (PostGIS ST_ZMin over mixed collections)
-    zs: list = []
-    for t in gp[1]:
-        sub = _all_z(t, _depth + 1)
-        if sub is not None:
-            zs.extend(sub)
-    return zs
+    return [p[2] for p in W.points(g[0], g[2])]
 
 
 def zmin_of(wkt) -> float | None:
@@ -437,180 +99,57 @@ def zmax_of(wkt) -> float | None:
     return max(zs) if zs else None
 
 
-def _map_pts(kind: str, payload, fn):
-    if kind == "Point":
-        return fn(payload) if payload else payload
-    if kind in ("MultiPoint", "LineString"):
-        return [fn(p) for p in payload]
-    if kind in ("MultiLineString", "Polygon"):
-        return [[fn(p) for p in ch] for ch in payload]
-    return [[[fn(p) for p in ring] for ring in rings] for rings in payload]
-
-
-def force3d_wkt(wkt, z0=0.0, _depth: int = 0) -> str | None:
-    """PostGIS ST_Force3DZ: XYZ mode. 2-D gains Z = z0; Z echoes;
-    ZM / M-only drop M (force_dims(hasz=1, hasm=0)); collections
-    recurse member-wise into GEOMETRYCOLLECTION Z (r16 — the r15
-    loud-NULL tier retired)."""
-    z = _num(z0)
-    if wkt is None or z is None or _depth > _GC_MAX_DEPTH:
-        return None
-    if gc_parts(wkt) is not None:
-        return _gc_map(wkt, lambda w: force3d_wkt(w, z, _depth + 1), "Z")
-    pz = parse_z_wkt(wkt)
-    if pz is not None:
-        kind, has_m, payload = pz
-        if not has_m:
-            return to_z_wkt(kind, False, payload)
-        return to_z_wkt(kind, False, _map_pts(kind, payload, lambda p: p[:3]))
-    from . import measure_m as _mm
-
-    pm = _mm.parse_m_wkt(wkt)
-    if pm is not None:
-        kind, payload = pm
-        return to_z_wkt(
-            kind, False, _map_pts(kind, payload, lambda p: (p[0], p[1], z))
-        )
-    s = str(wkt).strip()
-    mt = _ov._EMPTY_RE.match(s.upper())
-    if mt:
-        kind = mt.group(1)
-        if kind not in _Z_KINDS:
-            return None
-        return f"{kind} Z EMPTY"
-    g = G.parse_wkt(s)
-    if g is None or g.kind == "GeometryCollection":
-        return None
-    return to_z_wkt(
-        g.kind, False, _map_pts(g.kind, g.coords, lambda p: (p[0], p[1], z))
-    )
-
-
-def force3dm_wkt(wkt, m0=0.0, _depth: int = 0) -> str | None:
-    """PostGIS ST_Force3DM: XYM mode. 2-D gains M = m0; M echoes;
-    Z drops z and gains M = m0; ZM drops z keeping its M; collections
-    recurse member-wise into GEOMETRYCOLLECTION M (r16)."""
-    m = _num(m0)
-    if wkt is None or m is None or _depth > _GC_MAX_DEPTH:
-        return None
-    if gc_parts(wkt) is not None:
-        return _gc_map(wkt, lambda w: force3dm_wkt(w, m, _depth + 1), "M")
-    from . import measure_m as _mm
-
-    pz = parse_z_wkt(wkt)
-    if pz is not None:
-        kind, has_m, payload = pz
-        if has_m:
-            return _mm.to_m_wkt(
-                kind, _map_pts(kind, payload, lambda p: (p[0], p[1], p[3]))
-            )
-        return _mm.to_m_wkt(
-            kind, _map_pts(kind, payload, lambda p: (p[0], p[1], m))
-        )
-    pm = _mm.parse_m_wkt(wkt)
-    if pm is not None:
-        kind, payload = pm
-        return _mm.to_m_wkt(kind, payload)  # canonical echo
-    s = str(wkt).strip()
-    mt = _ov._EMPTY_RE.match(s.upper())
-    if mt:
-        kind = mt.group(1)
-        if kind not in _Z_KINDS:
-            return None
-        return f"{kind} M EMPTY"
-    g = G.parse_wkt(s)
-    if g is None or g.kind == "GeometryCollection":
-        return None
-    return _mm.to_m_wkt(
-        g.kind, _map_pts(g.kind, g.coords, lambda p: (p[0], p[1], m))
-    )
-
-
-def force4d_wkt(wkt, z0=0.0, m0=0.0, _depth: int = 0) -> str | None:
-    """PostGIS ST_Force4D: XYZM mode. 2-D gains (z0, m0); Z gains
-    M = m0; M gains Z = z0; ZM echoes canonically; collections recurse
-    member-wise into GEOMETRYCOLLECTION ZM (r16)."""
+def force_wkt(wkt, dims: str, z0=0.0, m0=0.0, _depth: int = 0) -> str | None:
+    """PostGIS ST_Force2D / ST_Force3DZ / ST_Force3DM / ST_Force4D: the
+    geometry in ``dims``. A missing Z or M is filled with ``z0`` or
+    ``m0``, an unwanted one dropped (liblwgeom ``force_dims``: ST_Force3DZ
+    discards M); collections recurse member-wise under the new tag. Only
+    ST_Force2D also takes a 2-D collection the planar reader takes."""
     z, m = _num(z0), _num(m0)
-    if wkt is None or z is None or m is None or _depth > _GC_MAX_DEPTH:
+    if wkt is None or z is None or m is None or _depth > W.MAX_DEPTH:
         return None
-    if gc_parts(wkt) is not None:
-        return _gc_map(wkt, lambda w: force4d_wkt(w, z, m, _depth + 1), "ZM")
-    from . import measure_m as _mm
-
-    pz = parse_z_wkt(wkt)
-    if pz is not None:
-        kind, has_m, payload = pz
-        if has_m:
-            return to_z_wkt(kind, True, payload)
-        return to_z_wkt(
-            kind, True, _map_pts(kind, payload, lambda p: (*p, m))
-        )
-    pm = _mm.parse_m_wkt(wkt)
-    if pm is not None:
-        kind, payload = pm
-        return to_z_wkt(
-            kind, True,
-            _map_pts(kind, payload, lambda p: (p[0], p[1], z, p[2])),
-        )
-    s = str(wkt).strip()
-    mt = _ov._EMPTY_RE.match(s.upper())
-    if mt:
-        kind = mt.group(1)
-        if kind not in _Z_KINDS:
+    parts = W.members(wkt)
+    if parts is not None:
+        out = [force_wkt(t, dims, z, m, _depth + 1) for t in parts]
+        if None in out:
             return None
-        return f"{kind} ZM EMPTY"
-    g = G.parse_wkt(s)
-    if g is None or g.kind == "GeometryCollection":
+        head = f"GEOMETRYCOLLECTION {dims}".rstrip()
+        return f"{head} (" + ", ".join(out) + ")" if out else f"{head} EMPTY"
+    g = W.read(wkt)
+    if g is None or g[0] == "GeometryCollection" and (dims or G._xy(g) is None):
         return None
-    return to_z_wkt(
-        g.kind, True,
-        _map_pts(g.kind, g.coords, lambda p: (p[0], p[1], z, m)),
-    )
+    return W.write(*W.redim(g, dims, z, m))
+
+
+def force3d_wkt(wkt, z0=0.0) -> str | None:
+    return force_wkt(wkt, "Z", z0=z0)
+
+
+def force3dm_wkt(wkt, m0=0.0) -> str | None:
+    return force_wkt(wkt, "M", m0=m0)
+
+
+def force4d_wkt(wkt, z0=0.0, m0=0.0) -> str | None:
+    return force_wkt(wkt, "ZM", z0, m0)
+
+
+def dims_of(wkt) -> str | None:
+    """'', 'Z', 'M' or 'ZM' of any WKT the library reads (collections
+    report their members' union, surfaces their tag); None for junk."""
+    g = W.read(wkt)
+    if g is not None:
+        return W.member_dims(g)
+    from . import surface3d as _s3
+
+    ps = _s3.parse_surface_wkt(wkt)
+    return None if ps is None else ps[1]
 
 
 def ndims_of(wkt) -> int | None:
     """PostGIS ST_NDims / ST_CoordDim: 2 (XY), 3 (XYZ or XYM), 4
     (XYZM) — across the full codec stack incl. surfaces."""
-    if wkt is None:
-        return None
-    s = str(wkt).strip()
-    pz = parse_z_wkt(s)
-    if pz is not None:
-        return 4 if pz[1] else 3
-    from . import measure_m as _mm
-
-    if _mm.parse_m_wkt(s) is not None:
-        return 3
-    from . import surface3d as _s3
-
-    ps = _s3.parse_surface_wkt(s)
-    if ps is not None:
-        return 2 + len(ps[1])  # dims tag: '' 2, 'Z'/'M' 3, 'ZM' 4 (r17)
-    gd = gc_dims(s)
-    if gd is not None:
-        return 2 + len(gd)  # '' 2, 'Z'/'M' 3, 'ZM' 4
-    if _ov._EMPTY_RE.match(s.upper()) or G.parse_wkt(s) is not None:
-        return 2
-    return None
-
-
-def force2d_z_wkt(wkt) -> str | None:
-    """Drop Z (and M) from a Z/ZM WKT into the canonical 2-D form;
-    None when this codec does not own the WKT (callers fall through
-    to the M / 2-D paths)."""
-    pz = parse_z_wkt(wkt)
-    if pz is None:
-        return None
-    kind, _, payload = pz
-    if kind == "Point":
-        if not payload:
-            return "POINT EMPTY"
-        return G.to_wkt(Geometry("Point", (payload[0], payload[1])))
-    if not payload:
-        return f"{kind.upper()} EMPTY"
-    return G.to_wkt(
-        Geometry(kind, _map_pts(kind, payload, lambda p: (p[0], p[1])))
-    )
+    d = dims_of(wkt)
+    return None if d is None else 2 + len(d)
 
 
 # ---------------------------------------------------------------------------
@@ -623,71 +162,32 @@ def _prims_3d(wkt, _depth: int = 0):
     non-puntal/lineal input. Segments are ((x,y,z), (x,y,z)).
     Collections concatenate their members' primitives (r16); any areal
     member keeps the whole input loud-NULL."""
-    if _depth > _GC_MAX_DEPTH:
+    if _depth > W.MAX_DEPTH:
         return None
-    gp = gc_parts(wkt)
-    if gp is not None:
+    parts = W.members(wkt)
+    if parts is not None:
         pts: list = []
         segs: list = []
-        for t in gp[1]:
+        for t in parts:
             sub = _prims_3d(t, _depth + 1)
             if sub is None:
                 return None
             pts.extend(sub[0])
             segs.extend(sub[1])
         return (pts, segs)
-    pz = parse_z_wkt(wkt)
-    if pz is not None:
-        kind, _, payload = pz
-        if kind in ("Polygon", "MultiPolygon"):
-            return None
+    g = W.read(wkt)
+    if g is None or g[0] in ("Polygon", "MultiPolygon", "GeometryCollection"):
+        return None
+    kind, dims, coords = g
+    if "Z" in dims:
         xyz = lambda p: (p[0], p[1], p[2])  # noqa: E731
-        if kind == "Point":
-            return ([xyz(payload)] if payload else [], [])
-        if kind == "MultiPoint":
-            return ([xyz(p) for p in payload], [])
-        chains = [payload] if kind == "LineString" else payload
-        segs = [
-            (xyz(p), xyz(q)) for ch in chains for p, q in zip(ch, ch[1:])
-        ]
-        return ([], segs)
-    from . import measure_m as _mm
-
-    pm = _mm.parse_m_wkt(wkt)
-    if pm is not None:
-        kind, payload = pm
-        xy0 = lambda p: (p[0], p[1], 0.0)  # noqa: E731
-        if kind == "Point":
-            return ([xy0(payload)] if payload else [], [])
-        if kind == "MultiPoint":
-            return ([xy0(p) for p in payload], [])
-        chains = [payload] if kind == "LineString" else payload
-        segs = [
-            (xy0(p), xy0(q)) for ch in chains for p, q in zip(ch, ch[1:])
-        ]
-        return ([], segs)
-    s = str(wkt).strip()
-    mt = _ov._EMPTY_RE.match(s.upper())
-    if mt:
-        if mt.group(1) in ("POINT", "MULTIPOINT", "LINESTRING", "MULTILINESTRING"):
-            return ([], [])
-        return None
-    g = G.parse_wkt(s)
-    if g is None:
-        return None
-    if g.kind == "Point":
-        return ([(g.coords[0], g.coords[1], 0.0)], [])
-    if g.kind == "MultiPoint":
-        return ([(x, y, 0.0) for x, y in g.coords], [])
-    if g.kind in ("LineString", "MultiLineString"):
-        chains = [g.coords] if g.kind == "LineString" else g.coords
-        segs = [
-            ((p[0], p[1], 0.0), (q[0], q[1], 0.0))
-            for ch in chains
-            for p, q in zip(ch, ch[1:])
-        ]
-        return ([], segs)
-    return None
+    else:
+        xyz = lambda p: (p[0], p[1], 0.0)  # noqa: E731
+    if kind in ("Point", "MultiPoint"):
+        return ([xyz(p) for p in W.points(kind, coords)], [])
+    chains = [coords] if kind == "LineString" else coords
+    segs = [(xyz(p), xyz(q)) for ch in chains for p, q in zip(ch, ch[1:])]
+    return ([], segs)
 
 
 def _d3(p, q) -> float:
@@ -823,7 +323,7 @@ def closestpoint3d_wkt(a_wkt, b_wkt) -> str | None:
     out = _closest3d(a_wkt, b_wkt)
     if out is None:
         return None
-    return to_z_wkt("Point", False, out[1])
+    return W.write("Point", "Z", out[1])
 
 
 def shortestline3d_wkt(a_wkt, b_wkt) -> str | None:
@@ -832,7 +332,7 @@ def shortestline3d_wkt(a_wkt, b_wkt) -> str | None:
     out = _closest3d(a_wkt, b_wkt)
     if out is None:
         return None
-    return to_z_wkt("LineString", False, [out[1], out[2]])
+    return W.write("LineString", "Z", [out[1], out[2]])
 
 
 def locatebetweenelevations_wkt(wkt, z_lo, z_hi) -> str | None:
@@ -849,16 +349,16 @@ def locatebetweenelevations_wkt(wkt, z_lo, z_hi) -> str | None:
     lo, hi = _num(z_lo), _num(z_hi)
     if wkt is None or lo is None or hi is None or hi < lo:
         return None
-    pz = parse_z_wkt(wkt)
-    if pz is None:
+    g = W.read(wkt)
+    if g is None or "Z" not in g[1]:
         return None
-    kind, has_m, payload = pz
+    kind, dims, payload = g
     if kind == "Point":
         hits = [payload] if payload and lo <= payload[2] <= hi else []
-        return to_z_wkt("MultiPoint", has_m, hits)
+        return W.write("MultiPoint", dims, hits)
     if kind == "MultiPoint":
-        return to_z_wkt(
-            "MultiPoint", has_m, [p for p in payload if lo <= p[2] <= hi]
+        return W.write(
+            "MultiPoint", dims, [p for p in payload if lo <= p[2] <= hi]
         )
     if kind not in ("LineString", "MultiLineString"):
         return None  # areal clip-by-elevation is outside this kernel
@@ -917,17 +417,15 @@ def locatebetweenelevations_wkt(wkt, z_lo, z_hi) -> str | None:
         if c not in span_pts and c not in pts:
             pts.append(c)
     if spans and pts:
-        return (
-            f"GEOMETRYCOLLECTION {'ZM' if has_m else 'Z'} ("
-            + ", ".join(
-                [to_z_wkt("LineString", has_m, s) for s in spans]
-                + [to_z_wkt("Point", has_m, p) for p in pts]
-            )
-            + ")"
+        return W.write(
+            "GeometryCollection",
+            dims,
+            [("LineString", dims, s) for s in spans]
+            + [("Point", dims, p) for p in pts],
         )
     if pts:
-        return to_z_wkt("MultiPoint", has_m, pts)
-    return to_z_wkt("MultiLineString", has_m, spans)
+        return W.write("MultiPoint", dims, pts)
+    return W.write("MultiLineString", dims, spans)
 
 
 def longestline3d_wkt(a_wkt, b_wkt) -> str | None:
@@ -954,7 +452,7 @@ def longestline3d_wkt(a_wkt, b_wkt) -> str | None:
             d = _d3(p, q)
             if d > best_d:
                 best_d, best = d, (p, q)
-    return to_z_wkt("LineString", False, [best[0], best[1]])
+    return W.write("LineString", "Z", [best[0], best[1]])
 
 
 def maxdistance3d_wkt(a_wkt, b_wkt) -> float | None:
@@ -991,17 +489,12 @@ def lineinterpolatepoint3d_wkt(wkt, fraction) -> str | None:
         return None  # puntal / EMPTY — loud (PostGIS wants a line)
     # segments of one LineString arrive in order; reject multi-part
     # input the way PostGIS does (linestring only)
-    pz = parse_z_wkt(wkt)
-    if pz is not None and pz[0] not in ("LineString",):
+    if W.read(wkt)[0] != "LineString":
         return None
-    if pz is None:
-        up = str(wkt).strip().upper()
-        if not up.startswith("LINESTRING"):
-            return None
     lens = [_d3(a, b) for a, b in segs]
     total = sum(lens)
     if total == 0.0:
-        return to_z_wkt("Point", False, segs[0][0])
+        return W.write("Point", "Z", segs[0][0])
     target = f * total
     cum = 0.0
     last = len(segs) - 1
@@ -1011,12 +504,12 @@ def lineinterpolatepoint3d_wkt(wkt, fraction) -> str | None:
         if cum + ln >= target or i == last:
             t = 0.0 if ln == 0.0 else min(1.0, max(0.0, (target - cum) / ln))
             if t == 0.0:
-                return to_z_wkt("Point", False, a)
+                return W.write("Point", "Z", a)
             if t == 1.0:
-                return to_z_wkt("Point", False, b)
-            return to_z_wkt(
+                return W.write("Point", "Z", b)
+            return W.write(
                 "Point",
-                False,
+                "Z",
                 (
                     a[0] + t * (b[0] - a[0]),
                     a[1] + t * (b[1] - a[1]),
@@ -1024,55 +517,33 @@ def lineinterpolatepoint3d_wkt(wkt, fraction) -> str | None:
                 ),
             )
         cum += ln
-    return to_z_wkt("Point", False, segs[-1][1])
+    return W.write("Point", "Z", segs[-1][1])
 
 
 def perimeter3d_wkt(wkt) -> float | None:
     """ST_3DPerimeter: the 3-D length of every ring of an areal Z
     geometry (2-D areal input reads Z = 0 → the plain perimeter)."""
-    if wkt is None:
+    g = W.read(wkt)
+    if g is None or g[0] not in ("Polygon", "MultiPolygon"):
         return None
-    pz = parse_z_wkt(wkt)
-    if pz is not None:
-        kind, _, payload = pz
-        if kind not in ("Polygon", "MultiPolygon"):
-            return None
-        if kind == "Polygon":
-            rings = payload
-        else:
-            rings = [r for rings_ in payload for r in rings_]
+    kind, dims, coords = g
+    rings = coords if kind == "Polygon" else [r for rs in coords for r in rs]
+    if "Z" in dims:
         return sum(
             _d3((p[0], p[1], p[2]), (q[0], q[1], q[2]))
             for ring in rings
             for p, q in zip(ring, ring[1:])
         )
-    s = str(wkt).strip()
-    mt = _ov._EMPTY_RE.match(s.upper())
-    if mt:
-        return 0.0 if mt.group(1) in ("POLYGON", "MULTIPOLYGON") else None
-    g = G.parse_wkt(s)
-    if g is None or g.kind not in ("Polygon", "MultiPolygon"):
-        return None
-    rings = g.coords if g.kind == "Polygon" else [
-        r for rs in g.coords for r in rs
-    ]
-    return sum(
+    return float(sum(
         math.hypot(q[0] - p[0], q[1] - p[1])
         for ring in rings
         for p, q in zip(ring, ring[1:])
-    )
+    ))
 
 
 # ---------------------------------------------------------------------------
 # UDF surface
 # ---------------------------------------------------------------------------
-
-
-def _safe(fn, *args):
-    try:
-        return fn(*args)
-    except Exception:
-        return None
 
 
 @pandas_udf(DoubleType())

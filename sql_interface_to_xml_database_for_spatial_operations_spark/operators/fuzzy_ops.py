@@ -41,8 +41,9 @@ from ..sources.tables import load_table
 _MICRO = "CAST(floor({x} * 1e6 + 0.5) AS BIGINT)"
 
 
-def _pair_sql(lev: str, dl: str, jaro: str, jw: str, jac: str, ham: str) -> str:
-    """The shared query shape; per-engine function names injected."""
+def _pair_sql(table: str, lev: str, dl: str, jaro: str, jw: str, jac: str, ham: str) -> str:
+    """The shared query shape; per-engine table and function names
+    injected."""
     return f"""
         SELECT a.n_nationkey AS k1, b.n_nationkey AS k2,
                CAST({lev} AS BIGINT) AS lev,
@@ -51,13 +52,17 @@ def _pair_sql(lev: str, dl: str, jaro: str, jw: str, jac: str, ham: str) -> str:
                {_MICRO.format(x=jw)} AS jw,
                {_MICRO.format(x=jac)} AS jac,
                CAST({ham} AS BIGINT) AS ham
-        FROM nation a JOIN nation b
+        FROM {table} a JOIN {table} b
           ON substring(a.n_name, 1, 1) = substring(b.n_name, 1, 1)
          AND a.n_nationkey <= b.n_nationkey
     """
 
 
+# ``{nation}`` is a spark.sql DataFrame argument: PySpark binds it to a
+# generated view and drops that view after analysis, so the row never
+# replaces a user's own ``nation`` view.
 _SPARK_SQL = _pair_sql(
+    table="{nation}",
     lev="levenshtein(a.n_name, b.n_name)",
     dl="text_damerau(a.n_name, b.n_name)",
     jaro="text_jaro(a.n_name, b.n_name)",
@@ -67,6 +72,7 @@ _SPARK_SQL = _pair_sql(
 )
 
 _Q181_ORACLE = _pair_sql(
+    table="nation",
     lev="levenshtein(a.n_name, b.n_name)",
     dl="damerau_levenshtein(a.n_name, b.n_name)",
     jaro="jaro_similarity(a.n_name, b.n_name)",
@@ -80,5 +86,4 @@ _Q181_ORACLE = _pair_sql(
 def q181_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-letter-blocked fuzzy scoring of nation-name pairs against
     DuckDB's own similarity implementations (module docstring)."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    return spark.sql(_SPARK_SQL)
+    return spark.sql(_SPARK_SQL, nation=load_table(spark, sf_dir, "nation"))

@@ -352,14 +352,14 @@ def q16_join_multiway(spark, sf_dir):
 def q17_natural_join(spark, sf_dir):
     """J7: NATURAL JOIN — present only as dead code in the reference
     (xml_extension.ts:955-1051); supported natively here via spark.sql."""
-    T(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    T(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     return spark.sql(
         """
         SELECT nationkey, c_custkey, n_name
-        FROM (SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nationkey FROM customer WHERE c_custkey <= 100)
-        NATURAL JOIN (SELECT CAST(n_nationkey AS BIGINT) AS nationkey, n_name FROM nation)
-        """
+        FROM (SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS nationkey FROM {customer} WHERE c_custkey <= 100)
+        NATURAL JOIN (SELECT CAST(n_nationkey AS BIGINT) AS nationkey, n_name FROM {nation})
+        """,
+        customer=T(spark, sf_dir, "customer"),
+        nation=T(spark, sf_dir, "nation"),
     )
 
 
@@ -790,13 +790,13 @@ def q33_subquery_from(spark, sf_dir):
 def q34_scalar_subquery(spark, sf_dir):
     """Q2 variant: scalar subquery (above-average balance, expressed in
     exact decimal arithmetic: bal * n > total ⇔ bal > avg)."""
-    T(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """
-        SELECT c_custkey, c_acctbal FROM customer
-        WHERE CAST(c_acctbal AS DECIMAL(18,2)) * (SELECT count(*) FROM customer)
-              > (SELECT sum(CAST(c_acctbal AS DECIMAL(18,2))) FROM customer)
-        """
+        SELECT c_custkey, c_acctbal FROM {customer}
+        WHERE CAST(c_acctbal AS DECIMAL(18,2)) * (SELECT count(*) FROM {customer})
+              > (SELECT sum(CAST(c_acctbal AS DECIMAL(18,2))) FROM {customer})
+        """,
+        customer=T(spark, sf_dir, "customer"),
     )
 
 
@@ -813,16 +813,16 @@ def q34_scalar_subquery(spark, sf_dir):
 def q35_correlated_exists(spark, sf_dir):
     """Q3: correlated EXISTS → decorrelated by Catalyst into a semi join
     (the reference's legacy prototype only, backup.ts:737-745)."""
-    T(spark, sf_dir, "supplier").createOrReplaceTempView("supplier")
-    T(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """
-        SELECT s_suppkey, s_name FROM supplier
+        SELECT s_suppkey, s_name FROM {supplier}
         WHERE EXISTS (
-          SELECT 1 FROM customer
+          SELECT 1 FROM {customer}
           WHERE c_nationkey = s_nationkey AND c_acctbal > s_acctbal * 2
         )
-        """
+        """,
+        supplier=T(spark, sf_dir, "supplier"),
+        customer=T(spark, sf_dir, "customer"),
     )
 
 

@@ -47,7 +47,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import geometry as G
-from ..functions import zcoord as _zc
+from ..functions import wkt as W
 from ..functions.geometry import Geometry
 
 _SCHEMA = StructType(
@@ -98,12 +98,10 @@ def _line_wkt(pts) -> str | None:
     if len(pts) == 1:
         x, y, z = pts[0]
         if has_z:
-            return _zc.to_z_wkt("Point", False, (x, y, z))
+            return W.write("Point", "Z", (x, y, z))
         return G.to_wkt(Geometry("Point", (x, y)))
     if has_z:
-        return _zc.to_z_wkt(
-            "LineString", False, [(x, y, z) for x, y, z in pts]
-        )
+        return W.write("LineString", "Z", [(x, y, z) for x, y, z in pts])
     return G.to_wkt(Geometry("LineString", [(x, y) for x, y, _ in pts]))
 
 
@@ -118,7 +116,7 @@ def gpx_rows(content: bytes, fname: str) -> list[dict]:
         if tag == "wpt":
             x, y, z = _pt_of(el)
             wkt = (
-                _zc.to_z_wkt("Point", False, (x, y, z))
+                W.write("Point", "Z", (x, y, z))
                 if z is not None
                 else G.to_wkt(Geometry("Point", (x, y)))
             )

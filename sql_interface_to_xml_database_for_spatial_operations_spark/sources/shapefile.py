@@ -67,9 +67,9 @@ from pyspark.sql.types import (
 )
 
 from ..functions import geometry as G
-from ..functions import measure_m as _mm
-from ..functions import zcoord as _zc
+from ..functions import wkt as W
 from ..functions.geometry import Geometry
+from ..functions.noding import signed_area2
 
 # -- .shp record decoding ----------------------------------------------------
 
@@ -84,13 +84,6 @@ def _kind_dims(shape_type: int):
     if shape_type - 20 in _SHAPE_BASE and shape_type != 20:
         return _SHAPE_BASE[shape_type - 20], False, True  # M
     raise ValueError(f"unsupported shape type {shape_type}")
-
-
-def _ring_signed_area2(ring) -> float:
-    s = 0.0
-    for (x0, y0), (x1, y1) in zip(ring, ring[1:]):
-        s += x0 * y1 - x1 * y0
-    return s
 
 
 def _point_in_ring(pt, ring) -> bool:
@@ -111,7 +104,7 @@ def _assemble_polygons(rings):
     holes = []
     for ring in rings:
         xy = [(p[0], p[1]) for p in ring]
-        (shells if _ring_signed_area2(xy) < 0 else holes).append(ring)
+        (shells if signed_area2(xy) < 0 else holes).append(ring)
     if not shells:
         # degenerate file: treat every ring as a shell (some writers
         # ignore winding); better one valid polygon than a silent drop
@@ -193,7 +186,7 @@ def _decode_shape(content: bytes):
     for rings in polys:
         fixed = []
         for j, ring in enumerate(rings):
-            a2 = _ring_signed_area2([(p[0], p[1]) for p in ring])
+            a2 = signed_area2([(p[0], p[1]) for p in ring])
             want_ccw = j == 0
             if a2 != 0 and (a2 > 0) != want_ccw:
                 ring = ring[::-1]
@@ -239,11 +232,11 @@ def _emit(kind: str, has_z: bool, m_only: bool, payload) -> str:
         sample = sample[0]
     w = width_of(sample)
     if has_z and w == 4:
-        return _zc.to_z_wkt(kind, True, payload)
+        return W.write(kind, "ZM", payload)
     if has_z and w == 3:
-        return _zc.to_z_wkt(kind, False, payload)
+        return W.write(kind, "Z", payload)
     if m_only and w == 3:
-        return _mm.to_m_wkt(kind, payload)
+        return W.write(kind, "M", payload)
     # plain 2-D
     pay2 = payload
     if kind == "Point":
@@ -518,7 +511,7 @@ def _wkt_to_shape(wkt) -> tuple[int, bytes]:
         for rings in polys:
             for j, ring in enumerate(rings):
                 # ESRI winding: shell CW, holes CCW
-                a2 = _ring_signed_area2(ring)
+                a2 = signed_area2(ring)
                 want_cw = j == 0
                 if (a2 < 0) != want_cw:
                     ring = ring[::-1]

@@ -47,24 +47,24 @@ def _file_memo(spark: SparkSession, name: str, path: str, build):
 
     The key is ``name``, the file's realpath, inode, size and mtime and
     the inference confs, so a rewritten file or a changed conf builds
-    afresh. Returns None, without building, when ``path`` is not a
-    regular file; the caller then builds unmemoized."""
+    afresh. A rewritten file's old (inode, size, mtime) stamp cannot
+    come back, so adding a key drops the entries of the same (name,
+    realpath) under another stamp; entries for other confs under the
+    current stamp stay. Returns None, without building, when ``path`` is
+    not a regular file; the caller then builds unmemoized."""
     try:
         st = os.stat(path)
     except OSError:
         return None
     if not stat.S_ISREG(st.st_mode):
         return None
-    key = (
-        name,
-        os.path.realpath(path),
-        st.st_ino,
-        st.st_size,
-        st.st_mtime_ns,
-        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
-    )
+    file = (name, os.path.realpath(path))
+    stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+    key = (*file, *stamp, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
     memo = spark.__dict__.setdefault(_MEMO_ATTR, {})
     if key not in memo:
+        for stale in [k for k in memo if k[:2] == file and k[2:5] != stamp]:
+            del memo[stale]
         memo[key] = build()
     return memo[key]
 

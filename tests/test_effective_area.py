@@ -7,10 +7,10 @@ from __future__ import annotations
 import random
 
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
-    geometry as G,
+    wkt as W,
 )
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
-    measure_m as MM,
+    geometry as G,
 )
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
     simplify as SI,
@@ -23,7 +23,7 @@ from sql_interface_to_xml_database_for_spatial_operations_spark.functions.effect
 
 def test_tent_and_endpoints():
     out = sea("LINESTRING (0 0, 2 1, 4 0)")
-    kind, pts = MM.parse_m_wkt(out)
+    kind, _, pts = W.read(out)
     assert kind == "LineString"
     assert pts[0][2] == _FLT_MAX and pts[2][2] == _FLT_MAX
     assert pts[1][2] == 2.0
@@ -31,14 +31,14 @@ def test_tent_and_endpoints():
 
 def test_monotone_over_deletion_order():
     out = sea("LINESTRING (0 0, 1 0, 2 1, 3 0, 4 0)")
-    _, pts = MM.parse_m_wkt(out)
+    _, _, pts = W.read(out)
     interior = [p[2] for p in pts[1:-1]]
     assert interior == [0.5, 2.0, 0.5]  # two 0.5 deletions then the apex
 
 
 def test_multiline_and_loud():
     out = sea("MULTILINESTRING ((0 0, 2 1, 4 0), (10 0, 11 5, 12 0))")
-    kind, parts = MM.parse_m_wkt(out)
+    kind, _, parts = W.read(out)
     assert kind == "MultiLineString" and len(parts) == 2
     assert parts[1][1][2] == 5.0
     assert sea("POINT (1 1)") is None
@@ -64,7 +64,7 @@ def test_threshold_filter_reproduces_vw():
             vw = SI.simplify_vw(G.parse_wkt(w), tol)
             if vw is None:
                 continue
-            _, m = MM.parse_m_wkt(sea(w))
+            _, _, m = W.read(sea(w))
             kept = [(p[0], p[1]) for p in m if p[2] >= tol]
             assert list(vw.coords) == kept, (w, tol)
             checked += 1

@@ -116,12 +116,15 @@ def test_point_constructors_gate_nonfinite(bad):
 
 def test_constructor_accessor_roundtrip():
     from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
+        measure_m as M,
+    )
+    from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
         zcoord as Z,
     )
 
     p = E.point_zm(10, 20, 30, 40)
     assert Z.z_of_point(p) == 30.0
-    assert Z.m_of_zm_point(p) == 40.0
+    assert M.m_of_point(p) == 40.0
 
 
 # -- SQL surface ------------------------------------------------------------

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import math
 
+from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
+    wkt as W,
+)
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import measure_m as M
 
 L345 = "LINESTRING (0 0, 3 4, 6 8)"  # two length-5 segments
@@ -23,18 +26,21 @@ def test_parse_and_format_round_trip():
         "MULTIPOINT M EMPTY",
         "MULTILINESTRING M EMPTY",
     ):
-        kind, payload = M.parse_m_wkt(w)
-        assert M.to_m_wkt(kind, payload) == w
+        kind, dims, payload = W.read(w)
+        assert dims == "M"
+        assert W.write(kind, dims, payload) == w
 
 
 def test_parse_rejects_2d_and_junk():
-    assert M.parse_m_wkt("LINESTRING (0 0, 1 1)") is None
-    assert M.parse_m_wkt("POINT (1 2)") is None
-    assert M.parse_m_wkt("POLYGON M ((0 0 0, 1 0 1, 1 1 2, 0 0 0))") is None
-    assert M.parse_m_wkt("LINESTRING M (0 0, 1 1)") is None
-    assert M.parse_m_wkt("LINESTRING M (0 0 nan, 1 1 2)") is None
-    assert M.parse_m_wkt("junk") is None
-    assert M.parse_m_wkt(None) is None
+    # 2-D text reads as XY, never as M
+    assert W.read("LINESTRING (0 0, 1 1)")[1] == ""
+    assert W.read("POINT (1 2)")[1] == ""
+    # POLYGON M reads like every other M kind (PostGIS accepts it)
+    assert W.read("POLYGON M ((0 0 0, 1 0 1, 1 1 2, 0 0 0))")[:2] == ("Polygon", "M")
+    assert W.read("LINESTRING M (0 0, 1 1)") is None
+    assert W.read("LINESTRING M (0 0 nan, 1 1 2)") is None
+    assert W.read("junk") is None
+    assert W.read(None) is None
 
 
 # ---- AddMeasure -------------------------------------------------------
@@ -279,7 +285,7 @@ def test_locatebetween_full_cover_stays_one_part():
             (rng.uniform(-9, 9), rng.uniform(-9, 9)) for _ in range(3)
         ]
         line = "LINESTRING (" + ", ".join(
-            f"{M._fmt(x)} {M._fmt(y)}" for x, y in pts
+            f"{W._fmt(x)} {W._fmt(y)}" for x, y in pts
         ) + ")"
         dm = M.addmeasure_wkt(line, 0, 10)
         out = M.locatebetween_wkt(dm, -1, 11)

@@ -7,6 +7,9 @@ import math
 import pytest
 
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
+    wkt as W,
+)
+from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
     misc_fns2 as M,
 )
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
@@ -179,12 +182,8 @@ def test_rotation_composition_is_identity():
     for rot in (M.rotate_x_wkt, M.rotate_y_wkt, M.rotate_z_wkt):
         once = rot(src, 0.7)
         back = rot(once, -0.7)
-        from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
-            zcoord as Z,
-        )
-
-        _, _, p0 = Z.parse_z_wkt(src)
-        _, _, p1 = Z.parse_z_wkt(back)
+        _, _, p0 = W.read(src)
+        _, _, p1 = W.read(back)
         for a, b in zip(p0, p1):
             for u, v in zip(a, b):
                 assert abs(u - v) < 1e-12
@@ -192,12 +191,8 @@ def test_rotation_composition_is_identity():
 
 def test_rotation_preserves_m():
     out = M.rotate_z_wkt("POINT ZM (1 0 5 9)", math.pi / 2)
-    from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
-        zcoord as Z,
-    )
-
-    kind, has_m, p = Z.parse_z_wkt(out)
-    assert has_m and p[3] == 9.0 and p[2] == 5.0
+    kind, dims, p = W.read(out)
+    assert dims == "ZM" and p[3] == 9.0 and p[2] == 5.0
     assert abs(p[0]) < 1e-15 and abs(p[1] - 1.0) < 1e-15
     # M-only input: z read as 0, rotated z discarded, M kept
     assert M.rotate_x_wkt("POINT M (1 2 9)", math.pi) == "POINT M (1 -2 9)"

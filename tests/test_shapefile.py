@@ -211,3 +211,12 @@ def test_spark_read_layout_mismatch_is_loud(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="disagree"):
         SH.read_shapefile(spark, str(tmp_path))
+
+
+def test_polygon_m_record_reads_as_polygon_m():
+    # the M writer used to spell every polygon MULTILINESTRING M
+    ring = [(0.0, 0.0, 1.0), (1.0, 0.0, 1.0), (1.0, 1.0, 2.0), (0.0, 0.0, 1.0)]
+    assert SH._emit("Polygon", False, True, [ring]) == "POLYGON M ((0 0 1, 1 0 1, 1 1 2, 0 0 1))"
+    assert SH._emit("MultiPolygon", False, True, [[ring]]) == (
+        "MULTIPOLYGON M (((0 0 1, 1 0 1, 1 1 2, 0 0 1)))"
+    )

@@ -679,6 +679,33 @@ def test_load_table_schema_memo_keys_on_inference_confs(spark, tmp_path):
     assert jobs_in_group(spark, load)[1] == 0
 
 
+def test_file_memo_keeps_one_stamp_per_file(spark, tmp_path):
+    import os
+
+    from sql_interface_to_xml_database_for_spatial_operations_spark.sources.tables import (
+        _MEMO_ATTR,
+        load_table,
+    )
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    original = spark.conf.get(conf)
+    flipped = "false" if original == "true" else "true"
+    file = ("schema", os.path.realpath(tmp_path / "region.parquet"))
+    memo = spark.__dict__.setdefault(_MEMO_ATTR, {})
+    for i in range(20):
+        _write_region(tmp_path, extra=bool(i % 2))
+        assert len(load_table(spark, str(tmp_path), "region").columns) == 2 + i % 2
+    try:
+        spark.conf.set(conf, flipped)
+        load_table(spark, str(tmp_path), "region")
+    finally:
+        spark.conf.set(conf, original)
+    mine = [k for k in memo if k[:2] == file]
+    # one stamp, with an entry for each conf tuple loaded under it
+    assert len({k[2:5] for k in mine}) == 1
+    assert len(mine) == 2
+
+
 def test_fan_out_probes_partitions_when_input_has_no_files(spark):
     from sql_interface_to_xml_database_for_spatial_operations_spark.sources.tables import (
         fan_out,

@@ -8,6 +8,9 @@ import math
 import random
 
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
+    wkt as W,
+)
+from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
     measure_m as M,
 )
 from sql_interface_to_xml_database_for_spatial_operations_spark.functions import (
@@ -31,14 +34,17 @@ class TestCodec:
             "LINESTRING ZM EMPTY",
             "MULTIPOLYGON Z EMPTY",
         ]:
-            kind, has_m, payload = Z.parse_z_wkt(w)
-            assert Z.to_z_wkt(kind, has_m, payload) == w
+            kind, dims, payload = W.read(w)
+            assert dims in ("Z", "ZM")
+            assert W.write(kind, dims, payload) == w
 
     def test_rejections(self):
+        # 2-D and M-only text read under their own dims
+        assert W.read("POINT (1 2)")[1] == ""
+        assert W.read("POINT M (1 2 3)")[1] == "M"
+        assert W.read("GEOMETRYCOLLECTION Z (POINT Z (1 2 3))")[:2] == ("GeometryCollection", "Z")
         for w in [
             None,
-            "POINT (1 2)",  # 2-D belongs to the core parser
-            "POINT M (1 2 3)",  # M-only belongs to measure_m
             "POINT Z (1 2)",  # wrong width
             "POINT Z (1 2 3 4)",  # Z with 4 coords
             "LINESTRING Z (0 0 0)",  # one vertex
@@ -46,17 +52,16 @@ class TestCodec:
             "POLYGON Z ((0 0 1, 4 0 1, 4 4 1, 0 0 2))",  # unclosed (z)
             "POINT Z (1 2 nan)",
             "POINT Z (1 2 inf)",
-            "GEOMETRYCOLLECTION Z (POINT Z (1 2 3))",  # outside kinds
             "POINT Z ((1 2 3)",  # unbalanced
         ]:
-            assert Z.parse_z_wkt(w) is None, w
+            assert W.read(w) is None, w
 
     def test_case_and_whitespace(self):
-        assert Z.parse_z_wkt("  point z ( 1  2  3 ) ") == ("Point", False, (1.0, 2.0, 3.0))
-        assert Z.parse_z_wkt("point zm(1 2 3 4)") == ("Point", True, (1.0, 2.0, 3.0, 4.0))
+        assert W.read("  point z ( 1  2  3 ) ") == ("Point", "Z", (1.0, 2.0, 3.0))
+        assert W.read("point zm(1 2 3 4)") == ("Point", "ZM", (1.0, 2.0, 3.0, 4.0))
         # bare MultiPoint coordinates (WKT allows both forms)
-        assert Z.parse_z_wkt("MULTIPOINT Z (1 2 3, 4 5 6)") == (
-            "MultiPoint", False, [(1.0, 2.0, 3.0), (4.0, 5.0, 6.0)],
+        assert W.read("MULTIPOINT Z (1 2 3, 4 5 6)") == (
+            "MultiPoint", "Z", [(1.0, 2.0, 3.0), (4.0, 5.0, 6.0)],
         )
 
 
@@ -79,7 +84,7 @@ class TestAccessors:
         assert Z.zmin_of("POINT Z EMPTY") is None
 
     def test_zm_point_carries_m(self):
-        assert Z.m_of_zm_point("POINT ZM (1 2 3 4)") == 4.0
+        assert M.m_of_point("POINT ZM (1 2 3 4)") == 4.0
         assert M.m_of_point("POINT ZM (1 2 3 4)") == 4.0
         assert M.m_of_point("POINT Z (1 2 3)") is None
 
@@ -360,8 +365,8 @@ def test_closest_witness_consistency_fuzz():
         assert on_seg(ca, p1, q1)
         assert on_seg(cb, p2, q2)
         # the shortest-line text is built from exactly those witnesses
-        assert Z.shortestline3d_wkt(a, b) == Z.to_z_wkt(
-            "LineString", False, [ca, cb]
+        assert Z.shortestline3d_wkt(a, b) == W.write(
+            "LineString", "Z", [ca, cb]
         )
 
 
